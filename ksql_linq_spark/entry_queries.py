@@ -2956,12 +2956,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     pairs = _lsh_pairs(spark, sf_dir)
-    # near-dup edge lists are tiny vs the corpus: low loop parallelism
-    # halves per-round task overhead (graph.py docstring; at true scale
-    # drop the knob and let the loop follow the session partitioning)
-    return dedup_clusters(
-        d.select("doc_id"), pairs, loop_partitions=8
-    ).select("doc_id", "cluster_id")
+    return dedup_clusters(d.select("doc_id"), pairs).select("doc_id", "cluster_id")
 
 
 @q(
@@ -3009,15 +3004,13 @@ def agg_percentiles_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction — the right percentile flavor when the result must be
     an observed value (a real document length, a real price).
 
-    r14 measured-and-rejected: the frequency-compressed rank-arithmetic
-    twin (operators/sketch.group_percentiles_disc, bit-identity proven
-    by test_group_percentiles_disc_bit_identical) is a WASH here —
-    interleaved min-of-7 at sf0.1: native 1.093 s, all-compressed
-    2.052 s (the near-unique l_extendedprice column compresses nothing
-    and pays a window sort), mixed qty-only 1.064 s (within noise, one
-    extra fact scan).  The native single-scan ObjectHashAggregate
-    stays; the compressed twin remains the right shape when values
-    repeat (the events compress=False precedent, in reverse)."""
+    A frequency-compressed rank-arithmetic twin was built, proven
+    bit-identical and measured slower (OPTIMIZATION_r14.md), so it was
+    removed: interleaved min-of-7 at sf0.1, native 1.093 s,
+    all-compressed 2.052 s (the near-unique l_extendedprice column
+    compresses nothing and pays a window sort), mixed qty-only 1.064 s
+    (within noise, one extra fact scan).  The native single-scan
+    ObjectHashAggregate stays."""
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY l_quantity)").alias(
@@ -6476,7 +6469,7 @@ def pipeline_near_dedup_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     pairs = _lsh_pairs(spark, sf_dir)
-    clusters = dedup_clusters(d.select("doc_id"), pairs, loop_partitions=8)
+    clusters = dedup_clusters(d.select("doc_id"), pairs)
     kept = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
     return (
         d.join(kept, "doc_id")
@@ -7123,7 +7116,6 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumerates a<b<c triangles directly."""
     from .operators.graph import triangle_count
 
-    d = _t(spark, sf_dir, "documents")
     pairs = _lsh_pairs(spark, sf_dir)
     return triangle_count(pairs)
 
@@ -7609,7 +7601,7 @@ def dataset_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     pairs = _lsh_pairs(spark, sf_dir)
-    lab = dedup_clusters(d.select("doc_id"), pairs, loop_partitions=8)
+    lab = dedup_clusters(d.select("doc_id"), pairs)
     split = lab.select(
         "doc_id", "cluster_id", hash_split("cluster_id")
     )
@@ -7665,7 +7657,6 @@ def dedup_graph_clustering_coefficient(
     corpus signal.  Same arboricity-bounded oriented join."""
     from .operators.graph import clustering_coefficient
 
-    d = _t(spark, sf_dir, "documents")
     pairs = _lsh_pairs(spark, sf_dir)
     return clustering_coefficient(pairs)
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .windows import bucket_start, parse_timeframe, timeframe_seconds
@@ -128,19 +128,14 @@ def cascade_ddl_meta(plan: CascadePlan) -> dict:
     }
 
 
-def build_hub(plan: CascadePlan, ticks: DataFrame) -> DataFrame:
-    """Tier 0: raw ticks -> 1 s pre-aggregate with re-aggregable partials.
-
-    Columns: keys..., bucket_start, open, high, low, close, sum_v, cnt,
-    first_ts, last_ts.  first/last_ts are the min_by/max_by carriers for
-    open/close composition; sum_v+cnt replace avg (HubSelectPolicy AVG
-    decomposition).
-    """
+def _hub_aggs(plan: CascadePlan) -> list[Column]:
+    """Raw ticks -> one hub row's re-aggregable partials, shared by the
+    batch and streaming hubs: open, high, low, close, sum_v, cnt,
+    first_ts, last_ts.  first/last_ts are the min_by/max_by carriers
+    for open/close composition; sum_v+cnt replace avg (HubSelectPolicy
+    AVG decomposition)."""
     ts, price = F.col(plan.ts_col), F.col(plan.price_col)
-    return ticks.groupBy(
-        *[F.col(k) for k in plan.keys],
-        bucket_start(plan.ts_col, "1s").alias("bucket_start"),
-    ).agg(
+    return [
         F.min_by(price, ts).alias("open"),
         F.max(price).alias("high"),
         F.min(price).alias("low"),
@@ -149,7 +144,33 @@ def build_hub(plan: CascadePlan, ticks: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("cnt"),
         F.min(ts).alias("first_ts"),
         F.max(ts).alias("last_ts"),
-    )
+    ]
+
+
+def _tier_aggs() -> list[Column]:
+    """Hub rows -> one tier bar by partial-agg composition, shared by
+    the batch and streaming tiers: open, high, low, close, sum_v, cnt.
+    Batch tiers add the first/last_ts carriers; streaming tier sinks
+    carry no carriers."""
+    return [
+        F.min_by("open", "first_ts").alias("open"),
+        F.max("high").alias("high"),
+        F.min("low").alias("low"),
+        F.max_by("close", "last_ts").alias("close"),
+        F.sum("sum_v").alias("sum_v"),
+        F.sum("cnt").alias("cnt"),
+    ]
+
+
+def build_hub(plan: CascadePlan, ticks: DataFrame) -> DataFrame:
+    """Tier 0: raw ticks -> 1 s pre-aggregate with re-aggregable partials.
+
+    Columns: keys..., bucket_start, then :func:`_hub_aggs`.
+    """
+    return ticks.groupBy(
+        *[F.col(k) for k in plan.keys],
+        bucket_start(plan.ts_col, "1s").alias("bucket_start"),
+    ).agg(*_hub_aggs(plan))
 
 
 def rollup_tier(plan: CascadePlan, hub: DataFrame, tf: str) -> DataFrame:
@@ -160,12 +181,7 @@ def rollup_tier(plan: CascadePlan, hub: DataFrame, tf: str) -> DataFrame:
             bucket_start("bucket_start", tf, plan.week_anchor).alias("bucket_start"),
         )
         .agg(
-            F.min_by("open", "first_ts").alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "last_ts").alias("close"),
-            F.sum("sum_v").alias("sum_v"),
-            F.sum("cnt").alias("cnt"),
+            *_tier_aggs(),
             F.min("first_ts").alias("first_ts"),
             F.max("last_ts").alias("last_ts"),
         )
@@ -238,38 +254,30 @@ def start_streaming_cascade(
         _, shim = attach_incident_listener(
             tick_stream.sparkSession, incident_bus
         )
-    from pyspark.sql import functions as F  # local alias for clarity
+
+    def start(df: DataFrame, name: str):
+        return (
+            df.writeStream.format("parquet")
+            .queryName(name)
+            .option("path", f"{sink_dir}/{name}")
+            .option("checkpointLocation", f"{checkpoint_dir}/{name}")
+            .outputMode("append")
+            .trigger(processingTime=f"{trigger_seconds} seconds")
+            .start()
+        )
 
     grace = f"{plan.grace_seconds.get('1s', 1)} seconds"
-    ts, price = F.col(plan.ts_col), F.col(plan.price_col)
     hub_stream = (
         tick_stream.withWatermark(plan.ts_col, grace)
         .groupBy(
             *[F.col(k) for k in plan.keys],
             F.window(plan.ts_col, "1 second").alias("w"),
         )
-        .agg(
-            F.min_by(price, ts).alias("open"),
-            F.max(price).alias("high"),
-            F.min(price).alias("low"),
-            F.max_by(price, ts).alias("close"),
-            F.sum(price).alias("sum_v"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(ts).alias("first_ts"),
-            F.max(ts).alias("last_ts"),
-        )
+        .agg(*_hub_aggs(plan))
         .select(F.col("w.start").alias("bucket_start"), "*")
         .drop("w")
     )
-    queries = [
-        hub_stream.writeStream.format("parquet")
-        .queryName(plan.hub_name)
-        .option("path", f"{sink_dir}/{plan.hub_name}")
-        .option("checkpointLocation", f"{checkpoint_dir}/{plan.hub_name}")
-        .outputMode("append")
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    ]
+    queries = [start(hub_stream, plan.hub_name)]
     hub_read = tick_stream.sparkSession.readStream.schema(
         hub_stream.schema
     ).parquet(f"{sink_dir}/{plan.hub_name}")
@@ -284,26 +292,11 @@ def start_streaming_cascade(
                 *[F.col(k) for k in plan.keys],
                 F.window("bucket_start", f"{secs} seconds").alias("w"),
             )
-            .agg(
-                F.min_by("open", "first_ts").alias("open"),
-                F.max("high").alias("high"),
-                F.min("low").alias("low"),
-                F.max_by("close", "last_ts").alias("close"),
-                F.sum("sum_v").alias("sum_v"),
-                F.sum("cnt").alias("cnt"),
-            )
+            .agg(*_tier_aggs())
             .select(F.col("w.start").alias("bucket_start"), "*")
             .drop("w")
         )
-        queries.append(
-            tier.writeStream.format("parquet")
-            .queryName(plan.tier_name(tf))
-            .option("path", f"{sink_dir}/{plan.tier_name(tf)}")
-            .option("checkpointLocation", f"{checkpoint_dir}/{plan.tier_name(tf)}")
-            .outputMode("append")
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
-        )
+        queries.append(start(tier, plan.tier_name(tf)))
     if shim is not None:
         return queries, shim
     return queries

@@ -86,37 +86,6 @@ def minhash_signatures(
     )
 
 
-def minhash_bands(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, band_idx, band_hash): LSH band buckets of the minhash signature."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                    "|",
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_hash")
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -188,18 +157,6 @@ def minhash_lsh_pairs(
         .select("p.id_a", "p.id_b")
         .distinct()
     )
-
-
-def _sorted_pairs(ids: Column) -> Column:
-    """All (id_a < id_b) pairs from an id array, as array<struct>."""
-    return _presorted_pairs(F.array_sort(ids))
-
-
-def _chain_pairs(ids: Column) -> Column:
-    """Consecutive (ids[i], ids[i+1]) pairs of the sorted id array —
-    O(n) spanning chain of the bucket's connectivity graph (the
-    degenerate-bucket fallback for ``minhash_lsh_pairs``)."""
-    return _presorted_chain(F.array_sort(ids))
 
 
 def _presorted_pairs(sorted_ids: Column) -> Column:
@@ -517,7 +474,6 @@ def semantic_dedup_blocked(
     id_col: str = "vec_id",
     threshold: float = 0.95,
     dim: int | None = None,
-    loop_partitions: int | None = 8,
     kernel: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: vectors whose cosine
@@ -536,7 +492,7 @@ def semantic_dedup_blocked(
     trade, same contract as the published SemDeDup recipe (clusters
     from k-means cells).
     """
-    from .graph import connected_components
+    from .graph import dedup_clusters
     from .similarity import _unit_vec
 
     if kernel not in ("arrow", "expr"):
@@ -574,15 +530,9 @@ def semantic_dedup_blocked(
             .where(cos >= threshold)
             .select("id_a", "id_b")
         )
-    comps = connected_components(pairs, loop_partitions=loop_partitions)
-    out = df.select(F.col(id_col)).join(
-        comps, F.col(id_col) == F.col("node"), "left"
-    )
-    cluster = F.coalesce(F.col("component"), F.col(id_col))
-    return out.select(
-        id_col,
-        cluster.alias("cluster_id"),
-        (cluster == F.col(id_col)).alias("keep"),
+    clusters = dedup_clusters(df.select(id_col), pairs, id_col)
+    return clusters.select(
+        id_col, "cluster_id", (F.col("cluster_id") == F.col(id_col)).alias("keep")
     )
 
 

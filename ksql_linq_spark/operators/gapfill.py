@@ -26,6 +26,28 @@ from pyspark.sql import types as T
 from .windows import timeframe_seconds
 
 
+def _on_spine(
+    df: DataFrame, keys: list[str], bucket_col: str, timeframe: str, what: str
+) -> DataFrame:
+    """``df`` left-joined onto its per-key time spine: every bucket from
+    each key's min to max ``bucket_col``, one ``timeframe`` step apart
+    (``sequence`` + explode — a flatMap, spine size = keys × buckets)."""
+    step = timeframe_seconds(timeframe)
+    if step is None:
+        raise ValueError(f"{what} needs a fixed-duration timeframe")
+    spine = (
+        df.groupBy(*keys)
+        .agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
+        .select(
+            *keys,
+            F.explode(
+                F.sequence("_lo", "_hi", F.expr(f"INTERVAL {step} SECONDS"))
+            ).alias(bucket_col),
+        )
+    )
+    return spine.join(df, on=[*keys, bucket_col], how="left")
+
+
 def gap_fill_bars(
     bars: DataFrame,
     keys: list[str],
@@ -39,22 +61,8 @@ def gap_fill_bars(
     Filler rows carry the previous close as open/high/low/close and 0
     volume — byte-for-byte the reference's synthetic-row semantics.
     """
-    step = timeframe_seconds(timeframe)
-    if step is None:
-        raise ValueError("gap-fill needs a fixed-duration timeframe")
     o, h, l, c = ohlc
-
-    spine = (
-        bars.groupBy(*keys)
-        .agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
-        .select(
-            *keys,
-            F.explode(
-                F.sequence("_lo", "_hi", F.expr(f"INTERVAL {step} SECONDS"))
-            ).alias(bucket_col),
-        )
-    )
-    joined = spine.join(bars, on=[*keys, bucket_col], how="left")
+    joined = _on_spine(bars, keys, bucket_col, timeframe, "gap-fill")
     w = (
         Window.partitionBy(*keys)
         .orderBy(bucket_col)
@@ -223,21 +231,7 @@ def interpolate_linear(
     arithmetic is fixed-order IEEE binary64 (div, mul, add), so engines
     agree bit-for-bit before any cosmetic rounding.
     """
-    step = timeframe_seconds(timeframe)
-    if step is None:
-        raise ValueError("interpolation needs a fixed-duration timeframe")
-
-    spine = (
-        df.groupBy(*keys)
-        .agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
-        .select(
-            *keys,
-            F.explode(
-                F.sequence("_lo", "_hi", F.expr(f"INTERVAL {step} SECONDS"))
-            ).alias(bucket_col),
-        )
-    )
-    joined = spine.join(df, on=[*keys, bucket_col], how="left")
+    joined = _on_spine(df, keys, bucket_col, timeframe, "interpolation")
     back = (
         Window.partitionBy(*keys)
         .orderBy(bucket_col)

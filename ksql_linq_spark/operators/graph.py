@@ -32,12 +32,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _fetch_if_small(frame: DataFrame, gate: int):
+    """``frame`` as a driver-side Arrow table if it has at most ``gate``
+    rows, else None (always None when ``gate`` is 0).
+
+    One upstream execution decides the regime AND fetches the rows:
+    collect gate+1 rows — if the limit is hit, the caller falls through
+    to its distributed regime (a count() probe would run the whole
+    upstream pair-mining pipeline a second time).  The Arrow fetch (not
+    collect) keeps the rows columnar: 1M id pairs is ~16 MB of Arrow
+    buffers vs hundreds of MB of boxed Row objects, and it does not
+    depend on the session's arrow.pyspark.enabled conf."""
+    if not gate:
+        return None
+    tbl = frame.limit(gate + 1).toArrow()
+    return tbl if tbl.num_rows <= gate else None
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 30,
-    loop_partitions: int | None = None,
     driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component id =
@@ -53,42 +69,15 @@ def connected_components(
     diameter × 4 distributed stages (measured 4.6 s -> 0.3 s on the
     sf0.1 near-dup graph; identical output by construction — min-root
     union-find).  Above the gate the distributed min-label-propagation
-    loop below takes over unchanged.
-
-    ``loop_partitions``: coalesce the checkpointed loop frames (loop
-    regime only).  Near-dup edge lists are typically tiny relative to
-    the corpus, and each round pays per-partition task overhead x 4
-    stages — on small graphs a low value halves round latency (measured
-    8.2 s -> 3.5 s cold at sf0.1).  Leave None when the edge list is
-    genuinely large (loop parallelism then follows the session's
-    shuffle partitioning)."""
+    loop below takes over unchanged."""
     # null-keyed edges contribute nothing in the distributed regime
     # (null never equi-joins); drop them up front so both regimes agree
     # and the driver union-find never compares None ids
     non_null = F.col(src).isNotNull() & F.col(dst).isNotNull()
-    rows = None
-    if driver_max_edges:
-        # one upstream execution decides the regime AND fetches the
-        # edges: collect gate+1 rows — if the limit is hit, fall through
-        # to the distributed loop (a count() probe would run the whole
-        # upstream pair-mining pipeline a second time).  toArrow (not
-        # collect) keeps the fetch columnar: 1M id pairs is ~16 MB of
-        # Arrow buffers vs hundreds of MB of boxed Row objects, and it
-        # does not depend on the session's arrow.pyspark.enabled conf.
-        tbl = (
-            edges.select(src, dst)
-            .where(non_null)
-            .distinct()
-            .limit(driver_max_edges + 1)
-            .toArrow()
-        )
-        if tbl.num_rows > driver_max_edges:
-            rows = None
-        else:
-            # to_pylist: native ints/strs (createDataFrame rejects numpy
-            # scalars); the wire transfer stays columnar Arrow
-            rows = zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist())
-    if rows is not None:
+    tbl = _fetch_if_small(
+        edges.select(src, dst).where(non_null).distinct(), driver_max_edges
+    )
+    if tbl is not None:
         parent: dict = {}
 
         def find(x):
@@ -97,7 +86,9 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for a, b in rows:
+        # to_pylist: native ints/strs (createDataFrame rejects numpy
+        # scalars); the wire transfer stays columnar Arrow
+        for a, b in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -114,8 +105,6 @@ def connected_components(
         )
         return edges.sparkSession.createDataFrame(out, schema)
 
-    def _co(df: DataFrame) -> DataFrame:
-        return df.coalesce(loop_partitions) if loop_partitions else df
     # one scan of the (possibly expensive) upstream edge pipeline: emit
     # both directions via explode instead of union(edges, edges) — the
     # union form computes the edge plan TWICE before the checkpoint cuts
@@ -131,14 +120,14 @@ def connected_components(
         )
         .select("e.u", "e.v")
         .distinct()
+        .localCheckpoint()
     )
-    und = _co(und).localCheckpoint()
     labels = (
         und.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        .localCheckpoint()
     )
-    labels = _co(labels).localCheckpoint()
     for _ in range(max_rounds):
         neighbor_min = (
             und.join(labels, und["u"] == labels["node"])
@@ -166,7 +155,7 @@ def connected_components(
         # unchanged — pinned by test_graph_cc_long_chain_converges.
         # checkpoint before the self-join so the neighbor-min subtree
         # runs once per round, not twice
-        stepped = _co(stepped).localCheckpoint()
+        stepped = stepped.localCheckpoint()
         lab_of_lab = stepped.select(
             F.col("node").alias("_ln"), F.col("label").alias("_ll")
         )
@@ -179,8 +168,8 @@ def connected_components(
                     F.col("_changed") | (F.col("_ll") < F.col("label"))
                 ).alias("_changed"),
             )
+            .localCheckpoint()
         )
-        new_labels = _co(new_labels).localCheckpoint()
         changed = new_labels.filter(F.col("_changed")).limit(1).count()
         labels = new_labels.drop("_changed")
         if changed == 0:
@@ -194,47 +183,38 @@ def dedup_clusters(
     id_col: str = "doc_id",
     src: str = "id_a",
     dst: str = "id_b",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Cluster id per document: connected component over the near-dup
     ``pairs`` for paired docs, self for singletons.  Downstream keep-one
     policy is then ``filter(doc_id == cluster_id)`` (or join a quality
     rank and keep the best per cluster)."""
-    cc = connected_components(pairs, src, dst, loop_partitions=loop_partitions)
+    cc = connected_components(pairs, src, dst)
     return df.join(cc, df[id_col] == cc["node"], "left").select(
         df["*"], F.coalesce("component", df[id_col]).alias("cluster_id")
     )
 
 
-def _fetch_edges_gated(pairs, id_a: str, id_b: str, gate: int):
-    """Canonical distinct undirected edges, fetched to the driver iff
-    the graph fits under ``gate`` (one upstream execution decides the
-    regime AND fetches — the connected_components limit-probe
-    discipline).  Returns (edge_list | None, canonical_frame)."""
-    from pyspark.sql import functions as F
-
-    canon = (
+def _canonical_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Distinct undirected edges as (u < v); self-loops and NULL
+    endpoints drop out (least/greatest skip NULL, and u != v fails)."""
+    return (
         pairs.select(
             F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    if gate:
-        tbl = canon.limit(gate + 1).toArrow()
-        if tbl.num_rows <= gate:
-            return list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist())), canon
-    return None, canon
 
 
-def _oriented_triangles(edges):
-    """Exact per-node triangle counts of an undirected edge list on the
-    driver: degree-ordered orientation (low-degree → high-degree, ties
-    by id) + forward adjacency intersection — the same arboricity-bound
-    algorithm the distributed leg runs as joins.  Returns (per-node
-    Counter, degree dict)."""
+def _oriented_triangles(tbl):
+    """Exact per-node triangle counts of a canonical (u, v) Arrow edge
+    table on the driver: degree-ordered orientation (low-degree →
+    high-degree, ties by id) + forward adjacency intersection — the
+    same arboricity-bound algorithm :func:`_closed_triangles` runs as
+    joins.  Returns (per-node Counter, degree dict)."""
     from collections import Counter, defaultdict
 
+    edges = list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
     deg: Counter = Counter()
     for u, v in edges:
         deg[u] += 1
@@ -260,137 +240,20 @@ def _oriented_triangles(edges):
 _EMPTY_SET: frozenset = frozenset()
 
 
-def triangle_count(
-    pairs, id_a: str = "id_a", id_b: str = "id_b", driver_max_edges: int = 1_000_000
-):
-    """Exact triangle count over an undirected edge list — the
-    clustering-coefficient numerator that distinguishes a near-dup
-    CLUSTER (template pages: dense, many triangles) from a CHAIN
-    (incremental edits: sparse, none).  Degree-ordered edge orientation
-    (each edge points low-degree → high-degree, ties by id) bounds the
-    join fan-out by the graph's arboricity — the classic trick that
-    keeps the two-path join from exploding on hubs.
+def _closed_triangles(canon: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Distributed triangle dataflow over canonical edges: ``(deg,
+    closed)`` with deg = (n, d) per node and one (apex, x, y) row per
+    triangle.  Degree-ordered orientation (each edge points low-degree
+    → high-degree, ties by id) bounds the two-path self-join by the
+    graph's arboricity; a left-semi join on the edge list closes it.
 
-    Size-gated two-regime execution (the connected_components
-    discipline): the edge list is the dedup BYPRODUCT — orders of
-    magnitude smaller than the corpus — so up to ``driver_max_edges``
-    the canonical edges are fetched once (bounded limit+1 Arrow probe)
-    and the SAME oriented-intersection algorithm runs on the driver:
-    one job instead of ~9 join/aggregate stages whose per-stage latency
-    dominates at small edge counts.  Above the gate the distributed
-    two-self-join dataflow below takes over unchanged.
-
-    Returns a 1-row DataFrame: ``triangles``.
-
-    Distributed regime: the canonical edge list is materialized once
-    (lazy localCheckpoint, the connected_components lineage-cut
-    discipline): the triangle dataflow references it four times, and
-    without the cut each reference re-expands the whole upstream
-    pair-mining pipeline — measured 11 corpus scans / 38 shuffles for
-    the LSH-pairs caller vs one pipeline run + the triangle joins.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    rows, canon = _fetch_edges_gated(pairs, id_a, id_b, driver_max_edges)
-    if rows is not None:
-        tri, _ = _oriented_triangles(rows)
-        total = sum(tri.values()) // 3
-        schema = T.StructType([T.StructField("triangles", T.LongType(), False)])
-        return pairs.sparkSession.createDataFrame([(total,)], schema)
-    e = canon.localCheckpoint(eager=False)
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ed = (
-        e.join(deg.withColumnRenamed("n", "u").withColumnRenamed("d", "du"), "u")
-        .join(deg.withColumnRenamed("n", "v").withColumnRenamed("d", "dv"), "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-            )
-            .otherwise(F.struct(F.col("v").alias("s"), F.col("u").alias("t")))
-            .alias("o")
-        )
-        .select(F.col("o.s").alias("s"), F.col("o.t").alias("t"))
-    )
-    p2 = (
-        ed.alias("a")
-        .join(ed.alias("b"), F.col("a.s") == F.col("b.s"))
-        .where(F.col("a.t") < F.col("b.t"))
-        .select(F.col("a.t").alias("x"), F.col("b.t").alias("y"))
-    )
-    closed = p2.join(
-        e.select(F.col("u").alias("x"), F.col("v").alias("y")),
-        ["x", "y"],
-        "left_semi",
-    )
-    return closed.agg(F.count(F.lit(1)).alias("triangles"))
-
-
-def clustering_coefficient(
-    pairs, id_a: str = "id_a", id_b: str = "id_b", driver_max_edges: int = 1_000_000
-):
-    """Local clustering coefficient per node: closed triangles at the
-    node / (deg·(deg−1)/2) — near 1 inside template families (dense
-    near-dup cliques), near 0 on drift chains; per-node where
-    :func:`triangle_count` is corpus-global.
-
-    Size-gated like :func:`triangle_count`: under ``driver_max_edges``
-    the per-node counts come from the driver-side oriented
-    intersection (one bounded fetch, one job).  The driver leg
-    replicates the distributed expression OPERAND-FOR-OPERAND:
-    coefficient = round((t·2.0)/(d·(d−1.0)), 6) with Spark's
-    BigDecimal-of-shortest-repr HALF_UP rounding (Decimal(repr(x))
-    quantize), so results are bit-identical across regimes.
-
-    Distributed regime: same degree-ordered orientation bounds the
-    two-path join; each closed triangle credits all three member nodes
-    via one explode.  Returns (node, degree, triangles, coefficient).
-    Edge list materialized once via lazy localCheckpoint (see
-    triangle_count): the five downstream references otherwise each
-    re-expand the upstream pair-mining pipeline (measured 13 corpus
-    scans / 45 shuffles for the LSH caller).
-    """
-    from pyspark.sql import functions as F
-
-    rows, canon = _fetch_edges_gated(pairs, id_a, id_b, driver_max_edges)
-    if rows is not None:
-        from decimal import ROUND_HALF_UP, Decimal
-
-        from pyspark.sql import types as T
-
-        tri, deg = _oriented_triangles(rows)
-        out = []
-        for n in deg:
-            d = deg[n]
-            t = tri.get(n, 0)
-            if d >= 2:
-                # Spark round(double, 6): BigDecimal.valueOf (shortest
-                # repr) setScale(6, HALF_UP) — replicated exactly
-                c = float(
-                    Decimal(repr((t * 2.0) / (d * (d - 1.0)))).quantize(
-                        Decimal("0.000001"), rounding=ROUND_HALF_UP
-                    )
-                )
-            else:
-                c = 0.0
-            out.append((n, d, t, c))
-        node_type = pairs.schema[id_a].dataType
-        schema = T.StructType(
-            [
-                T.StructField("node", node_type),
-                T.StructField("degree", T.LongType(), False),
-                T.StructField("triangles", T.LongType(), False),
-                T.StructField("coefficient", T.DoubleType()),
-            ]
-        )
-        return pairs.sparkSession.createDataFrame(out, schema)
+    The canonical edge list is materialized once (lazy localCheckpoint,
+    the connected_components lineage-cut discipline): the dataflow
+    references it four times, and without the cut each reference
+    re-expands the whole upstream pair-mining pipeline — measured 11
+    corpus scans / 38 shuffles (triangle_count) and 13 / 45
+    (clustering_coefficient) for the LSH-pairs caller, vs one pipeline
+    run + the triangle joins."""
     e = canon.localCheckpoint(eager=False)
     deg = (
         e.select(F.col("u").alias("n"))
@@ -427,6 +290,97 @@ def clustering_coefficient(
         ["x", "y"],
         "left_semi",
     )
+    return deg, closed
+
+
+def triangle_count(
+    pairs, id_a: str = "id_a", id_b: str = "id_b", driver_max_edges: int = 1_000_000
+):
+    """Exact triangle count over an undirected edge list — the
+    clustering-coefficient numerator that distinguishes a near-dup
+    CLUSTER (template pages: dense, many triangles) from a CHAIN
+    (incremental edits: sparse, none).  Degree-ordered edge orientation
+    keeps the two-path join from exploding on hubs (see
+    :func:`_closed_triangles`).
+
+    Size-gated two-regime execution (the connected_components
+    discipline): the edge list is the dedup BYPRODUCT — orders of
+    magnitude smaller than the corpus — so up to ``driver_max_edges``
+    the canonical edges are fetched once (bounded limit+1 Arrow probe)
+    and the SAME oriented-intersection algorithm runs on the driver:
+    one job instead of ~9 join/aggregate stages whose per-stage latency
+    dominates at small edge counts.  Above the gate the distributed
+    two-self-join dataflow takes over unchanged.
+
+    Returns a 1-row DataFrame: ``triangles``.
+    """
+    from pyspark.sql import types as T
+
+    canon = _canonical_edges(pairs, id_a, id_b)
+    tbl = _fetch_if_small(canon, driver_max_edges)
+    if tbl is not None:
+        tri, _ = _oriented_triangles(tbl)
+        total = sum(tri.values()) // 3
+        schema = T.StructType([T.StructField("triangles", T.LongType(), False)])
+        return pairs.sparkSession.createDataFrame([(total,)], schema)
+    _, closed = _closed_triangles(canon)
+    return closed.agg(F.count(F.lit(1)).alias("triangles"))
+
+
+def clustering_coefficient(
+    pairs, id_a: str = "id_a", id_b: str = "id_b", driver_max_edges: int = 1_000_000
+):
+    """Local clustering coefficient per node: closed triangles at the
+    node / (deg·(deg−1)/2) — near 1 inside template families (dense
+    near-dup cliques), near 0 on drift chains; per-node where
+    :func:`triangle_count` is corpus-global.
+
+    Size-gated like :func:`triangle_count`: under ``driver_max_edges``
+    the per-node counts come from the driver-side oriented
+    intersection (one bounded fetch, one job).  The driver leg
+    replicates the distributed expression OPERAND-FOR-OPERAND:
+    coefficient = round((t·2.0)/(d·(d−1.0)), 6) with Spark's
+    BigDecimal-of-shortest-repr HALF_UP rounding (Decimal(repr(x))
+    quantize), so results are bit-identical across regimes.
+
+    Distributed regime: :func:`_closed_triangles`; each closed triangle
+    credits all three member nodes via one explode.  Returns (node,
+    degree, triangles, coefficient).
+    """
+    canon = _canonical_edges(pairs, id_a, id_b)
+    tbl = _fetch_if_small(canon, driver_max_edges)
+    if tbl is not None:
+        from decimal import ROUND_HALF_UP, Decimal
+
+        from pyspark.sql import types as T
+
+        tri, deg = _oriented_triangles(tbl)
+        out = []
+        for n in deg:
+            d = deg[n]
+            t = tri.get(n, 0)
+            if d >= 2:
+                # Spark round(double, 6): BigDecimal.valueOf (shortest
+                # repr) setScale(6, HALF_UP) — replicated exactly
+                c = float(
+                    Decimal(repr((t * 2.0) / (d * (d - 1.0)))).quantize(
+                        Decimal("0.000001"), rounding=ROUND_HALF_UP
+                    )
+                )
+            else:
+                c = 0.0
+            out.append((n, d, t, c))
+        node_type = pairs.schema[id_a].dataType
+        schema = T.StructType(
+            [
+                T.StructField("node", node_type),
+                T.StructField("degree", T.LongType(), False),
+                T.StructField("triangles", T.LongType(), False),
+                T.StructField("coefficient", T.DoubleType()),
+            ]
+        )
+        return pairs.sparkSession.createDataFrame(out, schema)
+    deg, closed = _closed_triangles(canon)
     node_tri = (
         closed.select(
             F.explode(F.array("apex", "x", "y")).alias("n")

@@ -270,21 +270,6 @@ def video_frame_hashes(
     return image_dhash(as_media).select("media_id", "frame_idx", hash_col)
 
 
-def resize_stub(df: DataFrame, width: int, height: int, fake: bool = False) -> DataFrame:
-    """Image resize stub: passes bytes through, stamps target dims in meta."""
-    if not fake and DECODER is None:
-        raise NotImplementedError("no image codec: call with fake=True")
-    return df.withColumn(
-        "meta",
-        F.map_concat(
-            F.coalesce(F.col("meta"), F.create_map().cast("map<string,string>")),
-            F.create_map(
-                F.lit("resized_to"), F.lit(f"{width}x{height}"),
-            ),
-        ),
-    )
-
-
 def image_dhash(df: DataFrame, hash_col: str = "dhash") -> DataFrame:
     """Perceptual difference-hash per image row — the image-side
     near-dup fingerprint (the multimodal analog of text SimHash).

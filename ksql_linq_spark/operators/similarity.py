@@ -22,11 +22,6 @@ from pyspark.sql import functions as F
 from ._exprtext import cosine_sql, dbl_arr_sql, dlit, dlit_array, dot_sql, ilit_array, qcol
 
 
-def _dbl(v) -> Column:
-    c = F.col(v) if isinstance(v, str) else v
-    return F.transform(c, lambda x: x.cast("double"))
-
-
 def dot(a, b, dim: int | None = None, cast_elements: bool = False) -> Column:
     """Dot product.  With ``dim`` known statically the fold is unrolled
     into a left-associative Add chain over element_at — bitwise identical

@@ -78,21 +78,6 @@ def heavy_hitters(
     )
 
 
-def approx_quantiles(
-    df: DataFrame, col: str, probabilities: list[float], relative_error: float = 1e-4
-) -> DataFrame:
-    """Greenwald-Khanna approximate quantiles as a 1-row DataFrame —
-    the built-in distributed sketch (``approxQuantile`` collects to the
-    driver; this keeps it in-plan via ``percentile_approx``)."""
-    return df.agg(
-        F.percentile_approx(
-            col,
-            F.array(*[F.lit(p) for p in probabilities]),
-            F.lit(int(1.0 / relative_error)),
-        ).alias("quantiles")
-    )
-
-
 def group_percentiles(
     df: DataFrame,
     keys: list[str],
@@ -201,70 +186,6 @@ def _recombine_on_keys(
         out = out.join(renamed, cond, "inner").drop(*[gp[k] for k in keys])
     order = list(keys) + [a for probs in col_probs.values() for _, a in probs]
     return out.select(*order)
-
-
-def group_percentiles_disc(
-    df: DataFrame,
-    keys: list[str],
-    col_probs: dict[str, list[tuple[float, str]]],
-) -> DataFrame:
-    """Frequency-compressed discrete per-group percentiles — the
-    rank-arithmetic twin of ``group_percentiles(compress=True)`` for
-    ``percentile_disc``.
-
-    Spark's ``percentile_disc`` is an ObjectHashAggregate that buffers
-    every (value, 1) pair per group and sorts at eval; its documented
-    semantics (PercentileDisc.getPercentile, non-legacy path) are::
-
-        rank = ceil(n.toDouble * p).toLong       # n = non-null count
-        result = first value whose cumulative count >= rank  (as double)
-
-    This computes the identical value from the frequency-compressed
-    frame: pre-reduce to (keys, value, count) in a codegen hash
-    aggregate, cumulative counts via one incremental window over the
-    compressed rows, and the rank pick as a conditional min — the same
-    double multiply + ceil, so bit-identical by construction (including
-    the p·n floating-point boundary behavior).  NULL values are
-    excluded from n and from candidacy exactly as the native aggregate
-    does; all-NULL groups still emit their row (result NULL).
-    """
-    from pyspark.sql.window import Window
-
-    taken = set(df.columns) | {a for probs in col_probs.values() for _, a in probs}
-    fcol = _fresh("_f", taken)
-    ncol = _fresh("_n", taken)
-    ccol = _fresh("_cum", taken)
-    parts = []
-    for col, probs in col_probs.items():
-        counted = df.groupBy(*keys, col).agg(F.count(F.lit(1)).alias(fcol))
-        nn = F.col(col).isNotNull()
-        w_all = Window.partitionBy(*keys)
-        w_cum = (
-            Window.partitionBy(*keys)
-            .orderBy(F.asc_nulls_last(col))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        en = counted.select(
-            *keys,
-            col,
-            F.sum(F.when(nn, F.col(fcol))).over(w_cum).alias(ccol),
-            F.sum(F.when(nn, F.col(fcol))).over(w_all).alias(ncol),
-        )
-        aggs = []
-        for p, alias in probs:
-            # the EXACT native arithmetic: n (long) -> double, * p, ceil -> long
-            rank = F.ceil(F.col(ncol).cast("double") * F.lit(float(p)))
-            aggs.append(
-                F.min(
-                    F.when(
-                        F.col(col).isNotNull() & (F.col(ccol) >= rank), F.col(col)
-                    )
-                )
-                .cast("double")
-                .alias(alias)
-            )
-        parts.append(en.groupBy(*keys).agg(*aggs))
-    return _recombine_on_keys(parts, keys, col_probs, taken)
 
 
 def cm_sketch(

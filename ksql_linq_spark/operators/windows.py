@@ -103,16 +103,3 @@ def session_window_agg(df, keys: list, ts_col: str, gap: str, aggs: list):
         .withColumn("session_end", F.col("session_window.end"))
         .drop("session_window")
     )
-
-
-def tumbling_window(ts: Column | str, tf: str, week_anchor: str = "monday") -> Column:
-    """window-struct-compatible bucket: struct(start, end) for any timeframe.
-
-    For fixed frames prefer ``F.window`` in streaming paths (it carries
-    watermark metadata); this expression form works in batch for all
-    frames including 1wk/1mo.
-    """
-    return F.struct(
-        bucket_start(ts, tf, week_anchor).alias("start"),
-        bucket_end(ts, tf, week_anchor).alias("end"),
-    )

@@ -225,3 +225,36 @@ def test_operators_doc_fresh_and_links_valid():
             mod_name = f"ksql_linq_spark.{pkg}.{mod}"
         m = importlib.import_module(mod_name)
         assert hasattr(m, func), f"{mod_name}.{func} referenced in OPERATORS.md but missing"
+
+
+def test_every_operator_definition_is_referenced():
+    """Dead-code guard: every top-level ``def``/``class`` in
+    ``ksql_linq_spark/operators/*.py`` must be referenced by name
+    somewhere in ``ksql_linq_spark/``, ``tests/`` or ``tools/`` other
+    than its own ``def`` line.  An operator nothing calls, tests or
+    documents is deleted, not kept."""
+    import ast
+    import re
+    from collections import Counter
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    words = Counter(
+        w
+        for d in ("ksql_linq_spark", "tests", "tools")
+        for p in (root / d).rglob("*.py")
+        for w in re.findall(r"\w+", p.read_text())
+    )
+    unreferenced = []
+    for path in sorted((root / "ksql_linq_spark" / "operators").glob("*.py")):
+        text = path.read_text()
+        lines = text.splitlines()
+        for node in ast.parse(text).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            own = re.findall(r"\w+", lines[node.lineno - 1]).count(node.name)
+            if words[node.name] <= own:
+                unreferenced.append(f"operators/{path.name}:{node.lineno} {node.name}")
+    assert not unreferenced, "unreferenced operator definitions:\n" + "\n".join(
+        unreferenced
+    )

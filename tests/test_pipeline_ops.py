@@ -1529,6 +1529,34 @@ def test_triangle_count_known_graphs(spark):
             [(1, 2), (2, 1), (2, 3), (3, 1), (1, 3)], "id_a long, id_b long"
         )
         assert triangle_count(dup, driver_max_edges=gate).first().triangles == 1
+    # seeded random graph with degree ties: both regimes must agree
+    # with each other and with brute-force enumeration
+    edges = _random_tie_graph()
+    g = spark.createDataFrame(edges, "id_a long, id_b long")
+    adj = {frozenset(e) for e in edges}
+    brute = sum(
+        1
+        for a in range(40) for b in range(a + 1, 40) for c in range(b + 1, 40)
+        if {frozenset((a, b)), frozenset((b, c)), frozenset((a, c))} <= adj
+    )
+    got = [triangle_count(g, driver_max_edges=gate).first().triangles
+           for gate in (1_000_000, 0)]
+    assert got == [brute, brute] and brute > 0
+
+
+def _random_tie_graph():
+    """Seeded 40-node random edge list (duplicates and both directions
+    included) whose degree sequence has ties, so the orientation's
+    id tie-break is exercised."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(11)
+    edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(160)]
+    edges = [(a, b) for a, b in edges if a != b]
+    deg = Counter(n for e in {frozenset(e) for e in edges} for n in e)
+    assert len(set(deg.values())) < len(deg)
+    return edges
 
 
 def test_table_diff_statuses_and_attribution(spark):
@@ -1583,6 +1611,13 @@ def test_clustering_coefficient_known_graphs(spark):
         rows[gate] = sorted((r.node, r.degree, r.triangles, r.coefficient)
                             for r in out.values())
     assert rows[1_000_000] == rows[0]
+    # seeded random graph with degree ties (see _random_tie_graph)
+    g = spark.createDataFrame(_random_tie_graph(), "id_a long, id_b long")
+    rows = {
+        gate: sorted(clustering_coefficient(g, driver_max_edges=gate).collect())
+        for gate in (1_000_000, 0)
+    }
+    assert rows[1_000_000] == rows[0] and len(rows[0]) == 40
 
 
 def test_standardize_embeddings_moments(spark):
@@ -1677,7 +1712,9 @@ def test_connected_components_regimes_agree(spark):
     and the distributed min-label-propagation loop must produce
     IDENTICAL (node, component) maps — same min-id labeling contract.
     A 40-node random graph plus a long path (worst case for label
-    propagation rounds) exercises both."""
+    propagation rounds) exercises both, with a self-loop-only node
+    (its own component in both regimes) and NULL-endpoint edges (no
+    node in either regime)."""
     import random
 
     from ksql_linq_spark.operators.graph import connected_components
@@ -1685,9 +1722,9 @@ def test_connected_components_regimes_agree(spark):
     rng = random.Random(7)
     edges = [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
     edges += [(100 + i, 101 + i) for i in range(12)]  # path component
-    df = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
-    )
+    edges = [(a, b) for a, b in edges if a != b]
+    edges += [(500, 500), (None, 600), (601, None)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = {r["node"]: r["component"] for r in connected_components(df).collect()}
     slow = {
         r["node"]: r["component"]
@@ -1696,6 +1733,8 @@ def test_connected_components_regimes_agree(spark):
     assert fast == slow and fast
     # path component labeled by its min node
     assert fast[112] == 100
+    assert fast[500] == 500
+    assert None not in fast and 600 not in fast and 601 not in fast
 
 
 def test_graph_cc_long_chain_converges(spark):
@@ -1712,9 +1751,7 @@ def test_graph_cc_long_chain_converges(spark):
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
-    cc = connected_components(
-        df, driver_max_edges=0, loop_partitions=8
-    ).collect()
+    cc = connected_components(df, driver_max_edges=0).collect()
     labels = {r["node"]: r["component"] for r in cc}
     assert len(labels) == n + 1
     assert set(labels.values()) == {0}
@@ -2112,44 +2149,6 @@ def test_contamination_report_exact_check_col_matches_two_call_form(spark):
     assert f == e and f[10] == 2 and f[11] == 1 and f[12] == 0
     with _pytest.raises(ValueError):
         contamination_report(train, ev, exact_check_col="x")
-
-
-def test_group_percentiles_disc_bit_identical(spark):
-    """r14: the frequency-compressed rank-arithmetic percentile_disc
-    twin must reproduce the native ObjectHashAggregate bit-for-bit —
-    including NULL group keys, all-NULL value groups, the FP
-    ceil(n·p) boundary (p=0.9, n=100-class products), and p=0/p=1."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from ksql_linq_spark.operators.sketch import group_percentiles_disc
-
-    random.seed(7)
-    rows = [
-        ("a", 1.0, 10.0), ("a", 2.0, 20.0), ("a", 2.0, None),
-        ("b", 7.0, 70.0), ("b", None, 80.0),
-        (None, 3.0, 30.0), (None, 5.0, None),
-        ("c", None, None),  # all-NULL group: row must survive, NULL result
-    ]
-    # FP-boundary group: exactly 100 values so 0.9*n rides the
-    # double-multiply rounding edge the native rank arithmetic has
-    rows += [("d", float(i % 13), random.random() * 100) for i in range(100)]
-    df = spark.createDataFrame(rows, "k string, x double, y double")
-    col_probs = {
-        "x": [(0.5, "x_med"), (0.9, "x_p90"), (0.0, "x_min"), (1.0, "x_max")],
-        "y": [(0.25, "y_p25")],
-    }
-    aggs = [
-        F.expr(f"percentile_disc({p!r}) WITHIN GROUP (ORDER BY {c})").alias(a)
-        for c, probs in col_probs.items()
-        for p, a in probs
-    ]
-    native = df.groupBy("k").agg(*aggs)
-    freq = group_percentiles_disc(df, ["k"], col_probs)
-    assert native.schema == freq.schema
-    assert native.exceptAll(freq).count() == 0
-    assert freq.exceptAll(native).count() == 0
 
 
 def test_brute_force_top1_ids_matches_window_form(spark):
