@@ -15,6 +15,9 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from .entity import Entity
 from .query.builder import Query, from_df
@@ -152,13 +155,26 @@ class EventSet:
         return self._ctx.table(self._entity.name)
 
     def add(self, rows: list) -> None:
-        """Append rows (validated against the entity schema)."""
+        """Append rows, validated on the driver against the entity schema
+        exactly as ``createDataFrame(rows, schema)`` validates them.
+
+        The batch goes to Spark as an Arrow table: a frame built from the
+        row list is a Python RDD, and its write has to run Python workers
+        (on a 4-core host a one-row add took about 0.55 s that way and
+        0.2 s from Arrow)."""
         if self._path is None:
             raise ValueError(f"entity {self._entity.name!r} has no storage path")
-        batch = self._ctx.spark.createDataFrame(rows, self._entity.schema)
+        schema = self._entity.schema
+        rows = list(rows)
+        verify = _make_type_verifier(schema)
+        for r in rows:
+            verify(r)
+        table = (LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
+                 if rows else to_arrow_schema(schema).empty_table())
+        batch = self._ctx.spark.createDataFrame(table, schema)
         batch.write.mode("append").parquet(self._path)
         # refresh the catalog view over the storage
-        self._ctx.spark.read.schema(self._entity.schema).parquet(
+        self._ctx.spark.read.schema(schema).parquet(
             self._path
         ).createOrReplaceTempView(self._entity.name)
 

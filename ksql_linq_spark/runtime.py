@@ -11,8 +11,19 @@ Reference (SURVEY.md §2.8 C6/C7):
   rows by key + window range (/root/reference/src/Runtime/HoppingWindow.cs:17-110).
 
 Spark mapping: bar tiers are named tables/paths; reads are plain
-filtered scans (partition-pruned when the sink is partitioned by bucket
-date).  No cache subsystem — Spark reads its own sinks directly (S9).
+filtered scans.  No cache subsystem — Spark reads its own sinks
+directly (S9), so each request should cost one Spark job:
+- A parquet source's schema is pinned at the first read that finds
+  files (the reference's ``TimeBucket<T>`` is typed), which drops the
+  schema-inference job from every later request.  A schema change
+  therefore needs a new reader.  Files are still listed on every
+  request, so appended files are visible at once.
+- Results without ``limit`` are collected and sorted on the driver in
+  Spark's ascending order; a global ``orderBy`` would add a sampling job
+  and a shuffle.  With ``limit`` the sort stays in Spark (one
+  take-ordered job, bounded driver memory).
+- ``TimeBucket.read`` prunes ``bucket_date`` partitions when the source
+  has them (``write_bar_tables`` writes them).
 """
 
 from __future__ import annotations
@@ -20,6 +31,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,6 +69,42 @@ class Period:
         return Period("1mo")
 
 
+class _Source:
+    """A reader's storage: a catalog table, or a parquet path whose schema
+    is pinned at the first read that finds files."""
+
+    def __init__(self, spark: SparkSession, table_or_path: str):
+        self.spark = spark
+        self.name = table_or_path
+        self._schema = None
+
+    def df(self) -> DataFrame:
+        if "/" not in self.name:
+            return self.spark.table(self.name)
+        if self._schema is None:
+            df = self.spark.read.parquet(self.name)
+            self._schema = df.schema
+            return df
+        return self.spark.read.schema(self._schema).parquet(self.name)
+
+
+def _asc_key(v):
+    """Sort key for one value in Spark's ascending order: NULL first, NaN
+    after every number (NaN equals NaN)."""
+    if v is None:
+        return (0, 0)
+    if isinstance(v, float) and v != v:
+        return (2, 0)
+    return (1, v)
+
+
+def _collect_sorted(df: DataFrame, cols: list[str], limit: int | None):
+    """``df.orderBy(*cols)[.limit(limit)].collect()`` in one Spark job."""
+    if limit:
+        return df.orderBy(*cols).limit(limit).collect()
+    return sorted(df.collect(), key=lambda r: tuple(_asc_key(r[c]) for c in cols))
+
+
 class TimeBucket:
     """Parameterized reader over per-timeframe bar tables.
 
@@ -71,7 +119,7 @@ class TimeBucket:
         self.period = period
         self.key_cols = key_cols
         self.bucket_col = bucket_col
-        self._source = table_or_path
+        self._source = _Source(spark, table_or_path)
 
     @classmethod
     def get(
@@ -86,32 +134,31 @@ class TimeBucket:
         src = f"{path_prefix}/{name}" if path_prefix else name
         return cls(spark, src, period, key_cols)
 
-    def _df(self) -> DataFrame:
-        if "/" in self._source:
-            return self.spark.read.parquet(self._source)
-        return self.spark.table(self._source)
-
     def to_list(self, *key_parts, limit: int | None = None):
         """Key-prefix filtered read (the NUL-joined-prefix cache scan twin,
         /root/reference/src/Cache/Core/TableCache.cs:43-180)."""
-        df = self._df()
+        df = self._source.df()
         for col, val in zip(self.key_cols, key_parts):
             df = df.filter(F.col(col) == val)
-        df = df.orderBy(*self.key_cols, self.bucket_col)
-        if limit:
-            df = df.limit(limit)
-        return df.collect()
+        return _collect_sorted(df, [*self.key_cols, self.bucket_col], limit)
 
     def read(self, key_parts: list, bucket_start, tolerance_buckets: int = 0):
         """Point read with tolerance: the bar at bucket_start, or the
         nearest earlier one within N buckets (TimeBucket.ReadAsync)."""
         step = timeframe_seconds(self.period.token)
-        df = self._df()
+        df = self._source.df()
         for col, val in zip(self.key_cols, key_parts):
             df = df.filter(F.col(col) == val)
         lo = F.lit(bucket_start) - F.expr(
             f"INTERVAL {step * tolerance_buckets} SECONDS"
         ) if step else F.lit(bucket_start)
+        if "bucket_date" in df.columns:
+            # bucket_date = to_date(bucket_start) in the writer's session
+            # time zone; one day of slack each side keeps a zone change
+            # between write and read from dropping the row
+            df = df.filter(F.col("bucket_date").between(
+                F.date_sub(F.to_date(lo), 1),
+                F.date_add(F.to_date(F.lit(bucket_start)), 1)))
         rows = (
             df.filter((F.col(self.bucket_col) <= F.lit(bucket_start)) &
                       (F.col(self.bucket_col) >= lo))
@@ -124,10 +171,16 @@ class TimeBucket:
     def wait_for_bucket(self, key_parts: list, bucket_start,
                         timeout_seconds: float = 90.0, poll_seconds: float = 1.0):
         """Poll until the bucket exists (WaitForBucketAsync; 90 s default
-        mirrors the reference's cache-ready timeout, TableCache.cs:45)."""
+        mirrors the reference's cache-ready timeout, TableCache.cs:45).
+        A tier with no data files yet is not ready, not an error."""
         deadline = time.monotonic() + timeout_seconds
         while time.monotonic() < deadline:
-            row = self.read(key_parts, bucket_start)
+            try:
+                row = self.read(key_parts, bucket_start)
+            except AnalysisException as e:
+                if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                    raise
+                row = None
             if row is not None:
                 return row
             time.sleep(poll_seconds)
@@ -144,26 +197,18 @@ class HoppingWindowReader:
         self.spark = spark
         self.key_cols = key_cols
         self.start_col = start_col
-        self._source = table_or_path
-
-    def _df(self) -> DataFrame:
-        if "/" in self._source:
-            return self.spark.read.parquet(self._source)
-        return self.spark.table(self._source)
+        self._source = _Source(spark, table_or_path)
 
     def to_list(self, key_parts: list, from_ts=None, to_ts=None,
                 limit: int | None = None):
-        df = self._df()
+        df = self._source.df()
         for col, val in zip(self.key_cols, key_parts):
             df = df.filter(F.col(col) == val)
         if from_ts is not None:
             df = df.filter(F.col(self.start_col) >= F.lit(from_ts))
         if to_ts is not None:
             df = df.filter(F.col(self.start_col) < F.lit(to_ts))
-        df = df.orderBy(self.start_col)
-        if limit:
-            df = df.limit(limit)
-        return df.collect()
+        return _collect_sorted(df, [self.start_col], limit)
 
 
 def limit_retention(

@@ -136,6 +136,74 @@ def test_eventset_add_to_list_guards(spark, tmp_path):
         dlq_es.on_error(None)
 
 
+def test_eventset_add_validates_and_writes_like_create_dataframe(spark, tmp_path):
+    """EventSet.add builds its batch from Arrow: it must reject exactly the
+    rows ``createDataFrame(rows, schema)`` rejects, with the same error,
+    write nothing for them, and write the same rows, schema and
+    nullability."""
+    import datetime as dt
+    import decimal
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import Row
+
+    from ksql_linq_spark.context import SparkKsqlContext
+    from ksql_linq_spark.entity import Column, Entity
+
+    ent = Entity("fills", [
+        Column("id", "long", nullable=False, key_order=0),
+        Column("sym", "string"),
+        Column("px", "double"),
+        Column("amt", "decimal(18,2)"),
+        Column("ts", "timestamp", timestamp=True),
+        Column("day", "date"),
+        Column("tags", "array<string>"),
+    ])
+    ctx = SparkKsqlContext(spark)
+    ctx.register_entity(ent)
+    es = ctx.entity_set("fills", path=str(tmp_path / "new"))
+
+    bad_batches = [
+        [(1, "A")],  # wrong arity
+        [(1, "A", 1.0, None, None, None, None, None)],  # wrong arity
+        [("x", "A", 1.0, None, None, None, None)],  # wrong type
+        [(1, "A", 1, None, None, None, None)],  # int into a double column
+        [(None, "A", 1.0, None, None, None, None)],  # NULL into a NOT NULL key
+        [{"id": 1, "px": "1.0"}],
+    ]
+    for bad in bad_batches:
+        with pytest.raises(Exception) as old:
+            spark.createDataFrame(bad, ent.schema)
+        with pytest.raises(type(old.value)) as new:
+            es.add(bad)
+        assert new.value.getCondition() == old.value.getCondition(), bad
+    assert not (tmp_path / "new").exists()
+
+    rows = [
+        (1, "A", 1.5, decimal.Decimal("12.34"), dt.datetime(2024, 1, 1, 10, 0, 0, 123456),
+         dt.date(2024, 1, 1), ["x", "y"]),
+        (2, None, None, None, None, None, None),
+        {"id": 3, "sym": "ü", "px": float("-inf"), "amt": decimal.Decimal("-0.01"),
+         "ts": dt.datetime(1999, 12, 31, 23, 59, 59), "day": dt.date(1970, 1, 1), "tags": []},
+        Row(id=4, sym="B", px=0.0, amt=decimal.Decimal("0"), ts=dt.datetime(2024, 6, 1),
+            day=dt.date(2024, 6, 1), tags=[None]),
+        (5, 7, 0.5, None, None, None, None),  # a string column takes str(7)
+    ]
+    es.add(rows)
+    es.add([])
+    spark.createDataFrame(rows, ent.schema).write.parquet(str(tmp_path / "old"))
+
+    def file_schema(d):
+        return pq.read_schema(sorted(glob.glob(f"{tmp_path}/{d}/*.parquet"))[0]).remove_metadata()
+
+    assert file_schema("new") == file_schema("old")
+    new_df, old_df = spark.read.parquet(str(tmp_path / "new")), spark.read.parquet(str(tmp_path / "old"))
+    assert new_df.schema == old_df.schema
+    assert sorted(new_df.collect()) == sorted(old_df.collect())
+    assert sorted(r["id"] for r in es.to_list()) == [1, 2, 3, 4, 5]
+
+
 def test_entity_ignore_and_table_attributes(spark, tmp_path):
     """[KsqlIgnore] excludes a column from the wire schema; [KsqlTable]
     requires a key and refuses stream handles (attribute parity with

@@ -6,6 +6,7 @@ round artifacts, not here."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import sys
 
@@ -26,6 +27,7 @@ def _load_tool(name):
 probe = _load_tool("streaming_throughput_probe")
 stj = _load_tool("sweep_to_json")
 soak = _load_tool("restart_soak_probe")
+ab = _load_tool("ab")
 
 
 def test_parse_flags_any_order():
@@ -431,3 +433,36 @@ def test_recovery_slope_projection_clamped_at_observed_floor():
          (83_000, 1.8), (166_000, 2.2)])
     assert fit["slope_secs_per_100k_state_rows"] < 0
     assert fit["projected_secs_at_10M_state_rows"] >= 1.8
+
+
+def test_ab_summarizes_canned_benchmark_lines():
+    """tools/ab.py: parse the benchmark's last stdout line, then count
+    wins per metric in its better direction (ties for neither side) and
+    test the median gain against the base's interquartile range."""
+    def line(tput, p50, correct=True):
+        return "# host {}\n" + json.dumps({
+            "correct": correct, "attempted": 30, "failed": 0,
+            "metrics": {"throughput_per_s": {"value": tput, "unit": "1/s"},
+                        "latency_p50_ms": {"value": p50, "unit": "ms"}}})
+
+    base = [(2.4, 330), (2.3, 340), (2.5, 320), (2.4, 335)]
+    change = [(3.5, 200), (3.6, 340), (2.3, 190), (3.4, 210)]
+    pairs = [{"seed": i + 1, "first": "base" if i % 2 == 0 else "change",
+              "base": ab.parse_result(line(*b)), "change": ab.parse_result(line(*c))}
+             for i, (b, c) in enumerate(zip(base, change))]
+    out = ab.summarize(pairs, {"throughput_per_s": "higher", "latency_p50_ms": "lower"})
+    assert out["n_pairs"] == 4 and out["all_correct"]
+    assert out["first"] == ["base", "change", "base", "change"]
+    t = out["metrics"]["throughput_per_s"]
+    assert t["pairs"][2] == [2.5, 2.3]
+    assert t["wins"] == 3  # pair 3 lost
+    assert t["base"]["median"] == pytest.approx(2.4)
+    assert (t["base"]["q1"], t["base"]["q3"]) == (pytest.approx(2.375), pytest.approx(2.425))
+    assert t["change"]["median"] == pytest.approx(3.45)
+    assert t["median_gain_beyond_base_iqr"] and not t["claim"]  # 3 of 4 < 9/10
+    lat = out["metrics"]["latency_p50_ms"]
+    assert lat["wins"] == 3  # pair 2 tied: neither side
+    assert lat["median_change_pct"] == pytest.approx(100.0 * (205 / 332.5 - 1.0))
+    pairs[0]["change"] = ab.parse_result(line(3.5, 200, correct=False))
+    assert not ab.summarize(pairs, {"throughput_per_s": "higher"})["all_correct"]
+    assert ab.quartiles([5.0]) == (5.0, 5.0, 5.0)

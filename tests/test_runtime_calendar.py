@@ -167,6 +167,115 @@ def test_hopping_reader_range(spark, sf_dir, bar_tables):
     assert all(lo <= r["window_start"] < hi for r in rows)
 
 
+def _nan_safe(rows):
+    """Rows as tuples with NaN made comparable (NaN != NaN in Python)."""
+    return [tuple("NaN" if isinstance(v, float) and v != v else v for v in r)
+            for r in rows]
+
+
+def test_pull_reads_keep_spark_sort_order(spark, tmp_path):
+    """Unlimited reads sort on the driver, limited reads in Spark: both
+    must order rows as the plain ``orderBy`` does — NULL first, NaN after
+    every number, ties in any order."""
+    nan = float("nan")
+    rows = [("a", None, 3), ("a", nan, 1), ("a", 2.0, 5), ("a", -1.5, 2),
+            ("a", 2.0, 5), ("a", 2.0, 4), ("a", None, 1), ("a", nan, 0),
+            ("b", 0.0, 1), ("b", -0.0, 0), ("b", None, None), (None, 1.0, 1),
+            ("a", float("inf"), 9), ("a", float("-inf"), 9)]
+    path = str(tmp_path / "t")
+    spark.createDataFrame(rows, "k1 string, k2 double, b long").write.parquet(path)
+    tb = TimeBucket(spark, path, Period.minutes(1), ["k1", "k2"], bucket_col="b")
+    hop = HoppingWindowReader(spark, path, ["k1"], start_col="k2")
+    ref = spark.read.parquet(path)
+
+    def keys(rs, cols):
+        return _nan_safe([tuple(r[c] for c in cols) for r in rs])
+
+    cases = [
+        (lambda lim: tb.to_list(limit=lim), ref, ["k1", "k2", "b"]),
+        (lambda lim: tb.to_list("a", limit=lim), ref.filter("k1 = 'a'"), ["k1", "k2", "b"]),
+        (lambda lim: hop.to_list(["a"], limit=lim), ref.filter("k1 = 'a'"), ["k2"]),
+    ]
+    for read, want_df, cols in cases:
+        for lim in (None, 3, 100):
+            want = want_df.orderBy(*cols)
+            want = (want.limit(lim) if lim else want).collect()
+            got = read(lim)
+            assert keys(got, cols) == keys(want, cols), (cols, lim)
+            if not lim or lim >= len(want):  # ties decide which rows a cut keeps
+                assert sorted(_nan_safe(got), key=repr) == sorted(_nan_safe(want), key=repr)
+
+
+def _jobs_per_call(spark, fn) -> int:
+    """Spark jobs one call runs, counted through a status-tracker job group."""
+    sc = spark.sparkContext
+    group = f"pull-{id(fn)}-{dt.datetime.now().timestamp()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pull_reads_run_one_job_and_see_appends(spark, tmp_path):
+    """After the first read pins the schema, every to_list, read and hop
+    request is one Spark job; the same reader instances still see rows
+    appended by write_bar_tables and by EventSet.add."""
+    from ksql_linq_spark.context import SparkKsqlContext
+    from ksql_linq_spark.entity import Column, Entity
+    from ksql_linq_spark.operators.cascade import write_bar_tables
+
+    schema = "sym string, bucket_start timestamp, close double"
+    day1 = dt.datetime(2024, 1, 1, 10, 0)
+    day2 = dt.datetime(2024, 1, 2, 10, 0)
+
+    def bars(ts, px):
+        return {"bars_1m_live": spark.createDataFrame(
+            [("A", ts, px), ("B", ts, px + 1)], schema)}
+
+    write_bar_tables(bars(day1, 1.0), str(tmp_path))
+    tb = TimeBucket.get(spark, "bars", Period.minutes(1), ["sym"], path_prefix=str(tmp_path))
+    assert [r["close"] for r in tb.to_list("A")] == [1.0]  # pins the schema
+    write_bar_tables(bars(day2, 2.0), str(tmp_path), mode="append")
+    assert [r["close"] for r in tb.to_list("A")] == [1.0, 2.0]
+    assert tb.read(["B"], day2)["close"] == 3.0
+
+    ctx = SparkKsqlContext(spark)
+    ctx.register_entity(Entity("ticks", [Column("sym", "string"),
+                                         Column("window_start", "timestamp"),
+                                         Column("n", "long")]))
+    es = ctx.entity_set("ticks", path=str(tmp_path / "ticks"))
+    es.add([("A", day1, 1)])
+    hop = HoppingWindowReader(spark, str(tmp_path / "ticks"), ["sym"])
+    assert [r["n"] for r in hop.to_list(["A"])] == [1]
+    es.add([("A", day2, 2)])
+    assert [r["n"] for r in hop.to_list(["A"], day1, day2 + dt.timedelta(1))] == [1, 2]
+
+    assert _jobs_per_call(spark, lambda: tb.to_list("A")) == 1
+    assert _jobs_per_call(spark, lambda: tb.read(["A"], day2, 1)) == 1
+    assert _jobs_per_call(spark, lambda: hop.to_list(["A"], day1, day2)) == 1
+
+
+def test_wait_for_bucket_polls_until_the_tier_exists(spark, tmp_path):
+    """A tier with no data files yet is "not ready": the wait times out
+    instead of failing, then the same reader finds the bucket once the
+    tier is written."""
+    from ksql_linq_spark.operators.cascade import write_bar_tables
+
+    tb = TimeBucket.get(spark, "bars", Period.minutes(1), ["sym"], path_prefix=str(tmp_path))
+    ts = dt.datetime(2024, 1, 1, 10, 0)
+    with pytest.raises(TimeoutError):  # missing path
+        tb.wait_for_bucket(["A"], ts, timeout_seconds=1.0, poll_seconds=0.3)
+    (tmp_path / "bars_1m_live").mkdir()
+    with pytest.raises(TimeoutError):  # directory without data files
+        tb.wait_for_bucket(["A"], ts, timeout_seconds=1.0, poll_seconds=0.3)
+    write_bar_tables({"bars_1m_live": spark.createDataFrame(
+        [("A", ts, 1.0)], "sym string, bucket_start timestamp, close double")},
+        str(tmp_path), mode="append")
+    assert tb.wait_for_bucket(["A"], ts, timeout_seconds=30.0)["close"] == 1.0
+
+
 def test_streaming_cascade_end_to_end(spark, sf_dir, state_store):
     from ksql_linq_spark.operators.cascade import start_streaming_cascade
     from ksql_linq_spark.sources import read_stream_from_table, read_table
@@ -204,9 +313,10 @@ def test_streaming_cascade_end_to_end(spark, sf_dir, state_store):
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_bar_table_partition_pruning(spark, sf_dir, tmp_path):
+def test_bar_table_partition_pruning(spark, sf_dir, tmp_path, monkeypatch):
     """write_bar_tables + a bucket-date filter must partition-prune:
-    the scan's PartitionFilters must carry the date predicate."""
+    the scan's PartitionFilters must carry the date predicate, both for
+    a hand-written filter and for TimeBucket.read."""
     from ksql_linq_spark.operators.cascade import CascadePlan, build_cascade, write_bar_tables
     from ksql_linq_spark.sources import read_table
 
@@ -229,6 +339,38 @@ def test_bar_table_partition_pruning(spark, sf_dir, tmp_path):
     # the pruned scan must read strictly fewer files than the full table
     assert q.count() > 0
     assert q.count() < df.count()
+
+    # TimeBucket.read emits the same pruning on its own, widened by a day
+    # each side, and still finds bars across midnight
+    plans = []
+    collect = type(df).collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    tb = TimeBucket(spark, paths["bars_1m_live"], Period.minutes(1), ["event_type"])
+    days = sorted({r["d"] for r in df.select(F.to_date("bucket_start").alias("d"))
+                   .distinct().collect()})
+    assert len(days) > 2
+    first = df.filter(F.to_date("bucket_start") == F.lit(days[1])) \
+        .orderBy("bucket_start").first()
+    got = tb.read([first["event_type"]], first["bucket_start"])
+    assert got["bucket_start"] == first["bucket_start"]
+    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plans[-1])
+    assert pf and "bucket_date" in pf.group(1), plans[-1][:800]
+    # the last bar of the previous day, reached from the next midnight
+    # through the tolerance window
+    prev = df.filter(F.col("event_type") == first["event_type"]) \
+        .filter(F.col("bucket_start") < F.lit(dt.datetime.combine(days[1], dt.time()))) \
+        .orderBy(F.col("bucket_start").desc()).first()
+    midnight = dt.datetime.combine(days[1], dt.time())
+    tol = int((midnight - prev["bucket_start"]).total_seconds() // 60)
+    near = tb.read([first["event_type"]], midnight, tolerance_buckets=tol)
+    exact_midnight = df.filter((F.col("event_type") == first["event_type"]) &
+                               (F.col("bucket_start") == F.lit(midnight))).first()
+    assert near["bucket_start"] == (exact_midnight or prev)["bucket_start"]
 
 
 def test_streaming_cascade_publishes_late_drop_incident(spark):
