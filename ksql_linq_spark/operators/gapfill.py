@@ -11,19 +11,27 @@ Batch form (:func:`gap_fill_bars`): per-key time spine via
 ``sequence(min_bucket, max_bucket)`` + explode + ``last(close)
 ignorenulls`` carry-forward window.  One shuffle (the window partition),
 spine generation is a flatMap — scales linearly with keys × buckets.
+The spine joins back null-safely, so a NULL key is a key like any other.
 
 Streaming form (:func:`streaming_gap_fill`): ``applyInPandasWithState``
 keeping (last_bucket, last_close) per key — state is O(keys), exactly the
-reference's RowMonitor memory bound.
+reference's RowMonitor memory bound — packed into ``GAP_FILL_SHARDS``
+state rows, one per hash shard of the key.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sketch import _fresh
 from .windows import timeframe_seconds
+
+# Streaming gap-fill state shards.  The shard id is the state key, so
+# this must map keys the same way across restarts: a constant, never
+# derived from spark.sql.shuffle.partitions.  16, 64 and 256 shards
+# measured alike on a 3.2k-key batch (SCALING.md).
+GAP_FILL_SHARDS = 64
 
 
 def _on_spine(
@@ -35,17 +43,28 @@ def _on_spine(
     step = timeframe_seconds(timeframe)
     if step is None:
         raise ValueError(f"{what} needs a fixed-duration timeframe")
+    # the spine's columns get fresh names so the join can be null-safe
+    # (a USING join is `=`, and would turn a NULL key's real bars into
+    # synthetic NULL-close rows)
+    taken = set(df.columns)
+    spine_cols = {c: _fresh(f"_spine_{c}", taken) for c in (*keys, bucket_col)}
     spine = (
         df.groupBy(*keys)
         .agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
         .select(
-            *keys,
+            *[F.col(k).alias(spine_cols[k]) for k in keys],
             F.explode(
                 F.sequence("_lo", "_hi", F.expr(f"INTERVAL {step} SECONDS"))
-            ).alias(bucket_col),
+            ).alias(spine_cols[bucket_col]),
         )
     )
-    return spine.join(df, on=[*keys, bucket_col], how="left")
+    joined = spine.join(
+        df, [F.col(s).eqNullSafe(F.col(c)) for c, s in spine_cols.items()], "left"
+    )
+    return joined.select(
+        *[F.col(s).alias(c) for c, s in spine_cols.items()],
+        *[c for c in df.columns if c not in spine_cols],
+    )
 
 
 def gap_fill_bars(
@@ -92,16 +111,29 @@ def streaming_gap_fill(
 ) -> DataFrame:
     """Streaming continuation via applyInPandasWithState.
 
-    State per key: (last_bucket_epoch_ns, last_close).  On each batch, emits
-    the new bars plus synthetic (bucket, prev_close) rows for any gap
-    between state and the earliest new bucket, then advances state.
-    Output schema: key, bucket, close, is_synthetic.
+    Emits the new bars plus synthetic (bucket, prev_close) rows for any
+    gap between a key's previous bar and each new one, then advances the
+    key's state to the batch's last bar in bucket order.  Output schema:
+    key, bucket, close, is_synthetic.
+
+    State is grouped by shard, not by key: ``pmod(xxhash64(key),
+    GAP_FILL_SHARDS)``, one state row per shard holding three parallel
+    arrays — ``keys``, ``last_bucket_epoch_ns``, ``last_close``.  The
+    kernel runs once per shard per batch and is vectorised across the
+    shard's keys, so PySpark's fixed per-group cost (state pickling, an
+    Arrow→pandas slice per column) is paid at most GAP_FILL_SHARDS times
+    per batch instead of once per key.  A batch rewrites every key of
+    each shard it touches.  Checkpoints written by the former per-key
+    layout cannot be resumed: Spark rejects the changed state schema at
+    restart.
     """
-    import pandas as pd  # noqa: PLC0415 — executor-side import
+    import numpy as np  # noqa: PLC0415 — executor-side import
+    import pandas as pd  # noqa: PLC0415
 
     step = timeframe_seconds(timeframe)
     if step is None:
         raise ValueError("streaming gap-fill needs a fixed-duration timeframe")
+    step_ns = step * 1_000_000_000
 
     out_schema = T.StructType(
         [
@@ -117,96 +149,86 @@ def streaming_gap_fill(
     # truncate observed data, not just synthesized rows)
     state_schema = T.StructType(
         [
-            T.StructField("last_bucket_epoch_ns", T.LongType()),
-            T.StructField("last_close", T.DoubleType()),
+            T.StructField("keys", T.ArrayType(T.StringType())),
+            T.StructField("last_bucket_epoch_ns", T.ArrayType(T.LongType())),
+            T.StructField("last_close", T.ArrayType(T.DoubleType())),
         ]
     )
 
-    def fn(key_tuple, pdf_iter, state):
-        # Vectorized gap synthesis (r9).  The original kernel looped
-        # iterrows() per bar — 135x slower on 2000-row groups (66 ms vs
-        # 0.5 ms) — but the MEASURED per-group cost on the typical tiny
-        # group (1-2 bars per key per batch) was pandas itself:
-        # sort_values + Series.astype cost ~250 us/group regardless of
-        # kernel, i.e. ~25 s for a 100k-key flush.  This version
-        # extracts plain numpy up front (int64 ns epochs), skips the
-        # sort when buckets are already monotone (the aggregate output
-        # is), synthesizes gap runs via repeat/arange, and builds ONE
-        # output frame — measured ~17 us/group at 2 rows, 15-20x less
-        # fixed cost, and no per-row Python at any group size.
-        import numpy as np
+    def fn(shard, pdf_iter, state):
+        # All of the shard's chunks at once: a key's rows may be split
+        # across Arrow chunks, and only a sort over the whole batch puts
+        # them in bucket order before gaps are measured.
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        null_bucket = pdf[bucket_col].isna().to_numpy()
+        if null_bucket.any():
+            # NaT would view as INT64_MIN and synthesize an
+            # astronomically long gap run — fail loudly instead
+            raise ValueError(
+                f"streaming_gap_fill: NULL {bucket_col!r} for key "
+                f"{pdf[key].to_numpy()[null_bucket][0]!r}; bucket "
+                "timestamps must be non-null"
+            )
+        s_keys, s_epochs, s_closes = state.get if state.exists else ([], [], [])
+        n_state = len(s_keys)
+        # state keys first, so state key i gets code i; a NULL key is a key
+        codes, uniques = pd.factorize(
+            np.concatenate((np.array(s_keys, dtype=object),
+                            pdf[key].to_numpy(dtype=object))),
+            use_na_sentinel=False,
+        )
+        codes = codes[n_state:]
+        epochs = (pdf[bucket_col].to_numpy()
+                  .astype("datetime64[ns]").astype("int64"))
+        closes = pdf[close_col].to_numpy().astype("float64", copy=False)
+        order = np.lexsort((epochs, codes))
+        codes, epochs, closes = codes[order], epochs[order], closes[order]
 
-        (k,) = key_tuple
-        if state.exists:
-            last_epoch, last_close = state.get
-        else:
-            last_epoch, last_close = None, None
-        out_e: list = []
-        out_c: list = []
-        out_s: list = []
-        step_ns = step * 1_000_000_000
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            if pdf[bucket_col].isna().any():
-                # NaT would view as INT64_MIN and synthesize an
-                # astronomically long gap run — fail loudly instead
-                raise ValueError(
-                    f"streaming_gap_fill: NULL {bucket_col!r} for key "
-                    f"{k!r}; bucket timestamps must be non-null"
-                )
-            epochs = (pdf[bucket_col].to_numpy()
-                      .astype("datetime64[ns]").astype("int64"))
-            closes = pdf[close_col].to_numpy().astype("float64", copy=False)
-            if len(epochs) > 1 and (np.diff(epochs) < 0).any():
-                order = np.argsort(epochs, kind="stable")
-                epochs, closes = epochs[order], closes[order]
-            if last_epoch is None:
-                # no state: the first row opens the series, no gap before it
-                prev_e = np.concatenate(([epochs[0]], epochs[:-1]))
-                prev_c = np.concatenate(([closes[0]], closes[:-1]))
-            else:
-                prev_e = np.concatenate(([last_epoch], epochs[:-1]))
-                prev_c = np.concatenate(([last_close], closes[:-1]))
-            # CEILING division: for a gap distance that is not a step
-            # multiple (mis-aligned buckets) the last filler still lands
-            # strictly before the observed bar, never on/after it
-            counts = np.maximum(-(-(epochs - prev_e) // step_ns) - 1, 0)
-            n_gaps = int(counts.sum())
-            if n_gaps:
-                idx = np.repeat(np.arange(len(epochs)), counts)
-                within = np.arange(n_gaps) - np.repeat(
-                    np.cumsum(counts) - counts, counts
-                )
-                all_e = np.concatenate(
-                    (epochs, prev_e[idx] + (within + 1) * step_ns)
-                )
-                all_c = np.concatenate((closes, prev_c[idx]))
-                all_s = np.concatenate((np.zeros(len(epochs), dtype=bool),
-                                        np.ones(n_gaps, dtype=bool)))
-                order = np.argsort(all_e, kind="stable")
-                out_e.append(all_e[order])
-                out_c.append(all_c[order])
-                out_s.append(all_s[order])
-            else:
-                out_e.append(epochs)
-                out_c.append(closes)
-                out_s.append(np.zeros(len(epochs), dtype=bool))
-            last_epoch, last_close = int(epochs[-1]), float(closes[-1])
-        if last_epoch is not None:
-            state.update((last_epoch, last_close))
-        e = np.concatenate(out_e) if out_e else np.empty(0, dtype="int64")
-        c = np.concatenate(out_c) if out_c else np.empty(0, dtype="float64")
-        s = np.concatenate(out_s) if out_s else np.empty(0, dtype=bool)
+        # each row's predecessor: the previous sorted row of its key, or
+        # the key's state for its first row (itself when there is none,
+        # so no gap opens a new series)
+        prev_e = np.concatenate((epochs[:1], epochs[:-1]))
+        prev_c = np.concatenate((closes[:1], closes[:-1]))
+        first = np.flatnonzero(np.diff(codes, prepend=-1) != 0)
+        prev_e[first], prev_c[first] = epochs[first], closes[first]
+        stated = first[codes[first] < n_state]
+        prev_e[stated] = np.asarray(s_epochs, dtype="int64")[codes[stated]]
+        prev_c[stated] = np.asarray(s_closes, dtype="float64")[codes[stated]]
+
+        # CEILING division: for a gap distance that is not a step
+        # multiple (mis-aligned buckets) the last filler still lands
+        # strictly before the observed bar, never on/after it
+        counts = np.maximum(-(-(epochs - prev_e) // step_ns) - 1, 0)
+        n_gaps = int(counts.sum())
+        idx = np.repeat(np.arange(len(epochs)), counts)
+        within = np.arange(n_gaps) - np.repeat(np.cumsum(counts) - counts, counts)
+        out_k = np.concatenate((codes, codes[idx]))
+        out_e = np.concatenate((epochs, prev_e[idx] + (within + 1) * step_ns))
+        out_c = np.concatenate((closes, prev_c[idx]))
+        out_s = np.arange(len(out_e)) >= len(epochs)
+        order = np.lexsort((out_e, out_k))
+
+        # state advance: each key's last sorted row of this batch
+        last = np.flatnonzero(np.diff(codes, append=len(uniques)) != 0)
+        new_e = np.empty(len(uniques), dtype="int64")
+        new_c = np.empty(len(uniques), dtype="float64")
+        new_e[:n_state], new_c[:n_state] = s_epochs, s_closes
+        new_e[codes[last]], new_c[codes[last]] = epochs[last], closes[last]
+        uniques[pd.isna(uniques)] = None  # factorize reports a NULL key as NaN
+        state.update((uniques.tolist(), new_e.tolist(), new_c.tolist()))
+
         yield pd.DataFrame({
-            key: np.full(len(e), k, dtype=object),
-            bucket_col: e.astype("datetime64[ns]"),
-            close_col: c,
-            "is_synthetic": s,
+            key: uniques[out_k[order]],
+            bucket_col: out_e[order].astype("datetime64[ns]"),
+            close_col: out_c[order],
+            "is_synthetic": out_s[order],
         })
 
-    return bars.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    shard = F.pmod(F.xxhash64(key), F.lit(GAP_FILL_SHARDS)).alias("gap_fill_shard")
+    return (
+        bars.select(key, bucket_col, close_col, shard)
+        .groupBy("gap_fill_shard")
+        .applyInPandasWithState(fn, out_schema, state_schema, "append", "NoTimeout")
     )
 
 

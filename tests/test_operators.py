@@ -221,6 +221,8 @@ def test_interpolate_linear_fills_between_observations(spark):
         ("a", datetime(2024, 1, 1, 0, 45), 40.0),  # 2 missing 15m buckets
         ("b", datetime(2024, 1, 1, 0, 0), 5.0),
         ("b", datetime(2024, 1, 1, 0, 15), 7.0),   # dense: nothing to fill
+        (None, datetime(2024, 1, 1, 0, 0), 1.0),   # a NULL key is a key
+        (None, datetime(2024, 1, 1, 0, 30), 3.0),
     ]
     df = spark.createDataFrame(rows, "k string, b timestamp, v double")
     out = {
@@ -232,7 +234,10 @@ def test_interpolate_linear_fills_between_observations(spark):
     assert out[("a", "2024-01-01T00:30:00")] == (30.0, True)
     assert out[("a", "2024-01-01T00:45:00")] == (40.0, False)
     assert out[("b", "2024-01-01T00:15:00")] == (7.0, False)
-    assert len(out) == 6
+    assert out[(None, "2024-01-01T00:00:00")] == (1.0, False)
+    assert out[(None, "2024-01-01T00:15:00")] == (2.0, True)
+    assert out[(None, "2024-01-01T00:30:00")] == (3.0, False)
+    assert len(out) == 9
 
 
 def test_scd2_history_versions_and_intervals(spark):

@@ -1530,15 +1530,24 @@ def test_streaming_gap_fill_restart_across_gap_soak(spark, state_store):
     """r5 soak: the gap-fill continuation state (last bucket + close)
     must survive a kill/restart so a gap that SPANS the restart is
     synthesized from the pre-restart close — and a pure replay emits no
-    duplicate bars."""
+    duplicate bars.  About 200 keys spread over the state shards, and
+    ``spark.sql.shuffle.partitions`` differs between runs: the shard a
+    key's state lives in must not depend on it."""
     from ksql_linq_spark.operators.gapfill import streaming_gap_fill
 
     src = tempfile.mkdtemp(prefix="gfs_src_")
     ckpt = tempfile.mkdtemp(prefix="gfs_ck_")
     out_dir = tempfile.mkdtemp(prefix="gfs_out_")
     schema = "k string, bucket timestamp, close double"
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    t0 = dt.datetime(2024, 1, 1)
+    keys = ["A", *(f"s{i:03d}" for i in range(200))]
 
-    def start():
+    def at(minute):
+        return t0 + dt.timedelta(minutes=minute)
+
+    def start(partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
         stream = spark.readStream.schema(schema).parquet(src)
         filled = streaming_gap_fill(stream, "k", "bucket", "close", "1m")
         return (
@@ -1555,22 +1564,23 @@ def test_streaming_gap_fill_restart_across_gap_soak(spark, state_store):
         ).parquet(src)
 
     try:
-        # run 1: one real bar, then kill
-        put([("A", dt.datetime(2024, 1, 1, 0, 0), 10.0)])
-        q = start()
+        # run 1: one real bar per key, then kill
+        put([(k, at(0), 10.0 + i) for i, k in enumerate(keys)])
+        q = start(3)
         q.processAllAvailable()
         q.stop()
 
-        # run 2: next bar arrives 3 buckets later — the 2-bucket gap
-        # spans the restart and must carry the PRE-restart close (10.0)
-        put([("A", dt.datetime(2024, 1, 1, 0, 3), 13.0),
-             ("B", dt.datetime(2024, 1, 1, 0, 3), 5.0)])
-        q2 = start()
+        # run 2: each key's next bar arrives 1-3 buckets later; a gap
+        # spans the restart and must carry the PRE-restart close.  B is
+        # a new key with no state.
+        put([(k, at(1 + (i + 2) % 3), 13.0 + i) for i, k in enumerate(keys)]
+            + [("B", at(3), 5.0)])
+        q2 = start(7)
         q2.processAllAvailable()
         q2.stop()
 
         # run 3: pure replay — no new bars
-        q3 = start()
+        q3 = start(5)
         q3.processAllAvailable()
         q3.stop()
 
@@ -1578,14 +1588,21 @@ def test_streaming_gap_fill_restart_across_gap_soak(spark, state_store):
             (r["k"], r["bucket"], r["close"], r["is_synthetic"])
             for r in spark.read.parquet(out_dir).collect()
         )
-        assert got == [
-            ("A", dt.datetime(2024, 1, 1, 0, 0), 10.0, False),
-            ("A", dt.datetime(2024, 1, 1, 0, 1), 10.0, True),
-            ("A", dt.datetime(2024, 1, 1, 0, 2), 10.0, True),
-            ("A", dt.datetime(2024, 1, 1, 0, 3), 13.0, False),
-            ("B", dt.datetime(2024, 1, 1, 0, 3), 5.0, False),
+        assert [g for g in got if g[0] in ("A", "B")] == [
+            ("A", at(0), 10.0, False),
+            ("A", at(1), 10.0, True),
+            ("A", at(2), 10.0, True),
+            ("A", at(3), 13.0, False),
+            ("B", at(3), 5.0, False),
         ], got
+        want = [("B", at(3), 5.0, False)]
+        for i, k in enumerate(keys):
+            want.append((k, at(0), 10.0 + i, False))
+            want += [(k, at(m), 10.0 + i, True) for m in range(1, 1 + (i + 2) % 3)]
+            want.append((k, at(1 + (i + 2) % 3), 13.0 + i, False))
+        assert got == sorted(want), [g for g in got if g not in want][:5]
     finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         for d in (src, ckpt, out_dir):
             shutil.rmtree(d, ignore_errors=True)
 
@@ -2036,4 +2053,131 @@ def test_streaming_gap_fill_null_bucket_raises(spark):
             q.processAllAvailable()
     finally:
         q.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _gap_fill_rows(df):
+    return df.select("k", "bucket", "close", "is_synthetic")
+
+
+def _batch_gap_fill(df):
+    from ksql_linq_spark.operators.gapfill import gap_fill_bars
+
+    return gap_fill_bars(df, ["k"], "bucket", "1m", ohlc=("close",) * 4)
+
+
+def test_streaming_gap_fill_key_split_across_arrow_chunks(spark):
+    """One key's rows split over several Arrow chunks of one batch, out
+    of bucket order: the gaps are measured over the whole batch sorted
+    by bucket, so the output equals batch ``gap_fill_bars`` — no
+    bucket emitted twice, fillers carry the close of the bar before."""
+    from ksql_linq_spark.operators.gapfill import streaming_gap_fill
+
+    tmp = tempfile.mkdtemp()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        ("A", t0, 1.0),
+        ("A", t0 + dt.timedelta(minutes=5), 6.0),
+        ("A", t0 + dt.timedelta(minutes=3), 4.0),
+    ]
+    df = spark.createDataFrame(rows, "k string, bucket timestamp, close double")
+    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
+    try:
+        spark.conf.set(conf, "1")
+        stream = spark.readStream.schema(df.schema).parquet(f"{tmp}/in")
+        filled = streaming_gap_fill(stream, "k", "bucket", "close", "1m")
+        _drain(start_memory_sink(filled, "t_gap_chunks", "append"))
+    finally:
+        spark.conf.set(conf, old)
+    got = _gap_fill_rows(spark.table("t_gap_chunks"))
+    want = _gap_fill_rows(_batch_gap_fill(df))
+    assert got.count() == want.count() == 6
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_gap_fill_null_key_streaming_matches_batch(spark):
+    """A NULL key is a key: its real bars stay real and its gaps are
+    filled from its own closes, in the batch and the streaming form
+    alike (the batch spine joins back null-safely)."""
+    from ksql_linq_spark.operators.gapfill import streaming_gap_fill
+
+    tmp = tempfile.mkdtemp()
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (None, t0, 7.0),
+        (None, t0 + dt.timedelta(minutes=2), 8.0),
+        ("A", t0, 1.0),
+        ("A", t0 + dt.timedelta(minutes=1), 2.0),
+    ]
+    df = spark.createDataFrame(rows, "k string, bucket timestamp, close double")
+    df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
+    stream = spark.readStream.schema(df.schema).parquet(f"{tmp}/in")
+    filled = streaming_gap_fill(stream, "k", "bucket", "close", "1m")
+    _drain(start_memory_sink(filled, "t_gap_null_key", "append"))
+    got = _gap_fill_rows(spark.table("t_gap_null_key"))
+    want = _gap_fill_rows(_batch_gap_fill(df))
+    assert sorted(
+        (r["bucket"], r["close"], r["is_synthetic"])
+        for r in want.where(F.col("k").isNull()).collect()
+    ) == [
+        (t0, 7.0, False),
+        (t0 + dt.timedelta(minutes=1), 7.0, True),
+        (t0 + dt.timedelta(minutes=2), 8.0, False),
+    ]
+    assert got.count() == want.count() == 5
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_streaming_gap_fill_sharded_parity(spark, state_store):
+    """500 keys over 3 batches with random gaps, rows shuffled within
+    each batch: the streamed output equals batch ``gap_fill_bars`` over
+    all input, and the state holds one row per shard (at most 64), not
+    one per key."""
+    import random
+
+    from ksql_linq_spark.operators.gapfill import streaming_gap_fill
+
+    rng = random.Random(5)
+    tmp = tempfile.mkdtemp(prefix="gfp_")
+    schema = "k string, bucket timestamp, close double"
+    t0 = dt.datetime(2024, 1, 1)
+    batches = []
+    for b in range(3):
+        rows = [
+            (f"k{i:03d}", t0 + dt.timedelta(minutes=m), float(rng.randint(1, 999)))
+            for i in range(500)
+            for m in range(b * 20, (b + 1) * 20)
+            if rng.random() < 0.3
+        ]
+        rng.shuffle(rows)
+        batches.append(rows)
+    try:
+        spark.createDataFrame(batches[0], schema).coalesce(1).write.parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(schema).parquet(f"{tmp}/in")
+        filled = streaming_gap_fill(stream, "k", "bucket", "close", "1m")
+        q = (
+            filled.writeStream.format("memory").queryName("t_gap_shards")
+            .option("checkpointLocation", f"{tmp}/ck").outputMode("append").start()
+        )
+        q.processAllAvailable()
+        for rows in batches[1:]:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(f"{tmp}/in")
+            q.processAllAvailable()
+        ops = [p["stateOperators"] for p in q.recentProgress if p["stateOperators"]][-1]
+        q.stop()
+        assert 0 < ops[0]["numRowsTotal"] <= 64, ops
+        got = _gap_fill_rows(spark.table("t_gap_shards"))
+        want = _gap_fill_rows(_batch_gap_fill(spark.read.parquet(f"{tmp}/in")))
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+        assert got.where("is_synthetic").count() > 0
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -136,7 +136,7 @@ RUNTIME_SURFACE = [
     ("operators/cascade", "start_streaming_cascade",
      "multi-timeframe OHLC cascade as chained checkpointed queries"),
     ("operators/gapfill", "streaming_gap_fill",
-     "carry-forward continuation via applyInPandasWithState"),
+     "carry-forward continuation via applyInPandasWithState, state in 64 key-hash shards"),
     ("runtime", "TimeBucket", "pull-read API over per-timeframe bar tables"),
     ("runtime", "HoppingWindowReader", "pull-read over hopping-window tables"),
     ("sources", "read_stream_from_table", "file-stream source over driver parquet"),
