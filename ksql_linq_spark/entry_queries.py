@@ -24,7 +24,7 @@ from . import functions as KF
 from .operators.ohlc import ohlc_bars
 from .operators.windows import bucket_start
 from .query.builder import from_df
-from .sources import read_table
+from .sources import evict_foreign_apps, read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -66,11 +66,10 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if got is None:
         d = _t(spark, sf_dir, "documents")
         got = minhash_lsh_pairs(d, num_hashes=8, bands=4, shingle_n=3)
-        # read_table's bound-and-clear discipline: entries keyed by
-        # stopped applications must not accumulate for the process
-        # lifetime (each pins a SparkSession + DataFrame graph)
-        if len(_LSH_PAIRS_PLANS) > 64:
-            _LSH_PAIRS_PLANS.clear()
+        # read_table's bound: entries keyed by stopped applications must
+        # not accumulate for the process lifetime (each pins a
+        # SparkSession + DataFrame graph)
+        evict_foreign_apps(_LSH_PAIRS_PLANS, key[0], 64)
         _LSH_PAIRS_PLANS[key] = got
     return got
 
@@ -1042,7 +1041,7 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_embedding_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (operators/dedup.embedding_cosine_pairs): unit-vector dot as a zip_with fold."""
+    """Embedding-cosine near-dup pairs (operators/dedup.embedding_cosine_pairs_blocked): exact pairwise cosine through the shared numpy fold."""
     from .operators.dedup import embedding_cosine_pairs_blocked
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1280,14 +1279,17 @@ def calendar_session_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.calendar import in_session_join, make_daily_schedule
 
     ev = _t(spark, sf_dir, "events").withColumn("market", F.lit("X"))
+    open_hour, close_hour = 9, 17
     sched = make_daily_schedule(
-        spark, ["X"], "2024-01-01", "2024-01-31", open_hour=9, close_hour=17
+        spark, ["X"], "2024-01-01", "2024-01-31",
+        open_hour=open_hour, close_hour=close_hour,
     )
     # the schedule is synthesized from parameters, so its longest
-    # session (8 h) is caller-known: passing bucket_width skips the
-    # probe job in_session_join otherwise runs at build (§7.3)
+    # session is caller-known: passing bucket_width skips the probe job
+    # in_session_join otherwise runs at build (§7.3)
     gated = in_session_join(
-        ev, sched, row_key="market", ts_col="ts", bucket_width=8 * 3600.0
+        ev, sched, row_key="market", ts_col="ts",
+        bucket_width=(close_hour - open_hour) * 3600.0,
     )
     return gated.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("session_day")
@@ -5143,7 +5145,8 @@ def _dk_dot64(x: str, y: str) -> str:
 
 
 def _dk_unit64(e: str) -> str:
-    """DuckDB twin of similarity._unit_vec (element / L2 norm)."""
+    """DuckDB unit vector (element / L2 norm): the normalise step of the
+    unit-vector cosine form (similarity._cosine_chunks with unit=True)."""
     return f"list_transform({e}, x -> x / sqrt({_dk_dot64(e, e)}))"
 
 
@@ -5176,7 +5179,7 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import knn_graph_blocked
 
     e = _t(spark, sf_dir, "embeddings")
-    return knn_graph_blocked(e, "label", k=5, dim=64)
+    return knn_graph_blocked(e, "label", k=5)
 
 
 @q(
@@ -5211,7 +5214,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import semantic_dedup_blocked
 
     e = _t(spark, sf_dir, "embeddings")
-    return semantic_dedup_blocked(e, "label", threshold=0.4, dim=64)
+    return semantic_dedup_blocked(e, "label", threshold=0.4)
 
 
 @q(
@@ -6984,10 +6987,7 @@ def similarity_ann_join_q(
     e = _t(spark, sf_dir, "embeddings")
     lq = e.filter(F.col("vec_id") % 100 == 0)
     ann = (
-        # kernel="arrow": cogrouped numpy scoring per IVF cell —
-        # bit-identical cos to the expression path (same IEEE fold),
-        # measured 32.3 s -> 1.9 s on the 10x corpus
-        ann_join(lq, e, k=2, n_centroids=8, n_probes=4, dim=64, kernel="arrow")
+        ann_join(lq, e, k=2, n_centroids=8, n_probes=4, dim=64)
         .where(F.col("left_vec_id") != F.col("right_vec_id"))
         .withColumn(
             "rn",

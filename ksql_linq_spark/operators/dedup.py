@@ -306,48 +306,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def embedding_cosine_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    dim: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by embedding cosine >= threshold (exact, pairwise).
-
-    With ``dim`` given, the dot product and norms are unrolled
-    codegen'd Add chains casting each float element to double in place
-    (array-level F.transform would be inlined per element_at by
-    CollapseProject — see similarity.dot).  The whole cosine stays
-    whole-stage-codegen even when the optimizer folds the threshold
-    filter into the join condition.  Quadratic — correct baseline for
-    modest partitions; the scale path is
-    similarity.random_projection_buckets -> join within buckets.
-    """
-    from .similarity import dot, norm
-
-    cast_elems = dim is not None
-
-    def vec(side: str) -> Column:
-        if cast_elems:
-            return F.col(f"{side}.{vec_col}")
-        return F.transform(F.col(f"{side}.{vec_col}"), lambda x: x.cast("double"))
-
-    a, b = df.alias("a"), df.alias("b")
-    return (
-        a.join(b, on=F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            (
-                dot(vec("a"), vec("b"), dim, cast_elems)
-                / (norm(vec("a"), dim, cast_elems) * norm(vec("b"), dim, cast_elems))
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
-
-
 def embedding_cosine_pairs_blocked(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -355,15 +313,11 @@ def embedding_cosine_pairs_blocked(
     threshold: float = 0.95,
     max_rows: int = 200_000,
 ) -> DataFrame:
-    """Exact cosine near-dup pairs via a numpy block kernel (mapInPandas).
-
-    Same results as :func:`embedding_cosine_pairs` BIT-FOR-BIT: the dot
-    products accumulate dimension-by-dimension (``acc += a[:,i]*b[:,i]``),
-    i.e. the identical left-to-right IEEE-754 fold the Column expression
-    and the DuckDB list_reduce oracle perform — numpy elementwise ops are
-    exact IEEE doubles, only vectorized ACROSS pairs, so no
-    reassociation happens along the summation axis.  ~10x faster than
-    evaluating the unrolled expression per pair in the join condition.
+    """Exact cosine near-dup pairs (id_a < id_b, cos >= threshold) via
+    the shared numpy fold (similarity._cosine_chunks, mapInPandas):
+    bit-for-bit the cosine of similarity.cosine's Column expression and
+    the DuckDB list_reduce oracle, ~10x faster than evaluating the
+    unrolled expression per pair in a join condition.
 
     The comparison side is collected to the driver and shipped to every
     task (n*d doubles — the same footprint a broadcast join would ship).
@@ -380,19 +334,16 @@ def embedding_cosine_pairs_blocked(
 
     from pyspark.sql import types as T
 
-    # gate folded into the ordered fetch (limit gate+1): ONE execution
-    # of the upstream plan decides the regime AND fetches the vectors —
-    # a separate count() probe would run the (possibly expensive)
-    # upstream a second time (connected_components discipline).  toArrow
-    # (not collect) — at the 200k x dim bound a row collect deserializes
-    # tens of millions of Python floats (graph.py Arrow-fetch rule)
-    tbl = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(id_col)
-        .limit(max_rows + 1)
-        .toArrow()
+    from .graph import _fetch_if_small
+    from .similarity import _as_matrix, _cosine_chunks, _require_integral_ids, _work_partitions
+
+    _require_integral_ids("embedding_cosine_pairs_blocked", (df, id_col))
+    # one execution of the upstream plan decides the regime AND fetches
+    # the vectors, as Arrow (graph._fetch_if_small)
+    tbl = _fetch_if_small(
+        df.select(F.col(id_col), F.col(vec_col)).orderBy(id_col), max_rows
     )
-    if tbl.num_rows > max_rows:
+    if tbl is None:
         raise ValueError(
             f"embedding_cosine_pairs_blocked: more than {max_rows} rows hit "
             f"the exact-quadratic gate (max_rows={max_rows}); this op is "
@@ -400,12 +351,7 @@ def embedding_cosine_pairs_blocked(
             "corpus scale, or raise max_rows deliberately"
         )
     ids = np.array(tbl.column(id_col).to_pylist(), dtype=np.int64)
-    mat = np.array(tbl.column(vec_col).to_pylist(), dtype=np.float64)  # float->double exact
-    ndim = mat.shape[1]
-    acc = np.zeros(len(ids), dtype=np.float64)
-    for i in range(ndim):  # same fold order as the expression/oracle
-        acc += mat[:, i] * mat[:, i]
-    norms = np.sqrt(acc)
+    mat = _as_matrix(tbl.column(vec_col).to_pylist())
 
     out_schema = T.StructType(
         [
@@ -415,31 +361,11 @@ def embedding_cosine_pairs_blocked(
         ]
     )
 
-    # the dots matrix is block_rows x n doubles — cap it at ~64 MB so a
-    # 10x corpus doesn't silently turn each Arrow batch into a
-    # multi-GB allocation with 64 full passes of memory traffic
-    # (observed at 20k vectors: 1.6 GB matrix, ~10 min task).
-    # Floor is 16 (not 256): a 256-row floor would let the cap degrade
-    # to 256*n*8 B (~410 MB at 200k vectors), defeating the fix exactly
-    # at the scales it targets.
-    block_rows = max(16, int(8_000_000 / max(tbl.num_rows, 1)))
-
     def run(batches):
         for pdf in batches:
-            for s in range(0, len(pdf), block_rows):
-                sub = pdf.iloc[s : s + block_rows]
-                a_ids = sub[id_col].to_numpy(dtype=np.int64)
-                a_mat = np.array(list(sub[vec_col]), dtype=np.float64)
-                if len(a_ids) == 0:
-                    continue
-                a_acc = np.zeros(len(a_ids), dtype=np.float64)
-                dots = np.zeros((len(a_ids), len(ids)), dtype=np.float64)
-                for i in range(ndim):
-                    col = a_mat[:, i]
-                    a_acc += col * col
-                    dots += col[:, None] * mat[None, :, i]
-                a_norms = np.sqrt(a_acc)
-                cos = dots / (a_norms[:, None] * norms[None, :])
+            batch_ids = pdf[id_col].to_numpy(dtype=np.int64)
+            for s, cos in _cosine_chunks(pdf[vec_col], mat):
+                a_ids = batch_ids[s : s + len(cos)]
                 ai, bi = np.nonzero(
                     (cos >= threshold) & (a_ids[:, None] < ids[None, :])
                 )
@@ -447,22 +373,9 @@ def embedding_cosine_pairs_blocked(
                     {"id_a": a_ids[ai], "id_b": ids[bi], "cos": cos[ai, bi]}
                 )
 
-    # partition by WORK, not input bytes: the n-vector parquet is a few
-    # MB (1-2 file splits) but the kernel is O(n^2) — without an
-    # explicit repartition the whole product runs on 1-2 tasks no
-    # matter how many cores the cluster has.  Pair values are
-    # partitioning-invariant, so results are unchanged.
-    sess = df.sparkSession
-    parts = min(
-        2048,
-        max(
-            sess.sparkContext.defaultParallelism,
-            -(-tbl.num_rows // max(block_rows, 1)),
-        ),
-    )
     return (
         df.select(F.col(id_col), F.col(vec_col))
-        .repartition(parts)
+        .repartition(_work_partitions(df.sparkSession, tbl.num_rows))
         .mapInPandas(run, out_schema)
     )
 
@@ -473,8 +386,6 @@ def semantic_dedup_blocked(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.95,
-    dim: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: vectors whose cosine
     exceeds ``threshold`` within a block are near-duplicates; each
@@ -493,43 +404,10 @@ def semantic_dedup_blocked(
     from k-means cells).
     """
     from .graph import dedup_clusters
-    from .similarity import _unit_vec
+    from .similarity import _require_integral_ids
 
-    if kernel not in ("arrow", "expr"):
-        raise ValueError(f"kernel must be arrow|expr, got {kernel!r}")
-    if kernel == "arrow":
-        # groupBy(block).applyInPandas: shuffle moves VECTORS, not pair
-        # rows; the block cosine matrix accumulates dimension-at-a-time
-        # — the same IEEE fold as the expression path and the oracle
-        # (see similarity.knn_graph_blocked for the kernel regime
-        # measurements)
-        pairs = _block_pairs_arrow(df, block_col, vec_col, id_col, threshold)
-    else:
-        # pure-JVM path: normalize once per VECTOR pre-join; per-pair
-        # cosine is a zip_with/aggregate fold of unit vectors — the
-        # huge unrolled chain blows the JIT method limit at pair
-        # cardinality
-        a = df.select(
-            F.col(block_col).alias("_blk"),
-            F.col(id_col).alias("id_a"),
-            _unit_vec(vec_col, dim).alias("_vn"),
-        )
-        b = df.select(
-            F.col(block_col).alias("_blk"),
-            F.col(id_col).alias("id_b"),
-            _unit_vec(vec_col, dim).alias("_wn"),
-        )
-        cos = F.aggregate(
-            F.zip_with("_vn", "_wn", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        pairs = (
-            a.join(b, "_blk")
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(cos >= threshold)
-            .select("id_a", "id_b")
-        )
+    _require_integral_ids("semantic_dedup_blocked", (df, id_col))
+    pairs = _block_pairs_arrow(df, block_col, vec_col, id_col, threshold)
     clusters = dedup_clusters(df.select(id_col), pairs, id_col)
     return clusters.select(
         id_col, "cluster_id", (F.col("cluster_id") == F.col(id_col)).alias("keep")
@@ -575,12 +453,16 @@ def _block_pairs_arrow(
     df: DataFrame, block_col: str, vec_col: str, id_col: str, threshold: float
 ) -> DataFrame:
     """Per-block (id_a < id_b, cos >= threshold) pair kernel for
-    :func:`semantic_dedup_blocked` — deterministic dimension-at-a-time
-    accumulation over unit vectors, vectorized across the block."""
+    :func:`semantic_dedup_blocked`: groupBy(block).applyInPandas moves
+    VECTORS, not pair rows, and each block is scored with the shared
+    fold over unit vectors (similarity._cosine_chunks, ``unit=True`` —
+    the oracle's normalise-then-dot form)."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
+
+    from .similarity import _cosine_chunks
 
     out_schema = T.StructType(
         [
@@ -590,24 +472,14 @@ def _block_pairs_arrow(
     )
 
     def blk(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype(
-                {"id_a": "int64", "id_b": "int64"}
-            )
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        ndim = mat.shape[1]
-        acc = np.zeros(n, dtype=np.float64)
-        for i in range(ndim):  # same fold order as expression/oracle
-            acc += mat[:, i] * mat[:, i]
-        un = mat / np.sqrt(acc)[:, None]
-        dots = np.zeros((n, n), dtype=np.float64)
-        for i in range(ndim):
-            col = un[:, i]
-            dots += col[:, None] * col[None, :]
-        ai, bi = np.nonzero((dots >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame({"id_a": ids[ai], "id_b": ids[bi]})
+        out_a, out_b = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+        for s, cos in _cosine_chunks(pdf[vec_col], unit=True):
+            a_ids = ids[s : s + len(cos)]
+            ai, bi = np.nonzero((cos >= threshold) & (a_ids[:, None] < ids[None, :]))
+            out_a.append(a_ids[ai])
+            out_b.append(ids[bi])
+        return pd.DataFrame({"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)})
 
     return (
         df.select(block_col, id_col, vec_col)

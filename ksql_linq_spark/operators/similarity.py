@@ -1,15 +1,44 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine` / :func:`dot` — pure Column expressions (F.zip_with +
-  F.aggregate): JVM-side fold, deterministic left-to-right order.
-- :func:`brute_force_topk` — exact cosine top-k against one query vector:
-  one projection + one ORDER BY LIMIT k (Spark's TakeOrdered — no full
-  sort at scale).
-- :func:`random_projection_buckets` — sign-LSH bucketing: deterministic
-  pseudo-random hyperplanes derived from md5 (engine-portable, no RNG
-  state).  ANN = search only the query's bucket (or multi-probe its
-  neighbors).  This is the 100 TB path: bucket key shuffles once,
-  candidate sets are bucket-bounded.
+Column primitives:
+
+- :func:`dot` / :func:`norm` / :func:`cosine` — pure Column expressions
+  (unrolled chain or F.zip_with + F.aggregate): JVM-side fold,
+  deterministic left-to-right order.
+
+Exact search:
+
+- :func:`brute_force_topk` — exact cosine top-k against one query
+  vector (one projection + TakeOrdered).
+- :func:`brute_force_top1_ids` — every query row's exact nearest
+  neighbour over the corpus (the verification leg of an ANN join).
+- :func:`knn_graph_blocked` — every node's top-k neighbours within its
+  block.
+- :func:`int8_topk` — exact top-k in the int8-quantized domain.
+
+Approximate search and indexes:
+
+- sign-LSH: :func:`random_projection_buckets`, :func:`lsh_topk`,
+  :func:`build_ann_index` / :func:`query_ann_index`;
+- IVF: :func:`ivf_assign`, :func:`ivf_topk`, :func:`build_ivf_index` /
+  :func:`query_ivf_index`, :func:`ann_join` (IVF k-NN join);
+- PQ: :func:`pq_train`, :func:`quantize_embeddings_pq`,
+  :func:`pq_topk`, :func:`ivfpq_topk`.
+
+Embedding hygiene and transforms: :func:`embedding_centroids`,
+:func:`centroid_outliers`, :func:`norm_outliers`,
+:func:`quantize_embeddings_int8`, :func:`reduce_dim_rp`,
+:func:`standardize_embeddings`.
+
+The shared fold contract: every exact cosine computed outside a Column
+expression goes through :func:`_cosine_chunks` — float64 operands,
+dot products and squared norms accumulated one dimension at a time
+(``acc += a[:, i] * b[:, i]``).  That is the same left-to-right IEEE-754
+fold as :func:`cosine` and the DuckDB ``list_reduce`` oracles, so the
+numpy operators (:func:`brute_force_top1_ids`, :func:`knn_graph_blocked`,
+:func:`ann_join`, the IVF cell ranking, and dedup's
+``embedding_cosine_pairs_blocked`` / ``semantic_dedup_blocked``) are
+bit-identical to both.  Their id columns must be integral.
 """
 
 from __future__ import annotations
@@ -83,6 +112,108 @@ def cosine(
     )
 
 
+# One cosine chunk holds at most ~64 MB of float64: an uncapped block
+# turned one Arrow batch into a 1.6 GB matrix (a ~10 min task) at 20k
+# vectors.  The 16-row floor (not 256) keeps the cap meaningful at
+# 200k columns, where 256 rows would already be ~410 MB.
+_COS_CHUNK_CELLS = 8_000_000
+
+
+def _chunk_rows(n_cols: int) -> int:
+    """Rows per cosine chunk against ``n_cols`` columns."""
+    return max(16, _COS_CHUNK_CELLS // max(n_cols, 1))
+
+
+def _work_partitions(sess, n: int) -> int:
+    """Partition count for a mapInPandas leg that scores corpus rows
+    against an ``n``-row block shipped to every task: by WORK, not input
+    bytes — a few-MB vector parquet is 1-2 file splits, and an O(n^2)
+    kernel on 1-2 tasks ignores the rest of the cluster.  Cosine values
+    do not depend on partitioning."""
+    return min(2048, max(sess.sparkContext.defaultParallelism, -(-n // _chunk_rows(n))))
+
+
+def _as_matrix(rows):
+    """Row vectors as a 2-D float64 matrix (float32 -> double is exact)."""
+    import numpy as np
+
+    if isinstance(rows, np.ndarray) and rows.ndim == 2:
+        return rows.astype(np.float64, copy=False)
+    return np.array(list(rows), dtype=np.float64)
+
+
+def _fold(x, y):
+    """Sum of ``x * y`` over the last axis, left to right one dimension
+    at a time (broadcasting over the leading axes)."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(x.shape[:-1], y.shape[:-1]))
+    for i in range(x.shape[-1]):
+        acc += x[..., i] * y[..., i]
+    return acc
+
+
+def _cosine_chunks(a, b=None, unit: bool = False):
+    """Yield ``(start, cos)``: the exact cosine matrix of rows
+    ``a[start:start + len(cos)]`` against every row of ``b`` (``b=None``:
+    ``a`` against itself), in row chunks of at most ``_COS_CHUNK_CELLS``
+    cells.  See the module docstring for the fold contract.
+
+    - ``unit=False``: ``dot / (norm_a * norm_b)``;
+    - ``unit=True``: every row is first normalised (``x / norm``), then
+      the unit vectors' dot is folded — the normalise-then-dot form.
+
+    A zero-norm row gives NaN cosines; callers decide how NaN ranks.
+    """
+    import numpy as np
+
+    A = _as_matrix(a)
+    B = A if b is None else _as_matrix(b)
+    if len(A) == 0 or len(B) == 0:
+        return
+    with np.errstate(divide="ignore", invalid="ignore"):
+        if unit:
+            A = A / np.sqrt(_fold(A, A))[:, None]
+            B = A if b is None else B / np.sqrt(_fold(B, B))[:, None]
+        else:
+            b_norm = np.sqrt(_fold(B, B))
+        rows = _chunk_rows(len(B))
+        for s in range(0, len(A), rows):
+            sub = A[s : s + rows]
+            dots = _fold(sub[:, None, :], B[None, :, :])
+            if not unit:
+                dots /= np.sqrt(_fold(sub, sub))[:, None] * b_norm[None, :]
+            yield s, dots
+
+
+def _require_integral_ids(op: str, *frames_cols) -> None:
+    """Build-time check for the numpy cosine operators, which carry ids
+    as int64: each ``(df, id_col)`` pair must name an integral column."""
+    from pyspark.sql import types as T
+
+    for df, col in frames_cols:
+        dt = df.schema[col].dataType
+        if not isinstance(dt, T.IntegralType):
+            raise TypeError(
+                f"{op}: id column {col!r} is {dt.simpleString()}; the "
+                "exact-cosine kernel needs an integral id column — map "
+                "ids to BIGINT first"
+            )
+
+
+def _nearest_cells(query_vec, centroids, n_probes: int, cells=None) -> list[int]:
+    """The ``n_probes`` cells whose centroids are nearest ``query_vec``
+    by exact cosine, ties by cell id; a zero-norm side scores -1.
+    ``cells[j]`` is centroid j's cell id (default: j)."""
+    import numpy as np
+
+    ids = np.arange(len(centroids)) if cells is None else np.asarray(cells)
+    for _, cos in _cosine_chunks([query_vec], centroids):
+        score = np.where(np.isnan(cos[0]), -1.0, cos[0])
+        return [int(c) for c in ids[np.lexsort((ids, -score))][:n_probes]]
+    return []
+
+
 def brute_force_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -116,14 +247,11 @@ def brute_force_top1_ids(
     neighbor id — the brute-force verification leg of an ANN join.
 
     Bit-identical to the expression form (cross join + unrolled cosine
-    + ``row_number() OVER (ORDER BY cos DESC, rid)``): the numpy block
-    kernel accumulates dot products and norms dimension-at-a-time
-    (``acc += a[:,i]*b[:,i]``) — the identical left-associative IEEE-754
-    fold as the Column expression and the DuckDB ``list_reduce`` oracle,
-    vectorized ACROSS pairs only — and the per-query winner is picked by
-    exact-equality argmax with min-id tie-break, matching the window's
-    (cos DESC, rid) order.  NaN cosines (zero-norm vectors) rank FIRST,
-    as in both engines' descending sorts.
+    + ``row_number() OVER (ORDER BY cos DESC, rid)``): cosines come from
+    the shared fold (:func:`_cosine_chunks`), and the per-query winner
+    is picked by exact-equality argmax with min-id tie-break, matching
+    the window's (cos DESC, rid) order.  NaN cosines (zero-norm vectors)
+    rank FIRST, as in both engines' descending sorts.
 
     The query side is the bounded side (collected and shipped to every
     task — the footprint a broadcast join would ship), gated at
@@ -137,13 +265,13 @@ def brute_force_top1_ids(
 
     from pyspark.sql import types as T
 
-    qt = (
-        query_df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(id_col)
-        .limit(max_queries + 1)
-        .toArrow()
+    from .graph import _fetch_if_small
+
+    _require_integral_ids("brute_force_top1_ids", (df, id_col), (query_df, id_col))
+    qt = _fetch_if_small(
+        query_df.select(F.col(id_col), F.col(vec_col)).orderBy(id_col), max_queries
     )
-    if qt.num_rows > max_queries:
+    if qt is None:
         raise ValueError(
             f"brute_force_top1_ids: more than {max_queries} query rows hit "
             "the exact-verify gate — this leg is |queries| x corpus by "
@@ -161,32 +289,16 @@ def brute_force_top1_ids(
     if qt.num_rows == 0:
         return sess.createDataFrame([], out_schema).select("lid", F.col("rid").alias("exact_rid"))
     q_ids = np.array(qt.column(id_col).to_pylist(), dtype=np.int64)
-    q_mat = np.array(qt.column(vec_col).to_pylist(), dtype=np.float64)  # float->double exact
-    ndim = q_mat.shape[1]
-    q_acc = np.zeros(len(q_ids), dtype=np.float64)
-    for i in range(ndim):  # same fold order as the expression/oracle
-        q_acc += q_mat[:, i] * q_mat[:, i]
-    q_norms = np.sqrt(q_acc)
+    q_mat = _as_matrix(qt.column(vec_col).to_pylist())
     m = len(q_ids)
-    # cap the m x block dots matrix at ~64 MB (embedding_cosine_pairs_
-    # blocked discipline), floor 16 rows
-    block_rows = max(16, int(8_000_000 / m))
 
     def run(batches):
         for pdf in batches:
-            for s in range(0, len(pdf), block_rows):
-                sub = pdf.iloc[s : s + block_rows]
-                c_ids = sub[id_col].to_numpy(dtype=np.int64)
-                if len(c_ids) == 0:
-                    continue
-                c_mat = np.array(list(sub[vec_col]), dtype=np.float64)
-                c_acc = np.zeros(len(c_ids), dtype=np.float64)
-                dots = np.zeros((m, len(c_ids)), dtype=np.float64)
-                for i in range(ndim):
-                    col = c_mat[:, i]
-                    c_acc += col * col
-                    dots += q_mat[:, i][:, None] * col[None, :]
-                cos = dots / (q_norms[:, None] * np.sqrt(c_acc)[None, :])
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            # corpus rows are the chunked side: |queries| columns each
+            for s, cos_cq in _cosine_chunks(pdf[vec_col], q_mat):
+                c_ids = ids[s : s + len(cos_cq)]
+                cos = cos_cq.T
                 # self-pairs excluded exactly as the join's lid != rid
                 valid = q_ids[:, None] != c_ids[None, :]
                 out_l, out_r, out_c = [], [], []
@@ -208,16 +320,9 @@ def brute_force_top1_ids(
                     out_c.append(row[np.flatnonzero(c_ids == rid)[0]])
                 yield pd.DataFrame({"lid": out_l, "rid": out_r, "cos": out_c})
 
-    parts = min(
-        2048,
-        max(
-            sess.sparkContext.defaultParallelism,
-            -(-qt.num_rows // max(block_rows, 1)),
-        ),
-    )
     winners = (
         df.select(F.col(id_col), F.col(vec_col))
-        .repartition(parts)
+        .repartition(_work_partitions(sess, m))
         .mapInPandas(run, out_schema)
     )
     # per-block winners -> global winner per query: lexicographic max of
@@ -600,18 +705,7 @@ def ivf_topk(
     distribution (clustered corpora), sign-LSH needs no training.
     """
     assigned, centroids = ivf_assign(df, n_centroids, vec_col, id_col, seed)
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        import math
-
-        dp = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dp / (na * nb) if na and nb else -1.0
-
-    probe_cells = sorted(
-        range(len(centroids)), key=lambda c: -_cos(query_vec, centroids[c])
-    )[:n_probes]
+    probe_cells = _nearest_cells(query_vec, centroids, n_probes)
     cand = assigned.filter(F.col("cell").isin(probe_cells)).drop("cell")
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)
 
@@ -729,8 +823,6 @@ def knn_graph_blocked(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 5,
-    dim: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """k-nearest-neighbor GRAPH (every node's top-k by cosine) computed
     WITHIN blocks — the corpus-scale kNN recipe: an all-pairs kNN over
@@ -740,80 +832,20 @@ def knn_graph_blocked(
     |block|² and blocks run fully in parallel.  Recall is whatever the
     blocker gives — IVF cells with multi-probe for high recall.
 
-    One self-join on the block key (the only shuffle) + a per-node
-    row_number window (same key, exchange reused).  Ties break by
-    neighbor id.
-
-    KERNEL CHOICE (measured at sf0.1, 2k vectors / 400k in-block
-    pairs):
-    - ``"arrow"`` (default): groupBy(block).applyInPandas — the shuffle
-      moves only the VECTORS (2k rows), never pair rows, and the
-      block's cosine matrix accumulates dimension-at-a-time
-      (``dots += un[:,i] ⊗ un[:,i]``) — the identical left-assoc
-      IEEE fold as the expression path and the DuckDB oracle,
-      vectorized ACROSS pairs.  ~1 s end-to-end.
-    - ``"expr"``: block-keyed self-join + zip_with/aggregate fold over
-      pre-normalized unit vectors + per-node window — pure JVM, ~6.7 s
-      (the interpreted fold costs ~240 ns/element at pair cardinality;
-      the 64-wide unrolled cast chain is WORSE here, +14 s, because its
-      ~320-node method exceeds the JIT bytecode limit — the opposite
-      regime from join-condition context, see similarity.dot).
-    Both produce bit-identical output; keep "expr" when a cluster
-    must stay Python-free.
+    groupBy(block).applyInPandas: the shuffle moves only the VECTORS,
+    never pair rows, and each block's cosine matrix is the shared fold
+    over unit vectors (:func:`_cosine_chunks` with ``unit=True`` — the
+    oracle's normalise-then-dot form, bit-identical).  Each node's
+    neighbours rank by (cos DESC, neighbor_id) via lexsort — ties
+    identical to SQL ``ORDER BY cos DESC, neighbor_id``.  SCALING.md
+    has the measured regime against a JVM self-join + fold.
     """
-    from pyspark.sql import Window
-
-    if kernel not in ("arrow", "expr"):
-        raise ValueError(f"kernel must be arrow|expr, got {kernel!r}")
-    if kernel == "arrow":
-        return _knn_graph_arrow(df, block_col, vec_col, id_col, k)
-
-    vn = _unit_vec(vec_col, dim)
-    a = df.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col).alias(id_col),
-        vn.alias("_vn"),
-    )
-    b = df.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col).alias("neighbor_id"),
-        vn.alias("_wn"),
-    )
-    pairs = a.join(b, "_blk").where(F.col(id_col) != F.col("neighbor_id"))
-    cos = F.aggregate(
-        F.zip_with("_vn", "_wn", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        pairs.select(id_col, "neighbor_id", cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-    )
-
-
-def _unit_vec(vec_col: str, dim: int | None) -> Column:
-    """L2-normalized double array (norm from the unrolled codegen chain
-    — evaluated once per ROW, so chain size is irrelevant here)."""
-    n = norm(F.col(vec_col), dim, cast_elements=True)
-    return F.transform(F.col(vec_col), lambda x: x.cast("double") / n)
-
-
-def _knn_graph_arrow(
-    df: DataFrame, block_col: str, vec_col: str, id_col: str, k: int
-) -> DataFrame:
-    """Per-block kNN kernel (see knn_graph_blocked).  Deterministic:
-    normalization is element/sqrt(left-assoc sum of squares) and the
-    pair dots accumulate dimension-at-a-time, the same IEEE op sequence
-    as the expression path and the DuckDB oracle; ranking sorts by
-    (-cos, neighbor_id) via lexsort — ties identical to SQL
-    ``ORDER BY cos DESC, neighbor_id``."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
+    _require_integral_ids("knn_graph_blocked", (df, id_col))
     out_schema = T.StructType(
         [
             T.StructField(id_col, df.schema[id_col].dataType),
@@ -831,29 +863,18 @@ def _knn_graph_arrow(
             ).astype({id_col: "int64", "neighbor_id": "int64",
                       "cos": "float64", "rnk": "int32"})
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        ndim = mat.shape[1]
-        acc = np.zeros(n, dtype=np.float64)
-        for i in range(ndim):  # same fold order as expression/oracle
-            acc += mat[:, i] * mat[:, i]
-        un = mat / np.sqrt(acc)[:, None]
-        dots = np.zeros((n, n), dtype=np.float64)
-        for i in range(ndim):
-            col = un[:, i]
-            dots += col[:, None] * col[None, :]
         kk = min(k, n - 1)
         out_id, out_nb, out_cos, out_rnk = [], [], [], []
-        self_idx = np.arange(n)
-        for r in range(n):
-            row = dots[r]
-            # order by (cos DESC, neighbor_id ASC), excluding self by
-            # POSITION (not value — self-cos is float, not exactly 1.0)
-            order = np.lexsort((ids, -row))
-            order = order[order != self_idx[r]][:kk]
-            out_id.extend([ids[r]] * len(order))
-            out_nb.extend(ids[order])
-            out_cos.extend(row[order])
-            out_rnk.extend(range(1, len(order) + 1))
+        for s, cos in _cosine_chunks(pdf[vec_col], unit=True):
+            for j, row in enumerate(cos):
+                # order by (cos DESC, neighbor_id ASC), excluding self by
+                # POSITION (not value — self-cos is float, not exactly 1.0)
+                order = np.lexsort((ids, -row))
+                order = order[order != s + j][:kk]
+                out_id.extend([ids[s + j]] * len(order))
+                out_nb.extend(ids[order])
+                out_cos.extend(row[order])
+                out_rnk.extend(range(1, len(order) + 1))
         return pd.DataFrame(
             {id_col: out_id, "neighbor_id": out_nb,
              "cos": np.asarray(out_cos, dtype=np.float64),
@@ -1214,20 +1235,10 @@ def query_ivf_index(
     persisted centroids by cosine to the query (driver-side — the
     centroid table is n_centroids rows), read ONLY the n_probes nearest
     cell partitions (listing-time pruning), exact cosine within them."""
-    import math
-
     cent = spark.read.parquet(path + "__centroids").collect()
-
-    def _cos(a, b):
-        dp = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dp / (na * nb) if na and nb else -1.0
-
-    probes = [
-        r["cell"]
-        for r in sorted(cent, key=lambda r: -_cos(query_vec, r["centroid"]))
-    ][:n_probes]
+    probes = _nearest_cells(
+        query_vec, [r["centroid"] for r in cent], n_probes, [r["cell"] for r in cent]
+    )
     cand = spark.read.parquet(path).filter(F.col("cell").isin(probes))
     return brute_force_topk(cand.drop("cell"), query_vec, k, vec_col, id_col)
 
@@ -1256,21 +1267,10 @@ def ivfpq_topk(
     same bounded sample discipline) over the cell-filtered candidates.
     Cost at scale: (n_probes/n_centroids) of the corpus touched, codes
     not floats scanned, exact math on ≤ rerank rows."""
-    import math
-
     assigned, centroids = ivf_assign(
         df, n_centroids, vec_col, id_col, seed
     )
-
-    def _cos(a, b):
-        dp = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dp / (na * nb) if na and nb else -1.0
-
-    probes = sorted(
-        range(len(centroids)), key=lambda c: -_cos(query_vec, centroids[c])
-    )[:n_probes]
+    probes = _nearest_cells(query_vec, centroids, n_probes)
     cand = assigned.filter(F.col("cell").isin(probes)).drop("cell")
     return pq_topk(
         cand,
@@ -1297,7 +1297,6 @@ def ann_join(
     seed: int = 7,
     dim: int | None = None,
     max_cell_rows: int | None = None,
-    kernel: str = "expr",
     strict_clumps: bool = False,
 ) -> DataFrame:
     """Approximate k-NN JOIN between two embedding tables — the
@@ -1308,11 +1307,16 @@ def ann_join(
     bounded by cell size × n_probes.
 
     Left-side probing is one Arrow pass (vectorized top-p centroid
-    argsort per batch); the cell equi-join shuffles both sides on the
-    cell key; per-left top-k is a WindowGroupLimit (rank prunes
-    map-side).  Output: (left_id, right_id, cos, rank).  Self-matches
-    survive when the same table is on both sides — filter on the
-    caller's identity columns if unwanted.
+    argsort per batch).  Both sides cogroup by cell and each cell is
+    scored with the shared fold (:func:`_cosine_chunks`), pre-reducing
+    to the per-cell top-k by (cos desc, id asc) — a sound superset of
+    the global top-k under the same ordering — before the final
+    per-left window.  The window input is k x probes rows per query,
+    not every candidate (SCALING.md has the measured regime against a
+    pair join scored by the JVM expression).  Output:
+    (left_id, right_id, cos, rank).  Self-matches survive when the same
+    table is on both sides — filter on the caller's identity columns if
+    unwanted.
 
     ``max_cell_rows``: degenerate-clump guard.  A tight cluster stays
     ONE cell at any n_centroids (k-means cannot split a clump tighter
@@ -1330,35 +1334,23 @@ def ann_join(
     actual cell size.  AQE-on deployments (Spark's default) are
     unaffected — the skew split already handles the hot partition.
 
-    ``kernel``: candidate scoring path.  ``"expr"`` scores each joined
-    pair with the JVM cosine expression (measured ~0.5M pairs/s/core —
-    per-pair array traversal).  ``"arrow"`` cogroups both sides by
-    cell and scores each cell with the numpy block kernel
-    (embedding_cosine_pairs_blocked's fold: acc += a[:,i]*b[:,i] per
-    dimension — the identical left-to-right IEEE fold the expression
-    performs, so cos values are BIT-IDENTICAL), pre-reducing to the
-    per-cell top-k by (cos desc, id asc) — a sound superset of the
-    global top-k under the same ordering — before the final window.
-    Same results, far less scoring cost, and a window input of
-    k x probes rows per query instead of every candidate.
-
     ``strict_clumps``: build-time clump guardrail.  The IVF training
     sample is histogrammed per cell on the driver (zero extra jobs);
     a clumped corpus (one indivisible hot cell — the measured silent
     100x-candidate pathology) warns with the mitigation order, or
     raises :class:`ClumpedCorpusError` when True.
 
-    Zero-norm vectors (NaN cosine) are excluded from results on BOTH
-    kernels — the expr path filters ~isnan, the arrow path drops NaN
-    before its per-cell cut — so degenerate input cannot diverge
-    between paths.  ``dim`` likewise applies to both kernels (the
-    arrow matrices are sliced to [:, :dim]).
+    Zero-norm vectors (NaN cosine) are excluded from results: NaN is
+    dropped before the per-cell cut.  ``dim`` scores only the first
+    ``dim`` components (matrices sliced to [:, :dim]); a stored vector
+    shorter than ``dim`` raises rather than silently narrowing.
     """
     import numpy as np
     from pyspark.sql import Window
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
+    _require_integral_ids("ann_join", (left, left_id), (right, right_id))
     assigned_r, centroids, clump = ivf_assign(
         right, n_centroids, vec_col, right_id, seed,
         strict_clumps=strict_clumps, return_stats=True,
@@ -1368,6 +1360,8 @@ def ann_join(
     p = min(n_probes, len(centroids))
 
     def _probes(vecs):
+        # matmul cosine, not the exact fold: it only picks which cells
+        # to probe; every reported cos comes from score_cell below
         import pandas as pd
 
         M = np.array(vecs.tolist(), dtype=np.float64)
@@ -1470,122 +1464,59 @@ def ann_join(
                 "_sub", F.explode(F.sequence(F.lit(0), nsub_expr - 1))
             )
             join_keys = ["cell", "_sub"]
-    if kernel not in ("expr", "arrow"):
-        raise ValueError(f"kernel must be expr|arrow, got {kernel!r}")
-    if kernel == "arrow":
-        import pandas as pd
-        from pyspark.sql import types as T
+    import pandas as pd
+    from pyspark.sql import types as T
 
-        out_schema = T.StructType(
-            [
-                T.StructField("_lid", T.LongType()),
-                T.StructField("_rid", T.LongType()),
-                T.StructField("cos", T.DoubleType()),
-            ]
-        )
-        kk = k
+    out_schema = T.StructType(
+        [
+            T.StructField("_lid", T.LongType()),
+            T.StructField("_rid", T.LongType()),
+            T.StructField("cos", T.DoubleType()),
+        ]
+    )
 
-        def score_cell(left_pdf, right_pdf):
-            if len(left_pdf) == 0 or len(right_pdf) == 0:
-                return pd.DataFrame(
-                    {"_lid": pd.Series(dtype="int64"),
-                     "_rid": pd.Series(dtype="int64"),
-                     "cos": pd.Series(dtype="float64")}
-                )
-            R = np.array(list(right_pdf["_rv"]), dtype=np.float64)
-            if dim is not None:
-                # fail loudly like the expr path would (element_at past
-                # the array end is NULL/ANSI error, never a silent
-                # narrowing) — numpy slicing would otherwise just use
-                # fewer components than requested
-                if R.shape[1] < dim:
-                    raise ValueError(
-                        f"ann_join arrow kernel: dim={dim} exceeds stored "
-                        f"vector length {R.shape[1]}"
-                    )
-                R = R[:, :dim]
+    def scored_dims(rows):
+        M = _as_matrix(rows)
+        if dim is None:
+            return M
+        # fail loudly: slicing alone would silently score fewer
+        # components than requested
+        if M.shape[1] < dim:
+            raise ValueError(
+                f"ann_join: dim={dim} exceeds stored vector length {M.shape[1]}"
+            )
+        return M[:, :dim]
+
+    def score_cell(left_pdf, right_pdf):
+        out_l, out_r, out_c = [], [], []
+        if len(left_pdf) and len(right_pdf):
+            lids = left_pdf["_lid"].to_numpy(np.int64)
             rids = right_pdf["_rid"].to_numpy(np.int64)
-            nd = R.shape[1]
-            r_acc = np.zeros(len(rids))
-            for i in range(nd):
-                rc = R[:, i]
-                r_acc += rc * rc
-            r_norm = np.sqrt(r_acc)
-            out_l, out_r, out_c = [], [], []
-            # chunk the probe side so the dots matrix stays ~64 MB even
-            # for a degenerate mega-cell (embedding_cosine_pairs_blocked
-            # discipline)
-            chunk = max(16, int(8_000_000 / max(len(rids), 1)))
-            for s in range(0, len(left_pdf), chunk):
-                sub = left_pdf.iloc[s : s + chunk]
-                L = np.array(list(sub["_lv"]), dtype=np.float64)
-                if dim is not None:
-                    if L.shape[1] < dim:
-                        raise ValueError(
-                            f"ann_join arrow kernel: dim={dim} exceeds stored "
-                            f"vector length {L.shape[1]}"
-                        )
-                    L = L[:, :dim]
-                lids = sub["_lid"].to_numpy(np.int64)
-                l_acc = np.zeros(len(lids))
-                dots = np.zeros((len(lids), len(rids)))
-                for i in range(nd):
-                    lc = L[:, i]
-                    l_acc += lc * lc
-                    dots += lc[:, None] * R[None, :, i]
-                cos = dots / (np.sqrt(l_acc)[:, None] * r_norm[None, :])
-                top = min(kk, len(rids))
-                for j in range(len(lids)):
+            top = min(k, len(rids))
+            for s, cos in _cosine_chunks(
+                scored_dims(left_pdf["_lv"]), scored_dims(right_pdf["_rv"])
+            ):
+                for j, row in enumerate(cos):
                     # per-left top-k by (cos desc, rid asc) — the exact
                     # ordering of the final window, so the per-cell cut
                     # is a sound superset of the global top-k.  NaN
-                    # cosines (zero-norm vectors) are excluded — both
-                    # kernels filter them identically (the expr path
-                    # applies ~isnan), so degenerate vectors cannot
-                    # diverge between paths.
-                    valid = np.flatnonzero(~np.isnan(cos[j]))
-                    if len(valid) == 0:
-                        continue
-                    idx = valid[np.lexsort((rids[valid], -cos[j, valid]))][:top]
-                    out_l.extend([lids[j]] * len(idx))
+                    # cosines (zero-norm vectors) are excluded.
+                    valid = np.flatnonzero(~np.isnan(row))
+                    idx = valid[np.lexsort((rids[valid], -row[valid]))][:top]
+                    out_l.extend([lids[s + j]] * len(idx))
                     out_r.extend(rids[idx])
-                    out_c.extend(cos[j, idx])
-            return pd.DataFrame({"_lid": out_l, "_rid": out_r, "cos": out_c})
+                    out_c.extend(row[idx])
+        return pd.DataFrame(
+            {"_lid": np.asarray(out_l, dtype=np.int64),
+             "_rid": np.asarray(out_r, dtype=np.int64),
+             "cos": np.asarray(out_c, dtype=np.float64)}
+        )
 
-        cand = (
-            lp.groupBy(*join_keys)
-            .cogroup(rp.groupBy(*join_keys))
-            .applyInPandas(score_cell, out_schema)
-        )
-        w = Window.partitionBy("_lid").orderBy(
-            F.col("cos").desc(), F.col("_rid")
-        )
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                F.col("_lid").alias(f"left_{left_id}"),
-                F.col("_rid").alias(f"right_{right_id}"),
-                "cos",
-                "rank",
-            )
-        )
-    d = dim
-    # try_divide (not /): a zero-norm vector is a 0/0 cosine — ANSI mode
-    # would abort the whole join; NULL-then-filter drops exactly the
-    # degenerate pairs, matching the arrow kernel's NaN exclusion
-    cand = lp.join(rp, join_keys).select(
-        "_lid",
-        "_rid",
-        F.expr(
-            f"try_divide({dot_sql('`_lv`', '`_rv`', d, True)}, "
-            f"SQRT({dot_sql('`_lv`', '`_lv`', d, True)}) * "
-            f"SQRT({dot_sql('`_rv`', '`_rv`', d, True)}))"
-        ).alias("cos"),
-    ).where(F.col("cos").isNotNull() & ~F.isnan(F.col("cos")))
-    # distinct: a right row can appear in several probed cells? no — each
-    # right row has ONE cell; but a (left,right) pair can repeat only if
-    # the same right cell is probed twice, which explode prevents.
+    cand = (
+        lp.groupBy(*join_keys)
+        .cogroup(rp.groupBy(*join_keys))
+        .applyInPandas(score_cell, out_schema)
+    )
     w = Window.partitionBy("_lid").orderBy(F.col("cos").desc(), F.col("_rid"))
     return (
         cand.withColumn("rank", F.row_number().over(w))

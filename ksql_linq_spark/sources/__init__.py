@@ -65,6 +65,17 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
 _TABLE_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
+def evict_foreign_apps(cache: dict, app_id: str, bound: int) -> None:
+    """Once ``cache`` holds more than ``bound`` entries, drop those of
+    every Spark application other than ``app_id`` (keys are tuples whose
+    first element is the application id).  Entries of stopped
+    applications each pin a dead session's plan graph; the active
+    application's entries stay."""
+    if len(cache) > bound:
+        for key in [k for k in cache if k[0] != app_id]:
+            del cache[key]
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table; normalize ns timestamps to µs TIMESTAMP."""
     try:
@@ -82,8 +93,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
     df = _ntz_to_ltz(df)
     if app_id is not None:
-        if len(_TABLE_PLAN_CACHE) > 256:  # bound: ~tables x sf_dirs in use
-            _TABLE_PLAN_CACHE.clear()
+        evict_foreign_apps(_TABLE_PLAN_CACHE, app_id, 256)  # ~tables x sf_dirs
         _TABLE_PLAN_CACHE[key] = df
     return df
 

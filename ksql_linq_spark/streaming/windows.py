@@ -204,40 +204,21 @@ def keyed_table_sink(
     (/root/reference/src/SerDes/TombstoneSafeSerDes.cs:1-111: a Kafka
     record with a null value tombstones its key in the compacted table).
 
-    Local implementation: read-merge-rewrite per batch (fine for test
-    scale; single-writer).  On a cluster this exact foreachBatch body
-    becomes a Delta/Iceberg MERGE INTO keyed ON the same columns with
-    WHEN MATCHED AND <all-null> THEN DELETE — partition the table by a
-    key prefix or bucket date so the merge touches only affected files.
+    Each batch is one :func:`operators.layout.merge_upsert` — the batch
+    MERGE twin: same survivor rule, read-merge-rewrite with a staged
+    directory swap, so a reader mid-batch sees the old or the new
+    table, never a half-written one (single-writer).  On a cluster this
+    foreachBatch body becomes a Delta/Iceberg MERGE INTO keyed ON the
+    same columns with WHEN MATCHED AND <all-null> THEN DELETE —
+    partition the table by a key prefix or bucket date so the merge
+    touches only affected files.
     """
-    import os
-    import shutil
-    import tempfile
+    from ..operators.layout import merge_upsert
 
     spark = df.sparkSession
-    schema = df.schema
-    value_cols = [c for c in df.columns if c not in keys]
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # One deterministic survivor per key + tombstone split — shared
-        # rule with layout.merge_upsert (see compact_changelog_batch).
-        batch_keys, upserts = compact_changelog_batch(
-            batch_df, keys, value_cols, order_col, tombstones
-        )
-        if os.path.exists(path):
-            current = spark.read.schema(schema).parquet(path)
-            # anti-join on ALL batch keys (upserts AND tombstones), then
-            # re-insert only the upserts — tombstoned keys just vanish
-            merged = current.join(
-                batch_keys, on=keys, how="left_anti"
-            ).unionByName(upserts)
-        else:
-            merged = upserts
-        staged = tempfile.mkdtemp(prefix="keyed_sink_")
-        merged.write.mode("overwrite").parquet(staged)
-        materialized = spark.read.parquet(staged)
-        materialized.write.mode("overwrite").parquet(path)
-        shutil.rmtree(staged, ignore_errors=True)
+        merge_upsert(spark, path, batch_df, keys, order_col, tombstones)
 
     return (
         df.writeStream.foreachBatch(upsert)

@@ -192,11 +192,23 @@ def test_multimodal_frame_sampling(media):
     assert {r["media_id"] for r in frames} == {2}  # only the video row
 
 
-def test_embedding_cosine_blocked_matches_expr(spark):
-    from ksql_linq_spark.operators.dedup import (
-        embedding_cosine_pairs,
-        embedding_cosine_pairs_blocked,
+def _cosine_pairs_reference(df, threshold, dim):
+    """Test-local exact reference: self-join on id_a < id_b with the
+    similarity.cosine Column expression (unrolled, cast per element)."""
+    from ksql_linq_spark.operators.similarity import cosine
+
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b",
+                cosine("`ea`", "`eb`", dim, cast_elements=True).alias("cos"))
+        .filter(F.col("cos") >= threshold)
     )
+
+
+def test_embedding_cosine_blocked_matches_expr(spark):
+    from ksql_linq_spark.operators.dedup import embedding_cosine_pairs_blocked
 
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
@@ -207,7 +219,7 @@ def test_embedding_cosine_blocked_matches_expr(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     expr = {
         (r.id_a, r.id_b): r.cos
-        for r in embedding_cosine_pairs(df, threshold=0.5, dim=4).collect()
+        for r in _cosine_pairs_reference(df, 0.5, 4).collect()
     }
     blocked = {
         (r.id_a, r.id_b): r.cos
@@ -910,7 +922,7 @@ def test_knn_graph_blocked_exact_within_block(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<float>"
     )
-    g = knn_graph_blocked(df, "label", k=1, dim=2).collect()
+    g = knn_graph_blocked(df, "label", k=1).collect()
     nn = {r["vec_id"]: r["neighbor_id"] for r in g}
     assert nn[1] == 2 and nn[2] == 1      # mutual nearest within block 0
     assert 4 not in nn  # block 1 is a singleton: no neighbors emitted
@@ -930,7 +942,7 @@ def test_semantic_dedup_blocked_keeps_one_per_cluster(spark):
         rows, "vec_id long, label int, embedding array<float>"
     )
     out = {r["vec_id"]: r for r in
-           semantic_dedup_blocked(df, "label", threshold=0.99, dim=2).collect()}
+           semantic_dedup_blocked(df, "label", threshold=0.99).collect()}
     assert out[1]["cluster_id"] == 1 and out[1]["keep"]
     assert out[2]["cluster_id"] == 1 and not out[2]["keep"]
     assert out[3]["keep"] and out[4]["keep"]  # singletons keep themselves
@@ -955,30 +967,63 @@ def test_incremental_dedup_drops_corpus_and_batch_dups(spark):
     assert kept == [11, 13]
 
 
+def _unit_cosine_pairs_reference(df, dim):
+    """Test-local reference for the unit-vector cosine form: normalise
+    each row with similarity.norm, then fold the dot of the unit vectors
+    with similarity.dot — the DuckDB oracle's normalise-then-dot order,
+    as Column expressions.  Pairs (id_a != id_b) within each label."""
+    from ksql_linq_spark.operators.similarity import dot, norm
+
+    n = norm(F.col("embedding"), dim, cast_elements=True)
+    unit = F.transform(F.col("embedding"), lambda x: x.cast("double") / n)
+    a = df.select("label", F.col("vec_id").alias("id_a"), unit.alias("ua"))
+    b = df.select("label", F.col("vec_id").alias("id_b"), unit.alias("ub"))
+    return (
+        a.join(b, "label")
+        .where(F.col("id_a") != F.col("id_b"))
+        .select("id_a", "id_b", dot(F.col("ua"), F.col("ub")).alias("cos"))
+    )
+
+
 def test_knn_graph_kernels_bit_identical(spark, sf_dir):
+    """knn_graph_blocked equals the Column-expression reference: same
+    neighbours, same rank, bit-identical cos."""
+    from pyspark.sql.window import Window
+
     from ksql_linq_spark.operators.similarity import knn_graph_blocked
 
     emb = read_table(spark, sf_dir, "embeddings")
-    ar = {(r["vec_id"], r["rnk"]): (r["neighbor_id"], r["cos"])
-          for r in knn_graph_blocked(emb, "label", k=3, dim=64,
-                                     kernel="arrow").collect()}
-    ex = {(r["vec_id"], r["rnk"]): (r["neighbor_id"], r["cos"])
-          for r in knn_graph_blocked(emb, "label", k=3, dim=64,
-                                     kernel="expr").collect()}
-    assert ar == ex  # same neighbors, same rank, bit-identical cos
+    ar = {(r["vec_id"], r["rnk"]): (r["neighbor_id"], r["cos"].hex())
+          for r in knn_graph_blocked(emb, "label", k=3).collect()}
+    w = Window.partitionBy("id_a").orderBy(F.col("cos").desc(), "id_b")
+    ref = (
+        _unit_cosine_pairs_reference(emb, 64)
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 3)
+    )
+    ex = {(r["id_a"], r["rnk"]): (r["id_b"], r["cos"].hex())
+          for r in ref.collect()}
+    assert ar == ex and len(ar) > 0
 
 
 def test_semantic_dedup_kernels_agree(spark, sf_dir):
+    """semantic_dedup_blocked equals connected components over the
+    reference's cos >= threshold pairs."""
     from ksql_linq_spark.operators.dedup import semantic_dedup_blocked
+    from ksql_linq_spark.operators.graph import dedup_clusters
 
     emb = read_table(spark, sf_dir, "embeddings")
     ar = {r["vec_id"]: (r["cluster_id"], r["keep"])
-          for r in semantic_dedup_blocked(emb, "label", threshold=0.4,
-                                          dim=64, kernel="arrow").collect()}
-    ex = {r["vec_id"]: (r["cluster_id"], r["keep"])
-          for r in semantic_dedup_blocked(emb, "label", threshold=0.4,
-                                          dim=64, kernel="expr").collect()}
+          for r in semantic_dedup_blocked(emb, "label", threshold=0.4).collect()}
+    pairs = (
+        _unit_cosine_pairs_reference(emb, 64)
+        .where((F.col("id_a") < F.col("id_b")) & (F.col("cos") >= 0.4))
+        .select("id_a", "id_b")
+    )
+    ex = {r["vec_id"]: (r["cluster_id"], r["cluster_id"] == r["vec_id"])
+          for r in dedup_clusters(emb.select("vec_id"), pairs, "vec_id").collect()}
     assert ar == ex
+    assert any(not keep for _, keep in ar.values())  # some pair merged
 
 
 def test_norm_outliers_flags_synthetic_extremes(spark):
@@ -1791,31 +1836,78 @@ def test_ann_join_cell_subsplit_is_result_identical(spark):
     assert "_sub" in split._jdf.queryExecution().analyzed().toString()
 
 
+def _ann_canon(df):
+    return sorted(
+        (r.left_vec_id, r.right_vec_id, r.cos.hex(), r.rank)
+        for r in df.collect()
+    )
+
+
+def _pair_cosines_reference(spark, lq, e, dim):
+    """Test-local exact reference: {(lid, rid): cos} for every left x
+    right pair from the similarity.cosine Column expression, zero-norm
+    pairs dropped.  ANSI is off while the frame is built so a 0/0
+    cosine yields NULL instead of aborting the query."""
+    import math
+
+    from ksql_linq_spark.operators.similarity import cosine
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")  # fixed at analysis
+    try:
+        rows = (
+            lq.select(F.col("vec_id").alias("lid"), F.col("embedding").alias("le"))
+            .crossJoin(e.select(F.col("vec_id").alias("rid"),
+                                F.col("embedding").alias("re")))
+            .select("lid", "rid",
+                    cosine("`le`", "`re`", dim, cast_elements=True).alias("cos"))
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    return {
+        (r.lid, r.rid): r.cos
+        for r in rows
+        if r.cos is not None and not math.isnan(r.cos)
+    }
+
+
+def _topk_reference(cos, k):
+    """Per-left top-k of a reference cosine map by (cos desc, rid asc),
+    in _ann_canon's shape."""
+    by_left = {}
+    for (lid, rid), c in cos.items():
+        by_left.setdefault(lid, []).append((-c, rid))
+    out = []
+    for lid, cands in by_left.items():
+        for rank, (neg, rid) in enumerate(sorted(cands)[:k], start=1):
+            out.append((lid, rid, (-neg).hex(), rank))
+    return sorted(out)
+
+
 def test_ann_join_arrow_kernel_bit_identical(spark, sf_dir):
-    """kernel="arrow" (cogrouped numpy scoring per IVF cell, per-cell
-    top-k pre-reduction) must reproduce the expression path BIT-FOR-BIT
-    — same IEEE fold order per dimension, same (cos desc, rid asc)
-    ordering at the per-cell cut and the final window."""
+    """ann_join (cogrouped numpy scoring per IVF cell, per-cell top-k
+    pre-reduction) must reproduce the Column-expression cosine BIT-FOR-
+    BIT, with the (cos desc, rid asc) ordering at the per-cell cut and
+    the final window."""
     from ksql_linq_spark.operators.similarity import ann_join
 
     e = read_table(spark, sf_dir, "embeddings")
     lq = e.limit(15)
-
-    def canon(df):
-        return sorted(
-            (r.left_vec_id, r.right_vec_id, r.cos.hex(), r.rank)
-            for r in df.collect()
-        )
-
-    expr = canon(ann_join(lq, e, k=3, n_centroids=4, n_probes=2, dim=64))
-    arrow = canon(ann_join(lq, e, k=3, n_centroids=4, n_probes=2, kernel="arrow"))
-    assert expr == arrow and len(expr) > 0
+    ref = _pair_cosines_reference(spark, lq, e, 64)
+    # probing every cell makes the candidate set the whole corpus, so
+    # the result is the exact top-k
+    full = _ann_canon(ann_join(lq, e, k=3, n_centroids=4, n_probes=4, dim=64))
+    assert full == _topk_reference(ref, 3) and len(full) > 0
+    # with cells pruned, every score is still the exact cosine
+    pruned = _ann_canon(ann_join(lq, e, k=3, n_centroids=4, n_probes=2))
+    assert len(pruned) > 0
+    assert all(c == ref[(lid, rid)].hex() for lid, rid, c, _ in pruned)
     # composes with the sub-split guard too
-    salted = canon(
-        ann_join(lq, e, k=3, n_centroids=4, n_probes=2, kernel="arrow",
-                 max_cell_rows=20)
+    salted = _ann_canon(
+        ann_join(lq, e, k=3, n_centroids=4, n_probes=2, max_cell_rows=20)
     )
-    assert salted == expr
+    assert salted == pruned
 
 
 def test_ivf_clump_guardrail(spark):
@@ -1944,15 +2036,13 @@ def test_ann_join_arrow_dim_exceeding_vector_length_fails_loudly(spark):
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     lq = e.filter(F.col("vec_id") < 5)
     with pytest.raises(Exception, match="exceeds stored vector length"):
-        ann_join(
-            lq, e, k=2, n_centroids=4, n_probes=2, dim=32, kernel="arrow"
-        ).collect()
+        ann_join(lq, e, k=2, n_centroids=4, n_probes=2, dim=32).collect()
 
 
 def test_ann_join_arrow_dim_and_nan_parity(spark):
-    """ADVICE r6: the arrow kernel must honor ``dim`` (slice to
-    [:, :dim]) and must exclude NaN cosines (zero-norm vectors)
-    exactly like the expr path — degenerate input cannot diverge."""
+    """ADVICE r6: ann_join must honor ``dim`` (slice to [:, :dim]) and
+    must exclude NaN cosines (zero-norm vectors), matching the
+    Column-expression reference — degenerate input cannot diverge."""
     import numpy as np
 
     from ksql_linq_spark.operators.similarity import ann_join
@@ -1964,26 +2054,14 @@ def test_ann_join_arrow_dim_and_nan_parity(spark):
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     lq = e.filter(F.col("vec_id") < 10)  # includes the zero-norm probe
 
-    def canon(df):
-        return sorted(
-            (r.left_vec_id, r.right_vec_id, r.cos.hex(), r.rank)
-            for r in df.collect()
-        )
-
     for d in (None, 8):
-        expr = canon(
-            ann_join(lq, e, k=3, n_centroids=4, n_probes=2, dim=d)
-        )
-        arrow = canon(
-            ann_join(
-                lq, e, k=3, n_centroids=4, n_probes=2, dim=d,
-                kernel="arrow",
-            )
-        )
-        assert expr == arrow and len(expr) > 0
+        # every cell probed: the result is the exact top-k
+        got = _ann_canon(ann_join(lq, e, k=3, n_centroids=4, n_probes=4, dim=d))
+        assert got == _topk_reference(_pair_cosines_reference(spark, lq, e, d), 3)
+        assert len(got) > 0
         # the zero-norm vector never appears on either side of a pair
-        assert all(r[1] != 7 for r in expr)
-        assert all(r[0] != 7 for r in expr)
+        assert all(r[1] != 7 for r in got)
+        assert all(r[0] != 7 for r in got)
 
 
 def test_repetition_stats_rowlocal_matches_grouped_reference(spark):
@@ -2227,3 +2305,121 @@ def test_shingle_arrays_max_tokens_guard(spark):
     assert len(ok) == 3
     with _pytest.raises(Exception, match="exceeds 4 tokens"):
         _shingle_arrays(df, max_tokens=4).collect()
+
+
+def _left_fold_cosine(a, b, unit):
+    """Pure-Python reference for similarity._cosine_chunks: one
+    left-to-right fold per dot product, in Python floats (IEEE
+    doubles)."""
+    import math
+
+    def fold(x, y):
+        acc = 0.0
+        for xi, yi in zip(x, y):
+            acc += xi * yi
+        return acc
+
+    a, b = [float(x) for x in a], [float(x) for x in b]
+    if unit:
+        na, nb = math.sqrt(fold(a, a)), math.sqrt(fold(b, b))
+        if na == 0.0 or nb == 0.0:
+            return math.nan
+        return fold([x / na for x in a], [x / nb for x in b])
+    den = math.sqrt(fold(a, a)) * math.sqrt(fold(b, b))
+    return fold(a, b) / den if den else math.nan
+
+
+@pytest.mark.parametrize("dtype", ["float32", "float64"])
+@pytest.mark.parametrize("unit", [False, True])
+def test_cosine_chunks_bit_exact_left_fold(monkeypatch, dtype, unit):
+    """The one exact-cosine fold matches a pure-Python left fold bit for
+    bit (.hex()), across chunk boundaries, with a zero-norm row giving
+    NaN; both the two-block and the self form."""
+    import math
+
+    import numpy as np
+
+    from ksql_linq_spark.operators import similarity
+
+    rng = np.random.default_rng(3)
+    # 20 dims: numpy's own reductions switch to pairwise summation from
+    # 8 elements, so a reassociated fold would show
+    a = rng.normal(0, 1, (50, 20)).astype(dtype)
+    b = rng.normal(0, 1, (40, 20)).astype(dtype)
+    a[5] = 0.0
+    # cap below one a-block x b-block: chunks of the 16-row floor
+    monkeypatch.setattr(similarity, "_COS_CHUNK_CELLS", 100)
+
+    def hexes(m):
+        return [["nan" if math.isnan(x) else float(x).hex() for x in row] for row in m]
+
+    for other in (b, None):
+        chunks = list(similarity._cosine_chunks(list(a), other, unit=unit))
+        assert [s for s, _ in chunks] == [0, 16, 32, 48]
+        got = np.vstack([c for _, c in chunks])
+        assert got.dtype == np.float64
+        ref_b = a if other is None else b
+        want = [[_left_fold_cosine(x, y, unit) for y in ref_b] for x in a]
+        assert hexes(got) == hexes(want)
+        assert all(math.isnan(x) for x in got[5])
+
+
+def test_nearest_cells_ties_break_by_cell_id():
+    from ksql_linq_spark.operators.similarity import _nearest_cells
+
+    cents = [[0.0, 1.0], [1.0, 0.0], [2.0, 0.0], [0.0, 0.0]]
+    # cells 9 and 4 tie at cos 1.0; the zero centroid scores -1
+    assert _nearest_cells([3.0, 0.0], cents, 3, cells=[7, 9, 4, 1]) == [4, 9, 7]
+    assert _nearest_cells([3.0, 0.0], cents, 4) == [1, 2, 0, 3]
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["brute_force_top1_ids", "knn_graph_blocked", "ann_join",
+     "embedding_cosine_pairs_blocked", "semantic_dedup_blocked"],
+)
+def test_exact_cosine_ops_reject_non_integral_ids(spark, op):
+    """A string id fails at build time with an error naming the column,
+    not later on an executor with a pandas cast error."""
+    from ksql_linq_spark.operators import dedup, similarity
+
+    df = spark.createDataFrame(
+        [("a", 0, [1.0, 0.0]), ("b", 0, [0.0, 1.0])],
+        "vec_id string, label int, embedding array<float>",
+    )
+    build = {
+        "brute_force_top1_ids": lambda: similarity.brute_force_top1_ids(df, df),
+        "knn_graph_blocked": lambda: similarity.knn_graph_blocked(df, "label"),
+        "ann_join": lambda: similarity.ann_join(df, df, n_centroids=2),
+        "embedding_cosine_pairs_blocked": lambda: dedup.embedding_cosine_pairs_blocked(df),
+        "semantic_dedup_blocked": lambda: dedup.semantic_dedup_blocked(df, "label"),
+    }[op]
+    with pytest.raises(TypeError, match=r"'vec_id' is string"):
+        build()
+
+
+def test_plan_caches_evict_only_foreign_apps(spark, sf_dir):
+    """The read_table and LSH-pairs plan caches, filled past their bound
+    with entries of other application ids, drop those entries and keep
+    the active application's."""
+    from ksql_linq_spark import entry_queries, sources
+
+    app = spark.sparkContext.applicationId
+    for cache, bound, fill in (
+        (sources._TABLE_PLAN_CACHE, 256,
+         lambda: sources.read_table(spark, sf_dir, "embeddings")),
+        (entry_queries._LSH_PAIRS_PLANS, 64,
+         lambda: entry_queries._lsh_pairs(spark, sf_dir)),
+    ):
+        saved = dict(cache)
+        try:
+            cache.clear()
+            cache[(app, "kept")] = "kept"
+            for i in range(bound + 1):
+                cache[(f"stopped-app-{i}", "x")] = None
+            fill()  # a miss past the bound evicts
+            assert cache.pop((app, "kept")) == "kept"
+            assert len(cache) == 1 and all(k[0] == app for k in cache)
+        finally:
+            cache.clear()
+            cache.update(saved)

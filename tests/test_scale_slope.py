@@ -110,6 +110,15 @@ def test_optin_allowlist_matches_committed_artifact():
             assert entry["spark_only_ratio"] <= art["threshold_ratio"]
 
 
+def test_optin_keys_are_registered_queries():
+    """An opt-in names a registered query: a stale key exempts nothing
+    today and would silently exempt any future query that reuses it."""
+    from ksql_linq_spark.entry_queries import QUERIES
+
+    stale = sorted(set(slope.QUADRATIC_OPT_INS) - set(QUERIES))
+    assert stale == [], stale
+
+
 def test_audit_failed_sweep_query_fails_the_gate(tmp_path):
     # a query that FAILED (or never produced a wall) at 10x is the
     # worst scale regression there is — it must land in unexplained,

@@ -45,9 +45,6 @@ QUADRATIC_OPT_INS = {
         "100x pairs (chunked kernel halves the growth; scale path is "
         "the LSH-bucketed variant)"
     ),
-    "dedup_embedding_cosine_pairs": (
-        "same exact-pairwise contract as dedup_embedding_cosine"
-    ),
     "dedup_ngram_jaccard": (
         "deliberate exact pair-expansion regime per oracle contract; "
         "the scaled corpus multiplies duplicate cliques, so in-bucket "
