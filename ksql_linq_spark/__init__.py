@@ -5,12 +5,12 @@ Structured Streaming windowing, OHLC multi-timeframe cascade, and
 large-scale training-data pipeline operators (dedup, similarity, text).
 """
 
-from .context import SparkKsqlContext, load_tables
+from .context import SparkKsqlContext
 from .entity import Column, Entity
 from .query.builder import Query, StreamProcessingException, from_df
 from .session import build_session
 
 __all__ = [
-    "SparkKsqlContext", "load_tables", "Column", "Entity",
+    "SparkKsqlContext", "Column", "Entity",
     "Query", "StreamProcessingException", "from_df", "build_session",
 ]

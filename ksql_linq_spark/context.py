@@ -113,16 +113,6 @@ class SparkKsqlContext:
         return EventSet(self, self._entities[name], path=path, is_stream=is_stream)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Plain loader used by __spark_entry__ / bench: name -> DataFrame."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            out[name] = spark.read.parquet(p)
-    return out
-
-
 class EventSet:
     """Typed per-entity handle — EventSet<T> analog
     (/root/reference/src/EntitySets/EventSet.cs:22-635).

@@ -2972,11 +2972,11 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Size-gated percentile operator, exact regime (Spark `percentile`
-    ≡ DuckDB `quantile_cont`, verified bit-exact incl. interpolation) —
-    superset; reference registry has no percentile aggregate.  Above the
-    operator's row threshold the same call switches to the GK sketch
-    (see agg_percentiles_approx for that regime's oracle contract)."""
+    """Percentile operator, exact regime (Spark `percentile` ≡ DuckDB
+    `quantile_cont`, verified bit-exact incl. interpolation) — superset;
+    reference registry has no percentile aggregate.  The operator's GK
+    sketch regime is agg_percentiles_approx (see there for its oracle
+    contract)."""
     from .operators.sketch import group_percentiles
 
     li = _t(spark, sf_dir, "lineitem")
@@ -6795,7 +6795,7 @@ def approx_cm_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketch import cm_estimate, cm_sketch
 
     ev = _t(spark, sf_dir, "events")
-    counters = cm_sketch(ev, "user_id", depth=4, width=256)
+    counters = cm_sketch(ev, "user_id")
     est = cm_estimate(counters, [1, 2, 3, 4, 5], key_name="key")
     exact = (
         ev.filter(F.col("user_id").isin([1, 2, 3, 4, 5]))
@@ -7816,9 +7816,9 @@ def mart_monthly_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_weekly_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly p50/p90 bands per event type — the SLO/alerting
-    percentile-over-time readout: group_percentiles (size-gated exact ↔
-    GK sketch) composed with calendar weeks; the percentile operator's
-    time-series form."""
+    percentile-over-time readout: group_percentiles (exact regime)
+    composed with calendar weeks; the percentile operator's time-series
+    form."""
     from .operators.sketch import group_percentiles
 
     ev = _t(spark, sf_dir, "events").withColumn(

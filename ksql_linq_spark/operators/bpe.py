@@ -19,6 +19,10 @@ Subword Units") BPE with the standard scale split:
   memoization (a batch's distinct words are tokenized once — the same
   Zipf skew that makes training cheap makes the cache hit rate high).
 
+Both passes lowercase the text before splitting it into words —
+word_frequencies with Spark ``lower``, bpe_apply with ``str.lower`` —
+so the trained dictionary and the encoder see the same words.
+
 Non-goal: byte-level fallback alphabets and regex pre-splitters of
 specific production tokenizers; the algorithm and the dataflow are the
 point.  Not SQL-expressible (iterative merges + greedy longest-match
@@ -37,7 +41,7 @@ END = "</w>"  # word-boundary marker (standard BPE)
 
 
 def word_frequencies(
-    df: DataFrame, text_col: str = "text", lowercase: bool = True, max_words: int = 200_000
+    df: DataFrame, text_col: str = "text", max_words: int = 200_000
 ):
     """One corpus pass → bounded word-frequency dict on the driver.
 
@@ -45,9 +49,7 @@ def word_frequencies(
     beyond the cap cannot influence early merges (their pair counts are
     dominated), which is why every production BPE trains on a capped
     dict."""
-    c = F.col(text_col)
-    if lowercase:
-        c = F.lower(c)
+    c = F.lower(F.col(text_col))
     # toArrow, not collect: at the 200k-word cap a row collect builds
     # 200k Row objects; the Arrow batch lands as two flat columns
     # (graph.py Arrow-fetch rule)
@@ -127,7 +129,6 @@ def bpe_apply(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     out_col: str = "bpe_tokens",
 ) -> DataFrame:
     """Tokenize every document with the learned merges — ONE Arrow pass,
@@ -157,9 +158,7 @@ def bpe_apply(
             for rid, text in zip(
                 pdf[id_col].to_numpy(), pdf[text_col].to_numpy()
             ):
-                text = text or ""
-                if lowercase:
-                    text = text.lower()
+                text = (text or "").lower()
                 doc_tokens: list[str] = []
                 for w in text.split():
                     enc = memo.get(w)

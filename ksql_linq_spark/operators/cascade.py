@@ -305,7 +305,6 @@ def start_streaming_cascade(
 def write_bar_tables(
     tiers: dict[str, DataFrame],
     base_dir: str,
-    partition_by_date: bool = True,
     mode: str = "overwrite",
 ) -> dict[str, str]:
     """Materialize cascade tiers as parquet bar tables, partitioned by
@@ -319,13 +318,11 @@ def write_bar_tables(
     out: dict[str, str] = {}
     for name, df in tiers.items():
         path = f"{base_dir}/{name}"
-        w = df
-        writer = None
-        if partition_by_date:
-            w = df.withColumn("bucket_date", F.to_date("bucket_start"))
-            writer = w.write.partitionBy("bucket_date")
-        else:
-            writer = w.write
-        writer.mode(mode).parquet(path)
+        (
+            df.withColumn("bucket_date", F.to_date("bucket_start"))
+            .write.partitionBy("bucket_date")
+            .mode(mode)
+            .parquet(path)
+        )
         out[name] = path
     return out

@@ -463,7 +463,6 @@ def remove_dup_ngrams(
     id_col: str = "doc_id",
     n: int = 5,
     min_docs: int = 2,
-    broadcast_dup: bool = True,
 ) -> DataFrame:
     """Cross-document duplicate-substring REMOVAL at n-gram granularity
     (the ExactSubstr recipe of Lee et al. 2022, "Deduplicating Training
@@ -482,13 +481,12 @@ def remove_dup_ngrams(
     Dataflow: positioned tokens (one doc-keyed window assembles grams
     via lead) → distinct (doc, gram) → gram doc-frequency → the
     ≥min_docs tail is the ONLY cross-doc structure, and it is the
-    boilerplate dim — tiny and broadcast by default; matched gram
+    boilerplate dim — tiny, and always broadcast; matched gram
     occurrences expand n× into covered positions (matched only, never
     the corpus); anti-join tokens on (doc, pos); ordered reassembly per
     doc.  No all-pairs anywhere; every wide exchange is keyed by doc,
     gram, or (doc, pos).  At web scale the dup dim grows with shared
-    boilerplate, not corpus size — if it outgrows broadcast, pass
-    ``broadcast_dup=False`` for the shuffle semi-join.
+    boilerplate, not corpus size.
 
     The positioned-token stream feeds 3 branches (grams, survivors,
     totals); Catalyst does not reuse exchanges across
@@ -543,7 +541,7 @@ def remove_dup_ngrams(
     grams = sub.select(
         F.col(id_col), F.posexplode(gram_expr).alias("pos", "s")
     )
-    dup_dim = (
+    dup_dim = F.broadcast(
         grams.select(id_col, "s")
         .distinct()
         .groupBy("s")
@@ -551,8 +549,6 @@ def remove_dup_ngrams(
         .where(F.col("n_docs") >= min_docs)
         .select("s")
     )
-    if broadcast_dup:
-        dup_dim = F.broadcast(dup_dim)
     # pos is the 0-based gram start; collect_set dedups overlapping
     # coverage, so no separate distinct() pass is needed
     cov = (

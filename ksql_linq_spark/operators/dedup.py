@@ -323,8 +323,7 @@ def embedding_cosine_pairs_blocked(
     task (n*d doubles — the same footprint a broadcast join would ship).
     This is the exact-small-side regime; when both sides are large,
     bucket first (similarity.random_projection_buckets) and run this
-    kernel per bucket.  The ``max_rows`` gate (sketch.py's
-    group_percentiles discipline) makes the quadratic regime an
+    kernel per bucket.  The ``max_rows`` gate makes the quadratic regime an
     explicit opt-in: above it the operator REFUSES rather than
     launching an O(n²) job by accident — raise the cap deliberately or
     switch to minhash_lsh_pairs / semantic_dedup, the scale paths.

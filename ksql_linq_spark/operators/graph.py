@@ -31,6 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Round bound of the distributed label-propagation loop: with pointer
+# doubling each round halves the effective diameter, so 30 rounds cover
+# diameters past 2^30; past it connected_components raises.
+CC_MAX_ROUNDS = 30
+
 
 def _fetch_if_small(frame: DataFrame, gate: int):
     """``frame`` as a driver-side Arrow table if it has at most ``gate``
@@ -53,14 +58,13 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_rounds: int = 30,
     driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component id =
     min node id in the component.  Raises if not converged within
-    ``max_rounds`` (diameter bound exceeded — see module doc).
+    ``CC_MAX_ROUNDS`` (diameter bound exceeded — see module doc).
 
-    Size-gated two-regime execution (group_percentiles discipline):
+    Size-gated two-regime execution:
     the edge list is the DEDUP BYPRODUCT — orders of magnitude smaller
     than the corpus (LSH bucket caps bound it) — so up to
     ``driver_max_edges`` (~16 MB of id pairs at the 1M default) the
@@ -128,7 +132,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_rounds):
+    for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
             und.join(labels, und["u"] == labels["node"])
             .groupBy(F.col("v").alias("node2"))
@@ -149,8 +153,8 @@ def connected_components(
         # blew past any fixed round cap.  Shortcutting through the
         # label graph (a label is always a node id of the same
         # component, so the self-join below always resolves) halves the
-        # effective diameter per round: convergence is O(log d), and
-        # max_rounds=30 now covers diameters past 2^30.  Labels only
+        # effective diameter per round: convergence is O(log d) (see
+        # CC_MAX_ROUNDS).  Labels only
         # ever decrease toward the component min, so the fixpoint is
         # unchanged — pinned by test_graph_cc_long_chain_converges.
         # checkpoint before the self-join so the neighbor-min subtree
@@ -174,7 +178,9 @@ def connected_components(
         labels = new_labels.drop("_changed")
         if changed == 0:
             return labels.select("node", F.col("label").alias("component"))
-    raise RuntimeError(f"connected_components: no fixpoint in {max_rounds} rounds")
+    raise RuntimeError(
+        f"connected_components: no fixpoint in {CC_MAX_ROUNDS} rounds"
+    )
 
 
 def dedup_clusters(

@@ -34,9 +34,8 @@ def write_bucketed(
     num_buckets: int,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
-    """Persist ``df`` as a managed table hash-bucketed on ``keys``.
+    """Persist ``df`` as a managed parquet table hash-bucketed on ``keys``.
 
     ``sort_cols`` (default: the bucket keys) pre-sorts within each
     bucket file, so a later sort-merge join skips its Sort too when the
@@ -57,7 +56,7 @@ def write_bucketed(
     (
         df.repartition(num_buckets, *keys)
         .write.mode(mode)
-        .format(fmt)
+        .format("parquet")
         .bucketBy(num_buckets, *keys)
         .sortBy(*(sort_cols or keys))
         .saveAsTable(table)
@@ -74,9 +73,8 @@ def compact_table(
     spark: SparkSession,
     path: str,
     target_file_mb: int = 256,
-    fmt: str = "parquet",
 ) -> int:
-    """Rewrite a (possibly many-small-files) table directory into
+    """Rewrite a (possibly many-small-files) parquet table directory into
     ~``target_file_mb`` files — the maintenance job every streaming
     sink needs: micro-batches each append a file per partition, and a
     week of 30 s triggers is ~20k tiny files whose open/seek overhead
@@ -100,10 +98,10 @@ def compact_table(
         if not f.startswith((".", "_"))
     )
     n_files = max(1, math.ceil(size_b / (target_file_mb * 1024 * 1024)))
-    df = spark.read.format(fmt).load(path)
+    df = spark.read.parquet(path)
     staged = path.rstrip("/") + ".compacting"
     old = path.rstrip("/") + ".old"
-    df.repartition(n_files).write.mode("overwrite").format(fmt).save(staged)
+    df.repartition(n_files).write.mode("overwrite").parquet(staged)
     os.rename(path, old)
     os.rename(staged, path)
     shutil.rmtree(old, ignore_errors=True)
@@ -116,8 +114,6 @@ def merge_upsert(
     updates: DataFrame,
     keys: list[str],
     order_col: str | None = None,
-    tombstones: bool = True,
-    fmt: str = "parquet",
 ) -> None:
     """Batch MERGE INTO for a keyed parquet table: upsert ``updates``
     by key, deleting keys whose update row is a tombstone (all non-key,
@@ -146,28 +142,28 @@ def merge_upsert(
 
     value_cols = [c for c in updates.columns if c not in keys]
     batch_keys, upserts = compact_changelog_batch(
-        updates, keys, value_cols, order_col, tombstones
+        updates, keys, value_cols, order_col
     )
     if os.path.exists(path):
-        current = spark.read.schema(updates.schema).format(fmt).load(path)
+        current = spark.read.schema(updates.schema).parquet(path)
         merged = current.join(
             batch_keys, on=keys, how="left_anti"
         ).unionByName(upserts)
     else:
         merged = upserts
     staged = tempfile.mkdtemp(prefix="merge_upsert_")
-    merged.write.mode("overwrite").format(fmt).save(staged)
-    materialized = spark.read.format(fmt).load(staged)
+    merged.write.mode("overwrite").parquet(staged)
+    materialized = spark.read.parquet(staged)
     if os.path.exists(path):
         old = path.rstrip("/") + ".old"
-        materialized.write.mode("overwrite").format(fmt).save(
+        materialized.write.mode("overwrite").parquet(
             path.rstrip("/") + ".staging"
         )
         os.rename(path, old)
         os.rename(path.rstrip("/") + ".staging", path)
         shutil.rmtree(old, ignore_errors=True)
     else:
-        materialized.write.mode("overwrite").format(fmt).save(path)
+        materialized.write.mode("overwrite").parquet(path)
     shutil.rmtree(staged, ignore_errors=True)
 
 

@@ -1159,7 +1159,6 @@ def reduce_dim_rp(
     out_dim: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    jl_scale: bool = False,
 ) -> DataFrame:
     """Random-projection dimensionality reduction (Johnson–Lindenstrauss
     / Achlioptas dense variant): project each vector onto ``out_dim``
@@ -1169,21 +1168,17 @@ def reduce_dim_rp(
     the reduced vectors feed cheaper clustering / ANN / dedup stages at
     1/‖dim/out_dim‖ the IO.
 
-    ``jl_scale`` multiplies by 1/√out_dim (the isometry normalization);
-    off by default so the oracle is a plain dot product.  Pure per-row
-    fold expressions — codegen, zero shuffle, rides the scan; the
+    Coordinates are the plain dot products, without the 1/√out_dim
+    isometry normalization, so the oracle is a plain dot product; scale
+    downstream if absolute distances matter.  Pure per-row fold
+    expressions — codegen, zero shuffle, rides the scan; the
     projection matrix is literals in the plan, no broadcast.
     """
-    import math
-
     v = dbl_arr_sql(qcol(vec_col))
-    cols = []
-    for d in range(out_dim):
-        plane = _hyperplane(d, dim)
-        proj = dot_sql(v, dlit_array(plane))
-        if jl_scale:
-            proj = f"({proj} / {dlit(math.sqrt(float(out_dim)))})"
-        cols.append(F.expr(proj).alias(f"rp_{d}"))
+    cols = [
+        F.expr(dot_sql(v, dlit_array(_hyperplane(d, dim)))).alias(f"rp_{d}")
+        for d in range(out_dim)
+    ]
     return df.select(F.col(id_col), *cols)
 
 

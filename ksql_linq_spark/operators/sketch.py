@@ -35,6 +35,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Greenwald-Khanna rank accuracy of the approx percentile regime: rank
+# error at most 1/PERCENTILE_ACCURACY.
+PERCENTILE_ACCURACY = 10_000
+# Count-min sketch shape, shared by cm_sketch and cm_estimate (a probe
+# must hash into the same depth x width grid the counters were built on).
+CM_DEPTH = 4
+CM_WIDTH = 256
+
 
 def _local_counts(support: float):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -83,24 +91,19 @@ def group_percentiles(
     keys: list[str],
     col_probs: dict[str, list[tuple[float, str]]],
     *,
-    exact_max_rows: int = 10_000_000,
-    accuracy: int = 10_000,
-    mode: str | None = None,
+    mode: str,
     compress: bool = True,
 ) -> DataFrame:
-    """Size-gated per-group percentiles — the public percentile operator.
+    """Per-group percentiles — the public percentile operator.
 
     ``col_probs`` maps value column -> [(probability, output_alias)].
-    Below ``exact_max_rows`` input rows the exact interpolated
-    ``percentile`` runs (bit-parity with DuckDB ``quantile_cont``);
-    above it the Greenwald-Khanna ``percentile_approx`` sketch takes
-    over automatically — exact percentile is a per-group sort, which is
-    the wrong default at 100 TB, while the GK sketch is one map-side-
-    combinable pass with bounded rank error 1/``accuracy``.
-
-    ``mode`` forces ``"exact"`` / ``"approx"`` regardless of size (the
-    row-count probe is one metadata-cheap parquet count job; pass a mode
-    to skip it when the regime is known a priori).
+    ``mode="exact"`` runs the exact interpolated ``percentile``
+    (bit-parity with DuckDB ``quantile_cont``); ``mode="approx"`` runs
+    the Greenwald-Khanna ``percentile_approx`` sketch — exact
+    percentile is a per-group sort, which is the wrong choice at
+    100 TB, while the GK sketch is one map-side-combinable pass with
+    bounded rank error 1/``PERCENTILE_ACCURACY``.  The caller names the
+    regime; the operator never runs a job to choose it.
 
     ``compress`` (exact regime only): pre-reduce to (keys, value, count)
     with a codegen hash aggregate and run ``percentile(value, p, count)``
@@ -111,13 +114,15 @@ def group_percentiles(
     the extra exchange costs more than it saves, so callers in that
     regime pass ``compress=False`` (measured 0.72 → 0.83 s on events).
     """
-    if mode is None:
-        mode = "exact" if df.count() <= exact_max_rows else "approx"
     if mode not in ("exact", "approx"):
-        raise ValueError(f"mode must be exact|approx|None, got {mode!r}")
+        raise ValueError(f"mode must be exact|approx, got {mode!r}")
     if mode == "approx" or not compress:
         agg_of = (
-            (lambda col, p: F.percentile_approx(col, F.lit(p), F.lit(accuracy)))
+            (
+                lambda col, p: F.percentile_approx(
+                    col, F.lit(p), F.lit(PERCENTILE_ACCURACY)
+                )
+            )
             if mode == "approx"
             else (lambda col, p: F.percentile(col, F.lit(p)))
         )
@@ -188,16 +193,11 @@ def _recombine_on_keys(
     return out.select(*order)
 
 
-def cm_sketch(
-    df,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-):
+def cm_sketch(df, key_col: str):
     """Count-min sketch (Cormode & Muthukrishnan 2005) as a DataFrame:
-    ``depth × width`` counters from md5-derived row hashes.  The sketch
-    answers frequency point queries in O(depth) from a table whose size
-    is FIXED (depth·width rows) no matter how many keys stream through —
+    ``CM_DEPTH × CM_WIDTH`` counters from md5-derived row hashes.  The
+    sketch answers frequency point queries in O(depth) from a table whose
+    size is FIXED (depth·width rows) no matter how many keys stream through —
     and it is MERGEABLE: counters from partitions/batches/days combine
     by summing slot-wise, the same associative-carrier property
     operators/incremental.py exploits.
@@ -230,10 +230,10 @@ def cm_sketch(
                         16,
                         10,
                     ).cast("bigint")
-                    % width
+                    % CM_WIDTH
                 ).alias("slot"),
             )
-            for d in range(depth)
+            for d in range(CM_DEPTH)
         ]
     )
     return (
@@ -247,8 +247,6 @@ def cm_estimate(
     counters,
     keys,
     key_name: str = "key",
-    depth: int = 4,
-    width: int = 256,
 ):
     """Point-query the sketch for a literal key list: est(k) = min over
     depths of counter[d, slot_d(k)].  The probe dim is depth·|keys| rows
@@ -259,11 +257,11 @@ def cm_estimate(
     spark = counters.sparkSession
     probe_rows = []
     for k in keys:
-        for d in range(depth):
+        for d in range(CM_DEPTH):
             import hashlib
 
             h = hashlib.md5(f"{d}:{k}".encode()).hexdigest()[:8]
-            probe_rows.append((str(k), d, int(h, 16) % width))
+            probe_rows.append((str(k), d, int(h, 16) % CM_WIDTH))
     probes = spark.createDataFrame(
         probe_rows, f"{key_name} string, depth int, slot bigint"
     )
@@ -293,8 +291,8 @@ def weighted_median(
     (per-group) total broadcast back; both shuffles key on the group.
     All-integer comparisons when weights are integers — engine-exact.
     At unbounded group cardinality this is the exact regime; the GK
-    sketch generalizes to weighted ranks the same way group_percentiles
-    switches.
+    sketch generalizes to weighted ranks the same way group_percentiles'
+    approx regime does.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F

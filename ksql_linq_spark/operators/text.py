@@ -99,9 +99,10 @@ def quality_score(text, lang: str = "en") -> Column:
     return (length_ok * punct_ok * sw_ok * mwl_ok).alias("quality")
 
 
-def detect_language(text) -> Column:
-    """Stopword-hit language heuristic: argmax of per-language hit counts,
-    'und' (undetermined) when nothing hits.  One expression, no UDF.
+def _stopword_argmax(toks: Column) -> Column:
+    """Language of a token array: argmax of per-language stopword hit
+    counts (with multiplicity), first language in ``STOPWORDS`` wins
+    ties, 'und' (undetermined) when nothing hits.
 
     The argmax is ``array_max`` over (hits, -position, lang) structs —
     lexicographic struct compare gives greatest-hits with
@@ -109,18 +110,16 @@ def detect_language(text) -> Column:
     folded when/otherwise formulation embeds the running best twice per
     language → a 2^|langs| expression tree that Catalyst/codegen chokes
     on: 20 s/query at 10 languages, measured.)"""
-    c = F.lower(_c(text))
-    toks = tokens(c)
 
-    def _hit(sw: list[str]):
+    def _hit(ws: list[str]):
         # NB: pyspark higher-order lambdas must be unary — capture via
         # closure, not default args (extra params get bound to Columns)
-        return lambda t: t.isin(*sw)
+        return lambda tk: tk.isin(*ws)
 
     cands = F.array(
         *[
             F.struct(
-                F.size(F.filter(toks, _hit(ws))).alias("h"),
+                F.size(F.filter(toks, _hit(ws))).cast("long").alias("h"),
                 F.lit(-i).alias("p"),
                 F.lit(lang).alias("lang"),
             )
@@ -129,6 +128,12 @@ def detect_language(text) -> Column:
     )
     best = F.array_max(cands)
     return F.when(best["h"] > 0, best["lang"]).otherwise(F.lit("und"))
+
+
+def detect_language(text) -> Column:
+    """Stopword-hit language heuristic (:func:`_stopword_argmax` over
+    the lowercased tokens).  One expression, no UDF."""
+    return _stopword_argmax(tokens(F.lower(_c(text))))
 
 
 def language_id_table(df, text_col: str = "text", id_col: str = "doc_id",
@@ -154,24 +159,7 @@ def language_id_table(df, text_col: str = "text", id_col: str = "doc_id",
         *extra,
         F.explode(F.array(F.struct(toks.alias("t")))).alias("_b"),
     ).select(F.col(id_col), *extra, F.col("_b.t").alias("_t"))
-
-    def _hit(ws: list[str]):
-        # NB: pyspark higher-order lambdas must be unary — capture via
-        # closure, not default args (extra params get bound to Columns)
-        return lambda tk: tk.isin(*ws)
-
-    cands = F.array(
-        *[
-            F.struct(
-                F.size(F.filter(F.col("_t"), _hit(ws))).cast("long").alias("h"),
-                F.lit(-i).alias("p"),
-                F.lit(lang).alias("lang"),
-            )
-            for i, (lang, ws) in enumerate(STOPWORDS.items())
-        ]
-    )
-    best = F.array_max(cands)
-    detected = F.when(best["h"] > 0, best["lang"]).otherwise(F.lit("und"))
+    detected = _stopword_argmax(F.col("_t"))
     return barrier.select(
         F.col(id_col), *extra, detected.alias("detected_lang")
     )
@@ -536,10 +524,7 @@ def tfidf_top_terms(df, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def unigram_logprob_score(
-    df, text_col: str = "text", id_col: str = "doc_id",
-    broadcast_lm: bool = True,
-):
+def unigram_logprob_score(df, text_col: str = "text", id_col: str = "doc_id"):
     """Corpus-unigram language-model score per document — the cheap
     stand-in for CCNet/CCMatrix perplexity filtering: documents whose
     tokens are improbable under the corpus unigram distribution (rare
@@ -552,8 +537,7 @@ def unigram_logprob_score(
     shuffle) → term-frequency dim derived FROM those counts (same
     trick as tfidf: TF rows are distinct (doc,term), so summing their
     counts per term needs no second pass) → broadcast LM dim join →
-    per-doc rollup.  ``broadcast_lm=False`` falls back to a shuffle
-    join for adversarial vocabularies.
+    per-doc rollup.
 
     The TF frame feeds three branches (LM dim, corpus total, the join
     spine); Catalyst does not reuse the exchange across them, so
@@ -579,13 +563,11 @@ def unigram_logprob_score(
     )
     lm = tf.groupBy("term").agg(F.sum("c").alias("cf"))
     total = lm.agg(F.sum("cf").alias("total"))
-    if broadcast_lm:
-        lm = F.broadcast(lm)
     contrib = F.round(
         F.col("c") * F.log(F.col("cf").cast("double") / F.col("total")), 6
     ).cast("decimal(18,6)")
     return (
-        tf.join(lm, "term")
+        tf.join(F.broadcast(lm), "term")
         .join(F.broadcast(total))
         .groupBy(id_col)
         .agg(

@@ -54,12 +54,10 @@ def _sql_type(dt: T.DataType) -> str:
     return dt.simpleString().upper()  # decimal(p,s), array<...>, map<...>
 
 
-def create_table_ddl(
-    entity: Entity, location: str | None = None, fmt: str = "parquet"
-) -> str:
+def create_table_ddl(entity: Entity, location: str | None = None) -> str:
     """S3/S4 analog of DDLQueryGenerator.GenerateCreateStream/Table
     (/root/reference/src/Query/Pipeline/DDLQueryGenerator.cs:50-126) —
-    executable Spark SQL."""
+    executable Spark SQL for a parquet table."""
     cols = ",\n".join(
         f"  {c.name} {_sql_type(c.spark_type)}"
         + ("" if c.nullable else " NOT NULL")
@@ -78,7 +76,7 @@ def create_table_ddl(
     loc = f"\nLOCATION '{location}'" if location else ""
     return (
         f"CREATE TABLE IF NOT EXISTS {entity.name} (\n{cols}\n)\n"
-        f"USING {fmt}{loc}\nTBLPROPERTIES ({prop_sql});"
+        f"USING parquet{loc}\nTBLPROPERTIES ({prop_sql});"
     )
 
 

@@ -38,10 +38,15 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
         pass  # locked static conf — fall back to whatever the session has
 
 
-def _ntz_to_ltz(df: DataFrame) -> DataFrame:
-    """Cast any TIMESTAMP_NTZ column to TIMESTAMP (fallback when the scan
-    happened before the inferTimestampNTZ conf applied).  Under a UTC
-    session tz the cast is value-preserving."""
+def _normalize_ts(df: DataFrame, name: str) -> DataFrame:
+    """Convert table ``name``'s nanos-as-BIGINT columns to µs TIMESTAMP
+    by ``DIV 1000``, then cast any TIMESTAMP_NTZ column to TIMESTAMP
+    (fallback when the scan happened before the inferTimestampNTZ conf
+    applied).  Under a UTC session tz the cast is value-preserving."""
+    for col in _NANOS_TS_COLS.get(name, []):
+        f = dict(zip(df.schema.names, df.schema.fields))[col]
+        if isinstance(f.dataType, T.LongType):
+            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
     casts = [
         f.name
         for f in df.schema.fields
@@ -86,12 +91,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if app_id is not None and key in _TABLE_PLAN_CACHE:
         return _TABLE_PLAN_CACHE[key]
     _ensure_nanos_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for col in _NANOS_TS_COLS.get(name, []):
-        f = dict(zip(df.schema.names, df.schema.fields))[col]
-        if isinstance(f.dataType, T.LongType):
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
-    df = _ntz_to_ltz(df)
+    df = _normalize_ts(
+        spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
+    )
     if app_id is not None:
         evict_foreign_apps(_TABLE_PLAN_CACHE, app_id, 256)  # ~tables x sf_dirs
         _TABLE_PLAN_CACHE[key] = df
@@ -99,12 +101,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def read_stream_from_table(
-    spark: SparkSession, sf_dir: str, name: str, max_files_per_trigger: int = 1
+    spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
     """File-based streaming source over a driver table (test/dev path).
 
     S1 analog when no Kafka is available: replays the parquet file through
-    Structured Streaming with the same ns normalization.
+    Structured Streaming, one file per trigger, with the same ns
+    normalization.
     """
     _ensure_nanos_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -120,14 +123,10 @@ def read_stream_from_table(
         path = d
     df = (
         spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    for col in _NANOS_TS_COLS.get(name, []):
-        f = dict(zip(df.schema.names, df.schema.fields))[col]
-        if isinstance(f.dataType, T.LongType):
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
-    return _ntz_to_ltz(df)
+    return _normalize_ts(df, name)
 
 
 def kafka_source_options(
@@ -291,17 +290,16 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    header: bool = True,
     corrupt_col: str = "_corrupt",
 ) -> DataFrame:
-    """CSV with an explicit schema (never inferSchema — that is a full
-    extra scan); malformed rows land in ``corrupt_col``."""
+    """CSV with a header row and an explicit schema (never inferSchema —
+    that is a full extra scan); malformed rows land in ``corrupt_col``."""
     full = T.StructType(
         list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
     )
     return (
         spark.read.schema(full)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("timestampFormat", _TS_FMT)
         .option("columnNameOfCorruptRecord", corrupt_col)
@@ -309,9 +307,9 @@ def read_csv(
     )
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True,
-              mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", str(header).lower()).option(
+def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """CSV sink with a header row (round-trips through :func:`read_csv`)."""
+    df.write.mode(mode).option("header", "true").option(
         "timestampFormat", _TS_FMT
     ).csv(path)
 
@@ -321,9 +319,8 @@ def incremental_read(
     data_glob: str,
     manifest_path: str,
     schema=None,
-    fmt: str = "parquet",
 ):
-    """Manifest-tracked incremental batch ingest — the batch twin of a
+    """Manifest-tracked incremental parquet batch ingest — the batch twin of a
     streaming file source's checkpoint (Auto-Loader-lite): read ONLY
     files not yet recorded in the manifest, and expose an explicit
     ``commit()`` so the manifest advances exactly when the caller's
@@ -362,4 +359,4 @@ def incremental_read(
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.format(fmt).load(new_files), new_files, commit
+    return reader.parquet(*new_files), new_files, commit

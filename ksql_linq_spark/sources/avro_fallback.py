@@ -173,16 +173,17 @@ def strip_confluent_header(framed: bytes) -> tuple[int, bytes]:
 # ------------------------------------------------------------- spark adapter
 
 
-def avro_decode_pandas(df, value_col: str, schema_json: str, framed: bool = True):
+def avro_decode_pandas(df, value_col: str, schema_json: str):
     """Distributed jar-free Avro decode: BINARY column -> typed columns
     via ``mapInPandas`` (Arrow batches in/out; python only per record —
     the slow-but-always-available path; prefer ``sources.avro_decode``
     when the spark-avro jar is present).
 
     Output schema: the record's fields mapped to Spark types, with
-    nullable union branches nullable.  Undecodable values yield a NULL
-    row body plus the raw bytes in ``_corrupt`` (DLQ discipline, same as
-    the text readers)."""
+    nullable union branches nullable.  Values are Confluent-framed
+    (:func:`strip_confluent_header`).  Undecodable values, unframed ones
+    included, yield a NULL row body plus the raw bytes in ``_corrupt``
+    (DLQ discipline, same as the text readers)."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -208,7 +209,7 @@ def avro_decode_pandas(df, value_col: str, schema_json: str, framed: bool = True
             rows = []
             for raw in b[value_col]:
                 try:
-                    body = strip_confluent_header(bytes(raw))[1] if framed else bytes(raw)
+                    body = strip_confluent_header(bytes(raw))[1]
                     rec = decode_record(schema_json, body)
                     rows.append([rec.get(n) for n in names] + [None])
                 except Exception:

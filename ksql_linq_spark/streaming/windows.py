@@ -117,11 +117,10 @@ def stream_stream_join(
 
 
 def stream_static_join(
-    stream: DataFrame, static: DataFrame, on, how: str = "inner", broadcast: bool = True
+    stream: DataFrame, static: DataFrame, on, how: str = "inner"
 ) -> DataFrame:
     """J3 stream-table join: the static side is broadcast per micro-batch."""
-    s = F.broadcast(static) if broadcast else static
-    return stream.join(s, on, how)
+    return stream.join(F.broadcast(static), on, how)
 
 
 def start_memory_sink(df: DataFrame, name: str, output_mode: str):
@@ -139,7 +138,6 @@ def compact_changelog_batch(
     keys: list[str],
     value_cols: list[str],
     order_col: str | None = None,
-    tombstones: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Reduce a changelog batch to one DETERMINISTIC survivor per key
     and split out deletes.  Returns ``(batch_keys, upserts)``:
@@ -170,7 +168,7 @@ def compact_changelog_batch(
     else:
         batch = batch_df.dropDuplicates(keys)
     tomb_cols = [c for c in value_cols if c != order_col]
-    if tombstones and tomb_cols:
+    if tomb_cols:
         is_tomb = F.lit(True)
         for c in tomb_cols:
             is_tomb = is_tomb & F.col(c).isNull()
@@ -185,7 +183,6 @@ def keyed_table_sink(
     path: str,
     keys: list[str],
     checkpoint: str,
-    tombstones: bool = True,
     order_col: str | None = None,
 ):
     """Materialize an update-mode (EMIT CHANGES) aggregate as a keyed
@@ -197,7 +194,7 @@ def keyed_table_sink(
     parquet table Spark reads back directly (SURVEY.md §2.1 S9: no cache
     subsystem needed).
 
-    **Tombstones** (``tombstones=True``): a batch row whose non-key
+    **Tombstones** (always on): a batch row whose non-key
     columns are ALL NULL is a delete — the key is removed from the table
     and the row is not inserted.  This is the reference's
     delete-on-null-value contract
@@ -218,7 +215,7 @@ def keyed_table_sink(
     spark = df.sparkSession
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(spark, path, batch_df, keys, order_col, tombstones)
+        merge_upsert(spark, path, batch_df, keys, order_col)
 
     return (
         df.writeStream.foreachBatch(upsert)

@@ -3,8 +3,8 @@
 The artifact test is the CI teeth the r4 verdict asked for: the
 committed BENCH_full_last.json must carry no query >2x slower (and
 >0.3 s absolute) than the previous round's committed record unless
-SCALING.md names the cost.  The r4 geo_distance commit would have
-failed this before merge.
+the gate's ``EXEMPT`` table holds a live entry for it.  The r4
+geo_distance commit would have failed this before merge.
 """
 
 from __future__ import annotations
@@ -28,9 +28,6 @@ def _write(tmp_path, name, queries, sf=0.1):
 
 
 def test_gate_flags_only_real_regressions(tmp_path):
-    # the regressing fixture needs a name that cannot occur as a word
-    # in SCALING.md prose — the gate's exemption is a word-boundary
-    # match against that file ("slow" was exempted by ordinary text)
     base = _write(tmp_path, "base.json", {
         "fast": 0.05, "slowpoke_zq": 1.0, "errored": -1.0, "gone": 0.4,
     })
@@ -62,5 +59,29 @@ def test_committed_bench_passes_gate():
     violations, _ = bench_gate.gate(current, baseline)
     assert not violations, (
         "committed bench regressed vs previous round "
-        "(document deliberate costs in SCALING.md):\n" + "\n".join(violations)
+        "(exempt deliberate costs in bench_gate.EXEMPT):\n" + "\n".join(violations)
     )
+
+
+def test_scaling_md_mention_does_not_exempt(tmp_path):
+    # agg_percentiles is named in SCALING.md prose; that is no exemption
+    with open(os.path.join(REPO, "SCALING.md")) as f:
+        assert "agg_percentiles" in f.read()
+    base = _write(tmp_path, "BENCH_full_r07_dev.json", {"agg_percentiles": 1.0})
+    cur = _write(tmp_path, "cur.json", {"agg_percentiles": 3.0})
+    violations, _ = bench_gate.gate(cur, base)
+    assert len(violations) == 1 and violations[0].startswith("agg_percentiles:")
+
+
+def test_exempt_entry_lapses_at_its_expiry_round(tmp_path, monkeypatch):
+    monkeypatch.setattr(
+        bench_gate, "EXEMPT", {"slowpoke_zq": (8, "bigger index by design")}
+    )
+    cur = _write(tmp_path, "cur.json", {"slowpoke_zq": 3.0})
+    live = _write(tmp_path, "BENCH_full_r07_dev.json", {"slowpoke_zq": 1.0})
+    violations, notes = bench_gate.gate(cur, live)
+    assert violations == []
+    assert any("exempt until round 8" in n for n in notes)
+    expired = _write(tmp_path, "BENCH_full_r08_dev.json", {"slowpoke_zq": 1.0})
+    violations, _ = bench_gate.gate(cur, expired)
+    assert len(violations) == 1 and violations[0].startswith("slowpoke_zq:")

@@ -258,3 +258,75 @@ def test_every_operator_definition_is_referenced():
     assert not unreferenced, "unreferenced operator definitions:\n" + "\n".join(
         unreferenced
     )
+
+
+def test_no_bool_option_left_at_its_default():
+    """Option guard: a module-level function in ``ksql_linq_spark/``
+    may not keep a ``bool``-defaulted parameter that no call site sets
+    to anything but its default — such a switch only keeps an untested
+    branch alive; fix the value and delete the branch instead.
+
+    Call sites are searched in ``ksql_linq_spark/``, ``tests/``,
+    ``tools/``, ``perfbench/`` and ``bench.py`` and matched by function
+    name (``f(...)`` or ``<anything>.f(...)``).  An argument bound to
+    the parameter counts as setting it unless it is the literal
+    default; a ``**kwargs`` call counts as passing every parameter, a
+    ``*args`` call every positional parameter from its position on."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    files = [root / "bench.py"] + [
+        p
+        for d in ("ksql_linq_spark", "tests", "tools", "perfbench")
+        for p in sorted((root / d).rglob("*.py"))
+    ]
+    trees = {p: ast.parse(p.read_text()) for p in files}
+    calls = defaultdict(list)
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name:
+                    calls[name].append(node)
+
+    def sets(call, idx, pname, default) -> bool:
+        def non_default(v):
+            return not (isinstance(v, ast.Constant) and v.value is default)
+
+        for kw in call.keywords:
+            if kw.arg is None or (kw.arg == pname and non_default(kw.value)):
+                return True
+        if idx is None:
+            return False
+        if any(isinstance(a, ast.Starred) for a in call.args[: idx + 1]):
+            return True
+        return idx < len(call.args) and non_default(call.args[idx])
+
+    never_set = []
+    pkg = root / "ksql_linq_spark"
+    for path, tree in trees.items():
+        if pkg not in path.parents:
+            continue
+        for fn in tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            positional = a.posonlyargs + a.args
+            pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+            pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for param, d in pairs:
+                if not (isinstance(d, ast.Constant) and isinstance(d.value, bool)):
+                    continue
+                idx = positional.index(param) if param in positional else None
+                if not any(
+                    sets(c, idx, param.arg, d.value) for c in calls[fn.name]
+                ):
+                    rel = path.relative_to(root)
+                    never_set.append(f"{rel}:{fn.lineno} {fn.name}({param.arg}={d.value})")
+    assert not never_set, (
+        "bool parameters no call site sets off their default — make the "
+        "value a constant and delete the branch:\n" + "\n".join(never_set)
+    )

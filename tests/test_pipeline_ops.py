@@ -1481,7 +1481,7 @@ def test_bpe_canonical_merges_and_roundtrip(spark):
     joined = "".join(out[3].bpe_tokens)
     assert joined == f"low{END}lower{END}newest{END}"
     assert out[2].n_bpe == 0 and out[2].bpe_tokens == []
-    # lowercase=True folds LOW into the learned 'low'
+    # lowercasing folds LOW into the learned 'low'
     assert out[1].bpe_tokens[-len(_encode_word("low", ranks)):] == _encode_word("low", ranks)
 
 

@@ -466,3 +466,16 @@ def test_ab_summarizes_canned_benchmark_lines():
     pairs[0]["change"] = ab.parse_result(line(3.5, 200, correct=False))
     assert not ab.summarize(pairs, {"throughput_per_s": "higher"})["all_correct"]
     assert ab.quartiles([5.0]) == (5.0, 5.0, 5.0)
+
+
+def test_skew_probe_verdict_needs_examined_stages():
+    """The skew probe passes only when it examined at least one stage
+    and every examined stage is under STRAGGLER_RATIO: a leg whose
+    stages were all filtered out has checked nothing."""
+    skew = _load_tool("skew_probe")
+    r = skew.STRAGGLER_RATIO
+    assert not skew.straggler_verdict([])
+    assert not skew.straggler_verdict(
+        [("agg", 1.5, 120.0, 4), ("join", r + 0.5, 200.0, 4)]
+    )
+    assert skew.straggler_verdict([("agg", 1.5, 120.0, 4), ("join", r, 200.0, 4)])

@@ -10,8 +10,13 @@ Policy, per query present in both records (min-of-2 times, same SF):
 - violation when ``current > 2x baseline`` AND ``current - baseline >
   0.3 s`` (the absolute floor keeps 0.05 s queries from tripping on
   host noise),
-- exempt when the query name appears in SCALING.md — the documented
-  place for "this costs more now, deliberately" entries,
+- exempt only while the query has a live entry in ``EXEMPT`` below —
+  query -> (expiry round, reason), the place for "this costs more now,
+  deliberately" decisions.  An entry lapses once the baseline's round
+  (parsed from its ``BENCH_full_r<N>`` file name, as
+  :func:`pick_baseline` does) reaches the expiry round; a baseline whose
+  name carries no round gets no exemption.  A query merely mentioned in
+  SCALING.md prose is not exempt,
 - queries new since the baseline are reported informationally, never
   violations.
 
@@ -34,15 +39,25 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RATIO = 2.0
 ABS_FLOOR_SEC = 0.3
 
+# Deliberate slowdowns: query name -> (expiry round, reason).  Exempts
+# the query while the baseline record's round is below the expiry.
+EXEMPT: dict[str, tuple[int, str]] = {}
+
+
+def bench_round(path: str) -> int | None:
+    """Round number of a ``BENCH_full_r<N>*.json`` record, else None."""
+    m = re.search(r"BENCH_full_r(\d+)", os.path.basename(path))
+    return int(m.group(1)) if m else None
+
 
 def pick_baseline(current_path: str) -> str | None:
     cands = []
     for p in glob.glob(os.path.join(REPO, "BENCH_full_r*.json")):
         if os.path.abspath(p) == os.path.abspath(current_path):
             continue
-        m = re.search(r"BENCH_full_r(\d+)", os.path.basename(p))
-        if m:
-            cands.append((int(m.group(1)), p))
+        r = bench_round(p)
+        if r is not None:
+            cands.append((r, p))
     return max(cands)[1] if cands else None
 
 
@@ -63,11 +78,7 @@ def gate(current_path: str, baseline_path: str) -> tuple[list[str], list[str]]:
             f"SF mismatch ({cur_sf} vs {base_sf}) — gate skipped"
         )
         return [], notes
-    try:
-        with open(os.path.join(REPO, "SCALING.md")) as f:
-            scaling = f.read()
-    except OSError:
-        scaling = ""
+    base_round = bench_round(baseline_path)
     for name in sorted(cur):
         c = cur[name]
         if name not in base:
@@ -82,11 +93,9 @@ def gate(current_path: str, baseline_path: str) -> tuple[list[str], list[str]]:
                 f"{name}: {b:.2f}s -> {c:.2f}s ({c / max(b, 1e-9):.1f}x, "
                 f"+{c - b:.2f}s)"
             )
-            # word-boundary match: a bare substring test would exempt a
-            # query whose name happens to appear inside ordinary prose
-            # (SCALING.md legitimately contains words like "slow")
-            if re.search(rf"\b{re.escape(name)}\b", scaling):
-                notes.append(f"exempt (named in SCALING.md): {msg}")
+            entry = EXEMPT.get(name)
+            if entry and base_round is not None and base_round < entry[0]:
+                notes.append(f"exempt until round {entry[0]} ({entry[1]}): {msg}")
             else:
                 violations.append(msg)
     return violations, notes
@@ -108,7 +117,7 @@ def main() -> int:
         print(f"note: {n}")
     if violations:
         print(f"\nREGRESSIONS vs {os.path.basename(baseline)} "
-              f"(> {RATIO}x and > +{ABS_FLOOR_SEC}s, not in SCALING.md):")
+              f"(> {RATIO}x and > +{ABS_FLOOR_SEC}s, no live EXEMPT entry):")
         for v in violations:
             print(f"  FAIL {v}")
         return 1

@@ -16,8 +16,11 @@ operator families whose topology must absorb skew:
 Straggler detection reads per-stage task-time quantiles from the
 Spark REST API (the probe session re-enables the UI): a stage whose
 max task runtime exceeds STRAGGLER_RATIO x its median — over stages
-with enough tasks and non-trivial medians — fails the probe.  Results
-are recorded in SCALING.md "Measured scale probe".
+with enough tasks and non-trivial medians — fails the probe, and so
+does a leg that leaves no stage to examine (a PASS must mean stages
+were checked).  "Enough tasks" is min(MIN_TASKS, the session's default
+parallelism), so a small host still examines its full-width stages.
+Results are recorded in SCALING.md "Measured scale probe".
 
 Usage: python tools/skew_probe.py            (runs all three probes)
 Timing note: run on an idle box; concurrent Spark runs oversubscribe
@@ -39,7 +42,7 @@ import numpy as np
 from ksql_linq_spark.session import build_session
 
 STRAGGLER_RATIO = 5.0
-MIN_TASKS = 8          # ignore trivially small stages
+MIN_TASKS = 8          # ignore trivially small stages (capped at defaultParallelism)
 MIN_MEDIAN_MS = 50.0   # ignore stages where scheduling noise dominates
 
 N_EVENTS = 1_000_000
@@ -86,22 +89,23 @@ def _gen_data(spark, root: str) -> None:
     spark.createDataFrame(vdf).write.mode("overwrite").parquet(f"{root}/emb")
 
 
-def _stage_straggler_ratios(spark) -> list[tuple[str, float, float, int]]:
+def _rest(spark, path: str):
+    sc = spark.sparkContext
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}{path}"
+    with urllib.request.urlopen(url) as r:
+        return json.load(r)
+
+
+def _stage_straggler_ratios(spark, stages) -> list[tuple[str, float, float, int]]:
     """(stage name, max/median runtime ratio, median ms, tasks) per
-    completed stage, via the REST API."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-
-    def get(path):
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}") as r:
-            return json.load(r)
-
+    examined stage of ``stages`` (REST completed-stage records)."""
+    min_tasks = min(MIN_TASKS, spark.sparkContext.defaultParallelism)
     out = []
-    for st in get("/stages?status=COMPLETE"):
+    for st in stages:
         sid, att = st["stageId"], st["attemptId"]
-        if st["numCompleteTasks"] < MIN_TASKS:
+        if st["numCompleteTasks"] < min_tasks:
             continue
-        q = get(f"/stages/{sid}/{att}/taskSummary?quantiles=0.5,1.0")
+        q = _rest(spark, f"/stages/{sid}/{att}/taskSummary?quantiles=0.5,1.0")
         med, mx = q["executorRunTime"]
         if med < MIN_MEDIAN_MS:
             continue
@@ -109,18 +113,32 @@ def _stage_straggler_ratios(spark) -> list[tuple[str, float, float, int]]:
     return out
 
 
+def straggler_verdict(ratios: list[tuple[str, float, float, int]]) -> bool:
+    """True when at least one stage was examined and none has a
+    max/median task-runtime ratio above STRAGGLER_RATIO."""
+    return bool(ratios) and all(r[1] <= STRAGGLER_RATIO for r in ratios)
+
+
 def _run(spark, label: str, fn) -> bool:
     spark.sparkContext._jsc.sc().statusStore()  # touch
+    before = {st["stageId"] for st in _rest(spark, "/stages?status=COMPLETE")}
     t0 = time.time()
     n = fn()
     dt = time.time() - t0
-    ratios = _stage_straggler_ratios(spark)
+    # only the stages this leg ran: an earlier leg's stages must not
+    # stand in for a leg that examined none of its own
+    stages = [
+        st for st in _rest(spark, "/stages?status=COMPLETE")
+        if st["stageId"] not in before
+    ]
+    ratios = _stage_straggler_ratios(spark, stages)
     worst = max(ratios, key=lambda r: r[1]) if ratios else ("-", 0.0, 0, 0)
-    ok = all(r[1] <= STRAGGLER_RATIO for r in ratios)
+    ok = straggler_verdict(ratios)
+    status = "OK" if ok else ("STRAGGLER" if ratios else "NO STAGES EXAMINED")
     print(
         f"{label}: {dt:.2f}s rows={n} stages={len(ratios)} "
         f"worst max/median={worst[1]:.2f} (median {worst[2]:.0f} ms, "
-        f"{worst[3]} tasks, {worst[0]!r}) -> {'OK' if ok else 'STRAGGLER'}"
+        f"{worst[3]} tasks, {worst[0]!r}) -> {status}"
     )
     return ok
 
@@ -155,10 +173,8 @@ def main() -> int:
     emb = spark.read.parquet(f"{root}/emb")
     ok = True
 
-    # each probe in its own "epoch": restart stages listing by using a
-    # fresh session would be cleaner, but stage ids are monotonically
-    # increasing, so running sequentially and checking after each run
-    # attributes any >5x stage to the probe that created it
+    # legs run sequentially in one session; _run judges each leg on
+    # the stages that completed during it
     ok &= _run(
         spark,
         "salted_agg(zipf user_id)",
