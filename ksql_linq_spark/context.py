@@ -12,8 +12,10 @@ streaming query per derived entity (handled in
 from __future__ import annotations
 
 import os
+import uuid
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.conversion import LocalDataToArrowConversion
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -102,7 +104,7 @@ class SparkKsqlContext:
                    is_stream: bool = False) -> "EventSet":
         """Typed EventSet<T> handle for one registered entity.
 
-        ``path`` is the writable storage location (required for add());
+        ``path`` is the writable local storage directory (required for add());
         reads go through the catalog view either way.
         """
         if is_stream and self._entities[name].is_table:
@@ -148,10 +150,12 @@ class EventSet:
         """Append rows, validated on the driver against the entity schema
         exactly as ``createDataFrame(rows, schema)`` validates them.
 
-        The batch goes to Spark as an Arrow table: a frame built from the
-        row list is a Python RDD, and its write has to run Python workers
-        (on a 4-core host a one-row add took about 0.55 s that way and
-        0.2 s from Arrow)."""
+        The batch is converted to Arrow by pyspark's own converter and
+        written on the driver as one parquet part file in the entity's
+        local storage directory, with no Spark job: it is written under a
+        ``.``-prefixed name, which Spark and Arrow do not list, and then
+        renamed into place.  Timestamps are stored as INT64 µs adjusted to
+        UTC (Spark's own writes use INT96); Spark reads both alike."""
         if self._path is None:
             raise ValueError(f"entity {self._entity.name!r} has no storage path")
         schema = self._entity.schema
@@ -161,8 +165,11 @@ class EventSet:
             verify(r)
         table = (LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
                  if rows else to_arrow_schema(schema).empty_table())
-        batch = self._ctx.spark.createDataFrame(table, schema)
-        batch.write.mode("append").parquet(self._path)
+        os.makedirs(self._path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+        tmp = os.path.join(self._path, f".{name}")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self._path, name))
         # refresh the catalog view over the storage
         self._ctx.spark.read.schema(schema).parquet(
             self._path

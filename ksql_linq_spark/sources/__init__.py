@@ -14,7 +14,9 @@ classpath so it is import-try gated.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,11 +117,16 @@ def read_stream_from_table(
     if os.path.isfile(path):
         # the streaming file source requires a directory: expose the file
         # through a symlink dir (dev/test-only path; real deployments
-        # stream from directories/Kafka anyway)
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix=f"stream_{name}_")
-        os.symlink(path, os.path.join(d, f"{name}.parquet"))
+        # stream from directories/Kafka anyway), one per source file,
+        # shared by every stream over it
+        real = os.path.abspath(path)
+        d = os.path.join(tempfile.gettempdir(), f"stream_{name}_"
+                         f"{hashlib.sha1(real.encode()).hexdigest()[:16]}")
+        os.makedirs(d, exist_ok=True)
+        try:
+            os.symlink(real, os.path.join(d, f"{name}.parquet"))
+        except FileExistsError:
+            pass
         path = d
     df = (
         spark.readStream.schema(batch.schema)

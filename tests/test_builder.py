@@ -197,7 +197,16 @@ def test_eventset_add_validates_and_writes_like_create_dataframe(spark, tmp_path
     def file_schema(d):
         return pq.read_schema(sorted(glob.glob(f"{tmp_path}/{d}/*.parquet"))[0]).remove_metadata()
 
-    assert file_schema("new") == file_schema("old")
+    # Spark's own write stores the timestamp as INT96 (pyarrow reads it as
+    # ns); add() stores INT64 µs adjusted to UTC.  Every other column has
+    # the file type and nullability of Spark's write.
+    import pyarrow as pa
+
+    new_s, old_s = file_schema("new"), file_schema("old")
+    ts = new_s.get_field_index("ts")
+    assert old_s.field("ts").type == pa.timestamp("ns")
+    assert new_s.field("ts").type == pa.timestamp("us", tz="UTC")
+    assert new_s.set(ts, old_s.field("ts")) == old_s
     new_df, old_df = spark.read.parquet(str(tmp_path / "new")), spark.read.parquet(str(tmp_path / "old"))
     assert new_df.schema == old_df.schema
     assert sorted(new_df.collect()) == sorted(old_df.collect())

@@ -25,6 +25,20 @@ def event_stream(spark, sf_dir):
     return read_stream_from_table(spark, sf_dir, "events")
 
 
+def test_stream_from_one_file_reuses_one_symlink_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """Every stream over the same driver file shares one symlink
+    directory, so repeated streams leave no temp dirs behind."""
+    import os
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    a = read_stream_from_table(spark, sf_dir, "events")
+    b = read_stream_from_table(spark, sf_dir, "events")
+    dirs = os.listdir(tmp_path)
+    assert len(dirs) == 1 and dirs[0].startswith("stream_events_")
+    assert os.listdir(tmp_path / dirs[0]) == ["events.parquet"]
+    assert a.schema == b.schema
+
+
 def _drain(query):
     query.processAllAvailable()
     query.stop()
