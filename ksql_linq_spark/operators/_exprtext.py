@@ -78,12 +78,12 @@ def _elem(arr_sql: str, i: int, cast: bool) -> str:
 
 def dot_sql(a: str, b: str, dim: int | None = None,
             cast_elements: bool = False) -> str:
-    """Dot-product text, the twin of ``similarity.dot``.
+    """Dot-product text, the one builder behind ``similarity.dot``.
 
     With ``dim``: the left-associative unrolled Add chain seeded at
     ``0.0D`` (whole-stage-codegen eligible).  Without: the
-    zip_with/aggregate interpreted fold.  Both bit-identical to the
-    Column builders (same seed, same order, same cast placement).
+    zip_with/aggregate interpreted fold.  The two are bit-identical
+    (same seed, same order, same cast placement).
     """
     if dim is not None:
         terms = ["0.0D"] + [
@@ -101,9 +101,8 @@ def dot_sql(a: str, b: str, dim: int | None = None,
 
 def cosine_sql(a: str, b: str, dim: int | None = None,
                cast_elements: bool = False) -> str:
-    """Cosine text: ``dot / (sqrt(dot_aa) * sqrt(dot_bb))`` — the twin
-    of ``similarity.cosine`` (which is dot/(norm*norm) with norm =
-    sqrt(self-dot))."""
+    """Cosine text: ``dot / (sqrt(dot_aa) * sqrt(dot_bb))`` — the one
+    builder behind ``similarity.cosine``."""
     return (
         f"({dot_sql(a, b, dim, cast_elements)} / "
         f"(SQRT({dot_sql(a, a, dim, cast_elements)}) * "

@@ -89,7 +89,6 @@ def compact_table(
     """
     import math
     import os
-    import shutil
 
     size_b = sum(
         os.path.getsize(os.path.join(dp, f))
@@ -98,14 +97,25 @@ def compact_table(
         if not f.startswith((".", "_"))
     )
     n_files = max(1, math.ceil(size_b / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    staged = path.rstrip("/") + ".compacting"
-    old = path.rstrip("/") + ".old"
-    df.repartition(n_files).write.mode("overwrite").parquet(staged)
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old, ignore_errors=True)
+    _write_swapped(spark.read.parquet(path).repartition(n_files), path)
     return n_files
+
+
+def _write_swapped(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet to the sibling ``<path>.staging``, then
+    rename it into ``path`` (moving any existing table aside first), so
+    readers never see a half-written table.  ``df`` may read ``path``
+    itself: it is fully written before the swap."""
+    import os
+    import shutil
+
+    base = path.rstrip("/")
+    staged, old = base + ".staging", base + ".old"
+    df.write.mode("overwrite").parquet(staged)
+    if os.path.exists(base):
+        os.rename(base, old)
+    os.rename(staged, base)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def merge_upsert(
@@ -135,8 +145,6 @@ def merge_upsert(
     update batch is small.
     """
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.windows import compact_changelog_batch
 
@@ -151,20 +159,7 @@ def merge_upsert(
         ).unionByName(upserts)
     else:
         merged = upserts
-    staged = tempfile.mkdtemp(prefix="merge_upsert_")
-    merged.write.mode("overwrite").parquet(staged)
-    materialized = spark.read.parquet(staged)
-    if os.path.exists(path):
-        old = path.rstrip("/") + ".old"
-        materialized.write.mode("overwrite").parquet(
-            path.rstrip("/") + ".staging"
-        )
-        os.rename(path, old)
-        os.rename(path.rstrip("/") + ".staging", path)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        materialized.write.mode("overwrite").parquet(path)
-    shutil.rmtree(staged, ignore_errors=True)
+    _write_swapped(merged, path)
 
 
 def zorder_value(cols: list, bits: int = 16):

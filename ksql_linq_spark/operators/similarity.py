@@ -1,10 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-Column primitives:
+Expression primitives:
 
-- :func:`dot` / :func:`norm` / :func:`cosine` — pure Column expressions
-  (unrolled chain or F.zip_with + F.aggregate): JVM-side fold,
-  deterministic left-to-right order.
+- :func:`dot` / :func:`norm` / :func:`cosine` — one Spark SQL
+  expression each, assembled as text over SQL operands and parsed by
+  one ``F.expr`` call (unrolled chain or zip_with + aggregate): JVM-side
+  fold, deterministic left-to-right order.
 
 Exact search:
 
@@ -51,17 +52,39 @@ from pyspark.sql import functions as F
 from ._exprtext import cosine_sql, dbl_arr_sql, dlit, dlit_array, dot_sql, ilit_array, qcol
 
 
-def dot(a, b, dim: int | None = None, cast_elements: bool = False) -> Column:
-    """Dot product.  With ``dim`` known statically the fold is unrolled
-    into a left-associative Add chain over element_at — bitwise identical
-    to the F.aggregate fold (same order, same 0.0 seed) but eligible for
-    whole-stage codegen instead of interpreted higher-order eval.
+def _require_sql(fn: str, *operands) -> None:
+    for x in operands:
+        if not isinstance(x, str):
+            raise TypeError(
+                f"{fn}: operands are SQL text (a column reference is "
+                f"qcol(name)), got {type(x).__name__}"
+            )
 
-    Operands may be Columns or SQL fragments (strings — a bare column
-    name is one).  When BOTH are strings the whole chain is assembled
-    as text and parsed by ONE ``F.expr`` call instead of ~6 py4j round
-    trips per term — a bit-identical tree (see operators/_exprtext) at
-    ~1/25 the driver-side build cost (guide §7.3).
+
+def dot(a: str, b: str, dim: int | None = None) -> Column:
+    """Dot product of two array operands given as SQL text (a column
+    reference is ``qcol(name)``), parsed by ONE ``F.expr`` call — one
+    JVM round trip instead of ~6 per term through the Column API (see
+    operators/_exprtext).  With ``dim`` known statically the fold is
+    unrolled into a left-associative Add chain over element_at —
+    bitwise identical to the zip_with/aggregate fold used without it
+    (same order, same 0.0 seed) but eligible for whole-stage codegen
+    instead of interpreted higher-order eval.  A Column operand raises
+    ``TypeError``."""
+    _require_sql("dot", a, b)
+    return F.expr(dot_sql(a, b, dim))
+
+
+def norm(a: str, dim: int | None = None, cast_elements: bool = False) -> Column:
+    """L2 norm, ``sqrt(dot(a, a))``; operand and ``cast_elements`` as
+    in :func:`cosine`."""
+    _require_sql("norm", a)
+    return F.expr(f"SQRT({dot_sql(a, a, dim, cast_elements)})")
+
+
+def cosine(a: str, b: str, dim: int | None = None, cast_elements: bool = False) -> Column:
+    """``dot / (norm_a * norm_b)``; operands and ``dim`` as in
+    :func:`dot`.
 
     ``cast_elements`` casts each element to double INSIDE the chain
     (for float arrays).  Never wrap the input in an array-level
@@ -69,47 +92,8 @@ def dot(a, b, dim: int | None = None, cast_elements: bool = False) -> Column:
     interpreted transform into every element_at reference (2*dim
     evaluations per pair when the expression lands in a join condition)
     — that is a ~100x regression at n^2 pair counts."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sql(a, b, dim, cast_elements))
-    if dim is not None:
-        def elem(c: Column, i: int) -> Column:
-            e = F.element_at(c, i)
-            return e.cast("double") if cast_elements else e
-
-        expr = F.lit(0.0)
-        for i in range(1, dim + 1):
-            expr = expr + elem(a, i) * elem(b, i)
-        return expr
-    if cast_elements:
-        # cast INSIDE the zip_with lambda (per element-pair, once) so
-        # the product is computed in double like the unrolled chain —
-        # float*float would round each product to float32 first,
-        # silently diverging from the dim-unrolled path and the numpy
-        # kernels (which are all-double)
-        prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    else:
-        prod = F.zip_with(a, b, lambda x, y: x * y)
-    return F.aggregate(
-        prod,
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a, dim: int | None = None, cast_elements: bool = False) -> Column:
-    if isinstance(a, str):
-        return F.expr(f"SQRT({dot_sql(a, a, dim, cast_elements)})")
-    return F.sqrt(dot(a, a, dim, cast_elements))
-
-
-def cosine(
-    a, b, dim: int | None = None, cast_elements: bool = False
-) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_sql(a, b, dim, cast_elements))
-    return dot(a, b, dim, cast_elements) / (
-        norm(a, dim, cast_elements) * norm(b, dim, cast_elements)
-    )
+    _require_sql("cosine", a, b)
+    return F.expr(cosine_sql(a, b, dim, cast_elements))
 
 
 # One cosine chunk holds at most ~64 MB of float64: an uncapped block
@@ -562,43 +546,31 @@ class ClumpedCorpusWarning(UserWarning):
     near-duplicate clump); candidate volume will blow up, not spread."""
 
 
-class ClumpedCorpusError(ValueError):
-    """Strict-mode variant of :class:`ClumpedCorpusWarning`."""
-
-
-def _clump_check(
-    pts,
-    C,
-    n_centroids: int,
-    warn_ratio: float = 8.0,
-    strict: bool = False,
-    context: str = "ivf_assign",
-):
+def _clump_check(pts, C, n_centroids: int):
     """Degenerate-clump guardrail — pure driver-side numpy over the
     training sample already in hand (zero extra Spark jobs).
 
     Measured pathology (r6 zipf/hot-cluster probe): a tight embedding
     clump is indivisible by the coarse quantizer — one cell held 30% of
     a 200k corpus at nlist 16 AND 448, so candidate volume (cell² work
-    in a kNN join) silently grows ~100× and neither nlist nor AQE
-    skew-split helps (sub-splitting measured no-win: 199 s vs 209 s).
-    Detection from the bounded sample is statistically sound: a clump
-    that matters (≥10% of the corpus) appears in a 4096-row sample with
-    overwhelming probability.
+    in a kNN join) silently grows ~100× and neither nlist nor a
+    sub-split of the hot cell reduces it (a sub-split only spreads it
+    across tasks).  Detection from the bounded sample is statistically
+    sound: a clump that matters (≥10% of the corpus) appears in a
+    4096-row sample with overwhelming probability.
 
-    Fires when the max/median sample-cell ratio exceeds ``warn_ratio``
-    or one cell holds ≥25% of the sample despite n_centroids ≥ 8.
-    Warns by default; raises :class:`ClumpedCorpusError` when
-    ``strict``.  Returns (ratio, max_fraction, fired) for callers that
-    react to the detection (ann_join auto-engages its sub-split cap
-    when skew-join is unavailable) and for tests/telemetry.
+    Fires when the max/median sample-cell ratio reaches 8 or one cell
+    holds ≥25% of the sample despite n_centroids ≥ 8, and then warns
+    and returns the sample's per-cell counts (one float per centroid;
+    :func:`ann_join` sizes its hot-cell sub-split from them).  Returns
+    None when it does not fire.
     """
     import warnings
 
     import numpy as np
 
     if len(pts) == 0 or len(C) == 0:
-        return 0.0, 0.0, False
+        return None
     d2 = (pts**2).sum(1)[:, None] - 2 * pts @ C.T + (C**2).sum(1)[None, :]
     counts = np.bincount(d2.argmin(1), minlength=len(C)).astype(np.float64)
     nonzero = counts[counts > 0]
@@ -606,64 +578,37 @@ def _clump_check(
     mx = float(counts.max())
     frac = mx / max(1.0, float(counts.sum()))
     ratio = mx / med if med > 0 else float("inf")
-    fired = ratio >= warn_ratio or (frac >= 0.25 and n_centroids >= 8)
-    if fired:
-        msg = (
-            f"{context}: IVF training sample is clumped — hottest cell "
-            f"holds {frac:.0%} of the sample ({ratio:.1f}x the median "
-            f"cell). A tight near-duplicate cluster is indivisible by "
-            f"the coarse quantizer at ANY n_centroids, so candidate "
-            f"volume (not stragglers) blows up ~ (clump size)². "
-            f"Mitigation order: (1) semantic-dedup the corpus first "
-            f"(semantic_dedup_blocked — the clump IS a near-dup "
-            f"cluster), (2) cap probes / set max_cell_rows to spread "
-            f"the shuffle, (3) pass strict_clumps=False deliberately "
-            f"if the quadratic cost is accepted."
-        )
-        if strict:
-            raise ClumpedCorpusError(msg)
-        warnings.warn(msg, ClumpedCorpusWarning, stacklevel=3)
-    return ratio, frac, fired
+    if not (ratio >= 8.0 or (frac >= 0.25 and n_centroids >= 8)):
+        return None
+    # stacklevel: the line that called ivf_assign or ann_join
+    warnings.warn(
+        f"IVF training sample is clumped — hottest cell "
+        f"holds {frac:.0%} of the sample ({ratio:.1f}x the median "
+        f"cell). A tight near-duplicate cluster is indivisible by "
+        f"the coarse quantizer at ANY n_centroids, so candidate "
+        f"volume (not stragglers) blows up ~ (clump size)². "
+        f"Mitigation order: (1) semantic-dedup the corpus first "
+        f"(semantic_dedup_blocked — the clump IS a near-dup "
+        f"cluster), (2) cap probes. ann_join sub-splits the hot "
+        f"cell across tasks, which spreads the work but does not "
+        f"shrink it.",
+        ClumpedCorpusWarning,
+        stacklevel=4,
+    )
+    return counts
 
 
-def ivf_assign(
-    df: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    train_rows: int = 4096,
-    strict_clumps: bool = False,
-    return_stats: bool = False,
-):
-    """IVF coarse quantizer: k-means centroids + per-vector cell assignment.
-
-    Returns (assigned_df with a ``cell`` column, centroids list).  The
-    centroid count trades recall for candidate-set size: cells ≈ n/k
-    vectors each.  With ``return_stats`` a third element carries the
-    clump-guardrail telemetry ({ratio, max_frac, fired}) so callers can
-    react to a detected clump without re-sampling (ann_join uses it to
-    auto-engage its sub-split cap when AQE skew-join is off).
-
-    Scale discipline — the whole point of IVF training is that it does
-    NOT need the corpus: a deterministic bounded sample (the
-    ``train_rows`` smallest md5(id) rows — one top-k, no full sort)
-    is collected to the driver (bounded memory BY CONSTRUCTION) and
-    clustered with in-process Lloyd's; the FULL dataset is then assigned
-    in ONE pass via broadcast centroids inside a vectorized Pandas UDF
-    (numpy matmul per Arrow batch).  No iterative distributed ML: a
-    driver-coordinated MLlib fit costs a scan per iteration (measured
-    ~6 s at sf0.1 vs <1 s for this formulation) and would be a
-    scale-killer on the full corpus.  Persist ``cell`` as a partition
-    column so probes prune at read time.
-    """
+def _ivf_cells(df, n_centroids, vec_col, id_col, seed, train_rows):
+    """The body of :func:`ivf_assign`: (``df`` with a ``cell`` column,
+    centroid matrix, the clump guardrail's per-cell sample counts or
+    None)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import IntegerType
 
     pts = _train_sample(df, vec_col, id_col, train_rows)
     C = _lloyd(pts, n_centroids, seed)
-    ratio, max_frac, fired = _clump_check(pts, C, n_centroids, strict=strict_clumps)
+    counts = _clump_check(pts, C, n_centroids)
     cn2 = (C**2).sum(1)
 
     def _cell_of(vecs):
@@ -677,14 +622,38 @@ def ivf_assign(
     # `from __future__ import annotations`, which turns hints into
     # strings the UDF resolver can't evaluate)
     cell_of = pandas_udf(_cell_of, IntegerType())
+    return df.withColumn("cell", cell_of(F.col(vec_col))), C, counts
 
-    assigned = df.withColumn("cell", cell_of(F.col(vec_col)))
-    cents = [list(map(float, c)) for c in C]
-    if return_stats:
-        return assigned, cents, {
-            "ratio": ratio, "max_frac": max_frac, "fired": fired,
-        }
-    return assigned, cents
+
+def ivf_assign(
+    df: DataFrame,
+    n_centroids: int = 16,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    seed: int = 7,
+    train_rows: int = 4096,
+):
+    """IVF coarse quantizer: k-means centroids + per-vector cell assignment.
+
+    Returns (assigned_df with a ``cell`` column, centroids list).  The
+    centroid count trades recall for candidate-set size: cells ≈ n/k
+    vectors each.  A clumped training sample (one indivisible hot cell)
+    issues a :class:`ClumpedCorpusWarning` with the mitigation order.
+
+    Scale discipline — the whole point of IVF training is that it does
+    NOT need the corpus: a deterministic bounded sample (the
+    ``train_rows`` smallest md5(id) rows — one top-k, no full sort)
+    is collected to the driver (bounded memory BY CONSTRUCTION) and
+    clustered with in-process Lloyd's; the FULL dataset is then assigned
+    in ONE pass via broadcast centroids inside a vectorized Pandas UDF
+    (numpy matmul per Arrow batch).  No iterative distributed ML: a
+    driver-coordinated MLlib fit costs a scan per iteration (measured
+    ~6 s at sf0.1 vs <1 s for this formulation) and would be a
+    scale-killer on the full corpus.  Persist ``cell`` as a partition
+    column so probes prune at read time.
+    """
+    assigned, C, _ = _ivf_cells(df, n_centroids, vec_col, id_col, seed, train_rows)
+    return assigned, [list(map(float, c)) for c in C]
 
 
 def ivf_topk(
@@ -736,6 +705,18 @@ def embedding_centroids(df: DataFrame, vec_col: str = "embedding",
     )
 
 
+def _int8_sql(v: str) -> tuple[str, str]:
+    """(max|x| text, int8 code-array text) of the double array ``v``:
+    codes = floor(x / (max|x| / 127)) clamped to [-127, 127], all zeros
+    for a zero vector."""
+    mx = f"array_max(transform({v}, x -> ABS(x)))"
+    return mx, (
+        f"CASE WHEN {mx} = 0.0D THEN transform({v}, x -> 0) "
+        f"ELSE transform({v}, x -> greatest(-127, least(127, "
+        f"CAST(FLOOR(x / ({mx} / 127.0D)) AS INT)))) END"
+    )
+
+
 def quantize_embeddings_int8(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
@@ -759,15 +740,10 @@ def quantize_embeddings_int8(
     boundary) so CollapseProject can't inline it back.
     """
     v = dbl_arr_sql(qcol(vec_col))
-    mx = f"array_max(transform({v}, x -> ABS(x)))"
-    scale = F.expr(f"{mx} / 127.0D").alias("scale")
-    codes = F.expr(
-        f"CASE WHEN {mx} = 0.0D THEN transform({v}, x -> 0) "
-        f"ELSE transform({v}, x -> greatest(-127, least(127, "
-        f"CAST(FLOOR(x / ({mx} / 127.0D)) AS INT)))) END"
-    )
+    mx, codes = _int8_sql(v)
     return df.select(
-        F.col(id_col), scale, codes.alias("q"),
+        F.col(id_col), F.expr(f"{mx} / 127.0D").alias("scale"),
+        F.expr(codes).alias("q"),
         F.expr(f"size({v})").alias("n_dims")
     )
 
@@ -798,13 +774,7 @@ def int8_topk(
     ]
     # one text parse (the Column build was ~650 py4j round trips: 64
     # int literals + per-element clamp lambdas); tree shape unchanged
-    v = dbl_arr_sql(qcol(vec_col))
-    mx = f"array_max(transform({v}, x -> ABS(x)))"
-    codes = (
-        f"CASE WHEN {mx} = 0.0D THEN transform({v}, x -> 0) "
-        f"ELSE transform({v}, x -> greatest(-127, least(127, "
-        f"CAST(FLOOR(x / ({mx} / 127.0D)) AS INT)))) END"
-    )
+    _, codes = _int8_sql(dbl_arr_sql(qcol(vec_col)))
     score = F.expr(
         f"aggregate(zip_with({codes}, {ilit_array(qcodes)}, "
         f"(a, b) -> CAST(a * b AS BIGINT)), "
@@ -909,7 +879,7 @@ def norm_outliers(
     """
     n = df.select(
         F.col(id_col),
-        F.round(norm(F.col(vec_col), dim, cast_elements=True), 6).alias(
+        F.round(norm(qcol(vec_col), dim, cast_elements=True), 6).alias(
             "l2_norm"
         ),
     )
@@ -1291,8 +1261,6 @@ def ann_join(
     right_id: str = "vec_id",
     seed: int = 7,
     dim: int | None = None,
-    max_cell_rows: int | None = None,
-    strict_clumps: bool = False,
 ) -> DataFrame:
     """Approximate k-NN JOIN between two embedding tables — the
     retrieval join (each left row fetches its nearest right rows)
@@ -1313,46 +1281,37 @@ def ann_join(
     table is on both sides — filter on the caller's identity columns if
     unwanted.
 
-    ``max_cell_rows``: degenerate-clump guard.  A tight cluster stays
-    ONE cell at any n_centroids (k-means cannot split a clump tighter
-    than its own convergence — measured: 30% of a 200k corpus in one
-    cell at nlist 16 AND 448), so cell size is unbounded by nlist
-    alone.  With the cap set, oversized cells sub-split on a hash of
-    the right id and probes fan out to every sub-cell: results are
-    bit-identical, the hot cell spreads over ceil(size/cap) shuffle
-    partitions.  Size n_centroids ~ sqrt(n) for balanced corpora and
-    set this cap when the corpus may contain near-duplicate clumps
-    (better: semantic-dedup first — the clump IS a near-dup cluster).
-    AUTO-ENGAGED when left None, the build-time clump guardrail fires,
-    AND the session has AQE skew-join split disabled (the r7 AQE-off
-    probe's 2.60x straggler case): the cap defaults to 2x the median
-    actual cell size.  AQE-on deployments (Spark's default) are
-    unaffected — the skew split already handles the hot partition.
-
-    ``strict_clumps``: build-time clump guardrail.  The IVF training
-    sample is histogrammed per cell on the driver (zero extra jobs);
-    a clumped corpus (one indivisible hot cell — the measured silent
-    100x-candidate pathology) warns with the mitigation order, or
-    raises :class:`ClumpedCorpusError` when True.
+    Degenerate clumps: a tight cluster stays ONE cell at any
+    n_centroids (k-means cannot split a clump tighter than its own
+    convergence — measured: 30% of a 200k corpus in one cell at nlist
+    16 AND 448), so cell size is unbounded by nlist alone.  When the
+    IVF training sample shows such a clump (:func:`_clump_check`, a
+    histogram of the sample already on the driver — no extra Spark
+    job), it warns with :class:`ClumpedCorpusWarning` and every cell is
+    sub-split into ceil(sample count / (2 x median sample count)) parts
+    on a hash of the right id; probes fan out to every sub-cell of
+    their cell, so results are bit-identical and the hot cell spreads
+    over that many cogroup tasks.  This does not depend on AQE: its
+    skew split applies to sort-merge join partitions, never to a
+    cogroup.  The sub-split spreads the work but does not shrink it —
+    semantic-dedup the corpus first (the clump IS a near-dup cluster).
 
     Zero-norm vectors (NaN cosine) are excluded from results: NaN is
     dropped before the per-cell cut.  ``dim`` scores only the first
     ``dim`` components (matrices sliced to [:, :dim]); a stored vector
     shorter than ``dim`` raises rather than silently narrowing.
     """
+    import math
+
     import numpy as np
     from pyspark.sql import Window
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
     _require_integral_ids("ann_join", (left, left_id), (right, right_id))
-    assigned_r, centroids, clump = ivf_assign(
-        right, n_centroids, vec_col, right_id, seed,
-        strict_clumps=strict_clumps, return_stats=True,
-    )
-    C = np.array(centroids, dtype=np.float64)
+    assigned_r, C, counts = _ivf_cells(right, n_centroids, vec_col, right_id, seed, 4096)
     Cn = np.sqrt((C**2).sum(1))
-    p = min(n_probes, len(centroids))
+    p = min(n_probes, len(C))
 
     def _probes(vecs):
         # matmul cosine, not the exact fold: it only picks which cells
@@ -1376,75 +1335,18 @@ def ann_join(
         F.col(right_id).alias("_rid"), F.col(vec_col).alias("_rv"), "cell"
     )
     join_keys = ["cell"]
-    sizes = None
-    if max_cell_rows is None and clump["fired"]:
-        # Auto-engage the sub-split cap when the deployment cannot fall
-        # back on AQE's skew-join split (r7 AQE-off probe: ann_join was
-        # the ONLY operator whose skew story delegated to AQE — the
-        # hot-cell run degraded 178 s -> 289 s with a 2.60x straggler
-        # ratio when adaptive.skewJoin was disabled and the cap, which
-        # is exactly the mitigation, sat unset).  The clump signal is
-        # free (build-time training-sample histogram); the cap defaults
-        # to ~2x the median ACTUAL cell so balanced cells never split
-        # while the clump spreads.  With AQE skew-split on (Spark's
-        # default) behavior is unchanged — measured fine there.
-        conf = right.sparkSession.conf
-        aqe_skew_on = (
-            str(conf.get("spark.sql.adaptive.enabled", "true")).lower()
-            == "true"
-            and str(conf.get("spark.sql.adaptive.skewJoin.enabled", "true"))
-            .lower() == "true"
-        )
-        if not aqe_skew_on:
-            import warnings
-
-            sizes = assigned_r.groupBy("cell").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
-            med = float(np.median([int(r["n"]) for r in sizes])) if sizes else 0.0
-            if med > 0:
-                max_cell_rows = max(1, int(2 * med))
-                # only claim a spread that will actually happen: when
-                # 2x-median exceeds every real cell, nsub is all-1 and
-                # no split occurs, so stay silent (the cap is then a
-                # no-op).  The AQE conf was sampled at plan-build time
-                # above; a conf flip before the action runs is not seen.
-                if any(int(r["n"]) > max_cell_rows for r in sizes):
-                    warnings.warn(
-                        f"ann_join: clumped corpus detected (hottest sample "
-                        f"cell {clump['max_frac']:.0%}) and AQE skew-join "
-                        f"split is disabled (as of plan build) — "
-                        f"auto-engaging "
-                        f"max_cell_rows={max_cell_rows} (2x median cell) so "
-                        f"the hot cell spreads across shuffle partitions. "
-                        f"Results are bit-identical; pass max_cell_rows "
-                        f"explicitly to override.",
-                        ClumpedCorpusWarning,
-                        stacklevel=2,
-                    )
-    if max_cell_rows is not None:
-        # Degenerate-clump guard (measured in the r6 zipf probe: a
-        # tight cluster holding 30% of the corpus stays ONE cell at
-        # ANY n_centroids — k-means cannot split a clump tighter than
-        # its own convergence, so cell size is unbounded by nlist).
-        # Sub-split oversized cells on a hash of the right id and
-        # fan each probe out to every sub-cell of its probed cell:
-        # the candidate SET is unchanged (results bit-identical), but
-        # the join key becomes (cell, sub) so the clump spreads over
-        # ceil(size/max_cell_rows) shuffle partitions instead of
-        # pinning one.  Cell sizes are an n_centroids-row driver
-        # fetch — bounded like the training sample.
-        import math as _math
-
-        if sizes is None:
-            sizes = assigned_r.groupBy("cell").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
+    if counts is not None:
+        # Sub-split the clump's cell on a hash of the right id and fan
+        # each probe out to every sub-cell of its probed cell: the
+        # candidate SET is unchanged (results bit-identical), but the
+        # cogroup key becomes (cell, _sub), so the clump spreads over
+        # ceil(count / (2 x median)) tasks instead of pinning one.
+        # Cells at most twice the median are never split.
+        two_med = 2 * float(np.median(counts[counts > 0]))
         nsub = {
-            int(r["cell"]): max(1, _math.ceil(int(r["n"]) / max_cell_rows))
-            for r in sizes
+            c: math.ceil(n / two_med) for c, n in enumerate(counts) if n > two_med
         }
-        if any(v > 1 for v in nsub.values()):
+        if nsub:
             nsub_expr = F.coalesce(
                 F.element_at(
                     F.create_map(

@@ -74,14 +74,13 @@ def build_session(
         # (guide §3.1: SHJ skips both sorts; the decision is made from
         # MEASURED partition bytes, so at 100 TB oversized partitions
         # keep the spill-safe SMJ — scale-adaptive by construction).
-        # Default 0 in Spark (off); 64m here, env-tunable per cluster.
-        # Interleaved min-of-4 A/B at sf0.1: similarity_ann_join -1.07 s,
-        # decontamination_overlap -0.64 s, dedup_minhash_clusters
-        # -0.32 s, worst mover +0.16 s.
+        # Default 0 in Spark (off); 64m here (override per cluster through
+        # extra_conf).  Interleaved min-of-4 A/B at sf0.1:
+        # similarity_ann_join -1.07 s, decontamination_overlap -0.64 s,
+        # dedup_minhash_clusters -0.32 s, worst mover +0.16 s.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD",
-                           str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
         # local[32] runs driver+executors in ONE JVM; a 330-execution
         # bench (165 queries x 2 passes) accumulates codegen/broadcast/

@@ -207,6 +207,19 @@ def _cosine_pairs_reference(df, threshold, dim):
     )
 
 
+def test_cosine_builders_take_sql_text_only(spark):
+    """dot / norm / cosine have one builder (SQL text parsed by one
+    F.expr); a Column operand is rejected with the function's name."""
+    from ksql_linq_spark.operators.similarity import cosine, dot, norm
+
+    with pytest.raises(TypeError, match="dot"):
+        dot(F.col("a"), "`b`")
+    with pytest.raises(TypeError, match="norm"):
+        norm(F.col("a"), 4)
+    with pytest.raises(TypeError, match="cosine"):
+        cosine("`a`", F.col("b"), 4, cast_elements=True)
+
+
 def test_embedding_cosine_blocked_matches_expr(spark):
     from ksql_linq_spark.operators.dedup import embedding_cosine_pairs_blocked
 
@@ -971,17 +984,17 @@ def _unit_cosine_pairs_reference(df, dim):
     """Test-local reference for the unit-vector cosine form: normalise
     each row with similarity.norm, then fold the dot of the unit vectors
     with similarity.dot — the DuckDB oracle's normalise-then-dot order,
-    as Column expressions.  Pairs (id_a != id_b) within each label."""
+    as Spark expressions.  Pairs (id_a != id_b) within each label."""
     from ksql_linq_spark.operators.similarity import dot, norm
 
-    n = norm(F.col("embedding"), dim, cast_elements=True)
+    n = norm("`embedding`", dim, cast_elements=True)
     unit = F.transform(F.col("embedding"), lambda x: x.cast("double") / n)
     a = df.select("label", F.col("vec_id").alias("id_a"), unit.alias("ua"))
     b = df.select("label", F.col("vec_id").alias("id_b"), unit.alias("ub"))
     return (
         a.join(b, "label")
         .where(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b", dot(F.col("ua"), F.col("ub")).alias("cos"))
+        .select("id_a", "id_b", dot("`ua`", "`ub`").alias("cos"))
     )
 
 
@@ -1152,6 +1165,41 @@ def test_merge_upsert_batch_merge_semantics(spark, tmp_path):
     merge_upsert(spark, path, upd, keys=["k"])
     got = {r.k: (r.name, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {1: ("a2", 11.0), 3: ("c", 30.0), 4: ("d", 40.0)}
+
+
+def test_merge_upsert_writes_the_merged_table_once(spark, tmp_path, monkeypatch):
+    """A merge onto an existing table writes the merged rows once — to
+    the staging sibling that is swapped in — and leaves no staging or
+    old directory behind."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ksql_linq_spark.operators.layout import merge_upsert
+
+    path = str(tmp_path / "keyed_table3")
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double"),
+        keys=["k"],
+    )
+    writes = []
+    real = DataFrameWriter.parquet
+
+    def counting(self, p, *args, **kwargs):
+        writes.append(p)
+        return real(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    merge_upsert(
+        spark, path,
+        spark.createDataFrame([(2, None), (3, 30.0)], "k long, v double"),
+        keys=["k"],
+    )
+    assert len(writes) == 1
+    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    assert got == {1: 10.0, 3: 30.0}
+    assert sorted(os.listdir(tmp_path)) == ["keyed_table3"]
 
 
 def test_merge_upsert_order_col_newest_wins(spark, tmp_path):
@@ -1802,38 +1850,50 @@ def test_graph_cc_long_chain_converges(spark):
     assert set(labels.values()) == {0}
 
 
-def test_ann_join_cell_subsplit_is_result_identical(spark):
-    """max_cell_rows sub-splits oversized IVF cells (the degenerate-
-    clump guard from the r6 zipf probe): the candidate set — and hence
-    every (pair, cos, rank) — must be IDENTICAL to the unsplit join;
-    only the shuffle key changes.  Corpus: 300 vectors collapsed into
-    one tight clump + 100 spread, forcing one dominant cell."""
+def _analyzed(df):
+    """The analyzed plan's text without expression ids."""
+    import re
+
+    return re.sub(r"#\d+L?", "", df._jdf.queryExecution().analyzed().toString())
+
+
+def _clumped_corpus(spark, seed, n_clump, n_spread):
+    """``n_clump`` vectors in one tight cluster (sigma 0.01) + ``n_spread``
+    spread ones, 16-d: the IVF guardrail's one indivisible hot cell."""
     import numpy as np
 
-    from ksql_linq_spark.operators.similarity import ann_join
-
-    rng = np.random.default_rng(11)
-    centroid = rng.normal(0, 1, 16)
+    rng = np.random.default_rng(seed)
     vecs = np.vstack(
-        [centroid + rng.normal(0, 0.01, (300, 16)), rng.normal(0, 1, (100, 16))]
+        [
+            rng.normal(0, 1, 16) + rng.normal(0, 0.01, (n_clump, 16)),
+            rng.normal(0, 1, (n_spread, 16)),
+        ]
     )
     rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_ann_join_cell_subsplit_is_result_identical(spark, monkeypatch):
+    """A clumped corpus sub-splits its hot IVF cell (the degenerate-
+    clump guard from the r6 zipf probe): the candidate set — and hence
+    every (pair, cos, rank) — must be IDENTICAL to the unsplit join
+    (the guardrail silenced); only the cogroup key changes.  Corpus:
+    300 vectors collapsed into one tight clump + 100 spread, forcing
+    one dominant cell."""
+    from ksql_linq_spark.operators import similarity
+    from ksql_linq_spark.operators.similarity import ClumpedCorpusWarning, ann_join
+
+    e = _clumped_corpus(spark, 11, 300, 100)
     lq = e.filter((F.col("vec_id") % 40) == 0)
 
-    def canon(df):
-        return sorted(
-            (r.left_vec_id, r.right_vec_id, round(r.cos, 12), r.rank)
-            for r in df.collect()
-        )
-
-    base = canon(ann_join(lq, e, k=3, n_centroids=4, n_probes=2, dim=16))
-    split = ann_join(
-        lq, e, k=3, n_centroids=4, n_probes=2, dim=16, max_cell_rows=50
-    )
-    assert canon(split) == base
-    # the split actually engaged: the join key carries the sub column
-    assert "_sub" in split._jdf.queryExecution().analyzed().toString()
+    with pytest.warns(ClumpedCorpusWarning):
+        split = ann_join(lq, e, k=3, n_centroids=4, n_probes=2, dim=16)
+    # the split actually engaged: the cogroup key carries the sub column
+    assert "_sub" in _analyzed(split)
+    monkeypatch.setattr(similarity, "_clump_check", lambda *a, **kw: None)
+    base = ann_join(lq, e, k=3, n_centroids=4, n_probes=2, dim=16)
+    assert "_sub" not in _analyzed(base)
+    assert _ann_canon(split) == _ann_canon(base) and len(_ann_canon(base)) > 0
 
 
 def _ann_canon(df):
@@ -1903,24 +1963,43 @@ def test_ann_join_arrow_kernel_bit_identical(spark, sf_dir):
     pruned = _ann_canon(ann_join(lq, e, k=3, n_centroids=4, n_probes=2))
     assert len(pruned) > 0
     assert all(c == ref[(lid, rid)].hex() for lid, rid, c, _ in pruned)
-    # composes with the sub-split guard too
-    salted = _ann_canon(
-        ann_join(lq, e, k=3, n_centroids=4, n_probes=2, max_cell_rows=20)
+    # composes with the clump sub-split too: 400 near-duplicates of one
+    # corpus vector make the guardrail fire and split their cell
+    import numpy as np
+
+    from ksql_linq_spark.operators.similarity import ClumpedCorpusWarning
+
+    base = e.select("vec_id", "embedding")
+    v0 = np.array(base.orderBy("vec_id").first().embedding, dtype=np.float64)
+    top = base.agg(F.max("vec_id")).first()[0]
+    rng = np.random.default_rng(3)
+    clump = spark.createDataFrame(
+        [(top + 1 + i, [float(x) for x in v0 + rng.normal(0, 0.001, v0.size)])
+         for i in range(400)],
+        base.schema,
     )
-    assert salted == pruned
+    ce = base.unionByName(clump)
+    cref = _pair_cosines_reference(spark, lq, ce, 64)
+    with pytest.warns(ClumpedCorpusWarning):
+        salted = ann_join(lq, ce, k=3, n_centroids=8, n_probes=2)
+        salted_full = ann_join(lq, ce, k=3, n_centroids=8, n_probes=8)
+    assert "_sub" in _analyzed(salted) and "_sub" in _analyzed(salted_full)
+    got = _ann_canon(salted)
+    assert len(got) > 0
+    assert all(c == cref[(lid, rid)].hex() for lid, rid, c, _ in got)
+    assert _ann_canon(salted_full) == _topk_reference(cref, 3)
 
 
 def test_ivf_clump_guardrail(spark):
     """r7 guardrail: an IVF build over a clumped corpus (one tight
     near-dup cluster the quantizer cannot split — the measured silent
-    100x-candidate pathology) must WARN with the mitigation order, and
-    raise under strict_clumps; a uniform corpus must stay silent."""
+    100x-candidate pathology) must WARN with the mitigation order; a
+    uniform corpus must stay silent."""
     import warnings
 
     import numpy as np
 
     from ksql_linq_spark.operators.similarity import (
-        ClumpedCorpusError,
         ClumpedCorpusWarning,
         ann_join,
         ivf_assign,
@@ -1949,12 +2028,7 @@ def test_ivf_clump_guardrail(spark):
         warnings.simplefilter("error", ClumpedCorpusWarning)
         ivf_assign(uniform, n_centroids=16)  # must not warn
 
-    with pytest.raises(ClumpedCorpusError, match="clumped"):
-        ann_join(
-            clumped, clumped, k=1, n_centroids=16, strict_clumps=True
-        )
-
-    # non-strict ann_join still builds and runs on the clumped corpus
+    # ann_join still builds and runs on the clumped corpus
     with pytest.warns(ClumpedCorpusWarning):
         out = ann_join(
             clumped.limit(5), clumped, k=1, n_centroids=16, n_probes=1
@@ -1962,62 +2036,36 @@ def test_ivf_clump_guardrail(spark):
         assert out.count() == 5
 
 
-def test_ann_join_auto_subsplit_when_aqe_skew_off(spark):
-    """VERDICT r7 weak item: ann_join was the only operator whose skew
-    story delegated to AQE (AQE-off hot-cell probe: 178 s -> 289 s,
-    2.60x straggler ratio).  When the clump guardrail fires AND the
-    session has adaptive skew-join split disabled, the sub-split cap
-    must auto-engage (2x median cell) with a warning — and the results
-    must stay bit-identical to the un-split default-conf run."""
-    import numpy as np
+def test_ann_join_clump_subsplit_is_aqe_independent(spark):
+    """A clumped corpus sub-splits its hot IVF cell on the default
+    session (AQE and its skew-join split on): AQE splits skewed
+    sort-merge join partitions, never a cogroup's, so ann_join chooses
+    the split from its training sample alone.  With every cell probed
+    the output is the exact top-k of the Spark cosine reference, hex
+    for hex, and turning the skew-join split off changes neither the
+    analyzed plan nor the output."""
+    from ksql_linq_spark.operators.similarity import ClumpedCorpusWarning, ann_join
 
-    from ksql_linq_spark.operators.similarity import (
-        ClumpedCorpusWarning,
-        ann_join,
-    )
-
-    rng = np.random.default_rng(31)
-    vecs = np.vstack(
-        [
-            rng.normal(0, 1, 16) + rng.normal(0, 0.01, (400, 16)),
-            rng.normal(0, 1, (100, 16)),
-        ]
-    )
-    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    e = _clumped_corpus(spark, 31, 400, 100)
     lq = e.filter((F.col("vec_id") % 50) == 0)
 
-    def canon(df):
-        return sorted(
-            (r.left_vec_id, r.right_vec_id, r.cos.hex(), r.rank)
-            for r in df.collect()
-        )
-
     with pytest.warns(ClumpedCorpusWarning):
-        base = canon(ann_join(lq, e, k=3, n_centroids=8, n_probes=2))
+        on = ann_join(lq, e, k=3, n_centroids=8, n_probes=8)
+    assert "_sub" in _analyzed(on)
+    got = _ann_canon(on)
+    assert got == _topk_reference(_pair_cosines_reference(spark, lq, e, None), 3)
+    assert len(got) > 0
 
-    prev = spark.conf.get("spark.sql.adaptive.skewJoin.enabled", "true")
+    key = "spark.sql.adaptive.skewJoin.enabled"
+    prev = spark.conf.get(key)
     try:
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        with pytest.warns(ClumpedCorpusWarning, match="auto-engaging"):
-            split = ann_join(lq, e, k=3, n_centroids=8, n_probes=2)
-        # the cap actually engaged: the join key carries the sub column
-        assert "_sub" in split._jdf.queryExecution().analyzed().toString()
-        assert canon(split) == base and len(base) > 0
-        # an explicit max_cell_rows is never overridden
+        spark.conf.set(key, "false")
         with pytest.warns(ClumpedCorpusWarning):
-            manual = ann_join(
-                lq, e, k=3, n_centroids=8, n_probes=2,
-                max_cell_rows=10_000_000,
-            )
-        assert canon(manual) == base
+            off = ann_join(lq, e, k=3, n_centroids=8, n_probes=8)
+        assert _analyzed(off) == _analyzed(on)
+        assert _ann_canon(off) == got
     finally:
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", prev)
-
-    # AQE-on (default conf): no auto-engage, no sub-split key
-    with pytest.warns(ClumpedCorpusWarning):
-        plain = ann_join(lq, e, k=3, n_centroids=8, n_probes=2)
-    assert "_sub" not in plain._jdf.queryExecution().analyzed().toString()
+        spark.conf.set(key, prev)
 
 
 def test_ann_join_arrow_dim_exceeding_vector_length_fails_loudly(spark):

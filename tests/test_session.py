@@ -1,4 +1,4 @@
-"""build_session's host-fit defaults (pure helper, no Spark)."""
+"""build_session: its host-fit defaults (pure helper) and fixed confs."""
 
 from __future__ import annotations
 
@@ -22,3 +22,9 @@ def test_host_defaults_env_overrides_win():
     assert host_defaults(env, 4, 16 * GIB) == (8, "2g")
     # an empty variable counts as unset
     assert host_defaults({"SPARK_GRAFT_CPUS": ""}, 4, 16 * GIB) == (4, "4096m")
+
+
+def test_build_session_pins_the_shuffled_hash_join_map_threshold(spark):
+    # 64 MB, a literal: extra_conf is the one way to override a conf
+    key = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    assert spark.conf.get(key) == str(64 * 1024 * 1024)
