@@ -8,7 +8,9 @@ ANSI SQL for DuckDB over the same parquet views.
 Determinism notes:
 - money aggregates: per-row cast to DECIMAL → exact aggregation → cast
   DOUBLE (bit-identical across engines, stable DOUBLE schema).
-- min_by/max_by orderings use columns verified duplicate-free per group.
+- min_by/max_by orderings are total: a column verified duplicate-free
+  per group, or (event time, value) for open/close — ties on both carry
+  the same value (DuckDB twin: min({'t': ts, 'v': value}).v).
 - arrays compared sorted (collect_list order is nondeterministic).
 """
 
@@ -111,23 +113,24 @@ _PROBE_CACHE: dict[tuple[str, int], list[float]] = {}
 # ======================================================================
 
 
+def _bar_columns(bars: DataFrame, keys: list[str]) -> DataFrame:
+    """The registered bar queries' seven columns: keys, bucket_start,
+    open/high/low/close rounded to 6 places, and cnt as volume."""
+    return bars.select(
+        *keys,
+        "bucket_start",
+        *[F.round(c, 6).alias(c) for c in ("open", "high", "low", "close")],
+        F.col("cnt").alias("volume"),
+    )
+
+
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 flagship: tumbling 1-minute OHLC bars (EarliestByOffset/LatestByOffset open/close, min/max low/high per bucket)."""
     ev = _t(spark, sf_dir, "events")
-    return (
-        ohlc_bars(
-            ev,
-            keys=["event_type"],
-            ts_col="ts",
-            price_col="value",
-            timeframe="1m",
-            extra_aggs=[F.count(F.lit(1)).alias("volume")],
-        )
-        .withColumn("open", F.round("open", 6))
-        .withColumn("high", F.round("high", 6))
-        .withColumn("low", F.round("low", 6))
-        .withColumn("close", F.round("close", 6))
+    bars = ohlc_bars(
+        ev, keys=["event_type"], ts_col="ts", price_col="value", timeframe="1m"
     )
+    return _bar_columns(bars, ["event_type"])
 
 
 q(
@@ -135,10 +138,10 @@ q(
     oracle="""
     SELECT event_type,
            time_bucket(INTERVAL '1 minute', ts) AS bucket_start,
-           round(arg_min(value, ts), 6) AS open,
+           round(min({'t': ts, 'v': value}).v, 6) AS open,
            round(max(value), 6) AS high,
            round(min(value), 6) AS low,
-           round(arg_max(value, ts), 6) AS close,
+           round(max({'t': ts, 'v': value}).v, 6) AS close,
            count(*) AS volume
     FROM events
     GROUP BY 1, 2
@@ -152,10 +155,10 @@ q(
     SELECT event_type,
            user_id % 10 AS shard,
            time_bucket(INTERVAL '5 minutes', ts) AS bucket_start,
-           round(arg_min(value, ts), 6) AS open,
+           round(min({'t': ts, 'v': value}).v, 6) AS open,
            round(max(value), 6) AS high,
            round(min(value), 6) AS low,
-           round(arg_max(value, ts), 6) AS close,
+           round(max({'t': ts, 'v': value}).v, 6) AS close,
            count(*) AS volume
     FROM events
     GROUP BY 1, 2, 3
@@ -164,17 +167,9 @@ q(
 def ohlc_5m_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-key bars (golden bars_5m_live.sql keys: broker, symbol)."""
     ev = _t(spark, sf_dir, "events").withColumn("shard", F.col("user_id") % 10)
-    out = ohlc_bars(
-        ev,
-        keys=["event_type", "shard"],
-        ts_col="ts",
-        price_col="value",
-        timeframe="5m",
-        extra_aggs=[F.count(F.lit(1)).alias("volume")],
-    )
-    for c in ("open", "high", "low", "close"):
-        out = out.withColumn(c, F.round(c, 6))
-    return out
+    keys = ["event_type", "shard"]
+    bars = ohlc_bars(ev, keys=keys, ts_col="ts", price_col="value", timeframe="5m")
+    return _bar_columns(bars, keys)
 
 
 # ======================================================================
@@ -232,7 +227,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT event_type,
            min(value) AS min_v, max(value) AS max_v,
-           arg_min(value, ts) AS first_v, arg_max(value, ts) AS last_v,
+           min({'t': ts, 'v': value}).v AS first_v, max({'t': ts, 'v': value}).v AS last_v,
            min(ts) AS first_ts, max(ts) AS last_ts
     FROM events GROUP BY event_type
     """,
@@ -1017,7 +1012,7 @@ def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram Jaccard near-dup pairs (operators/dedup.ngram_jaccard_pairs): shingle-bucketed, max_shingle_freq prune."""
+    """n-gram Jaccard near-dup pairs (operators/dedup.ngram_jaccard_pairs): shingle-bucketed exact pairs."""
     from .operators.dedup import ngram_jaccard_pairs
 
     d = _t(spark, sf_dir, "documents")
@@ -1138,10 +1133,10 @@ def similarity_lsh_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT event_type,
            time_bucket(INTERVAL '5 minutes', ts) AS bucket_start,
-           round(arg_min(value, ts), 6) AS open,
+           round(min({'t': ts, 'v': value}).v, 6) AS open,
            round(max(value), 6) AS high,
            round(min(value), 6) AS low,
-           round(arg_max(value, ts), 6) AS close,
+           round(max({'t': ts, 'v': value}).v, 6) AS close,
            count(*) AS cnt
     FROM events
     GROUP BY 1, 2
@@ -1185,23 +1180,23 @@ def cascade_5m_via_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cascade_1h_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVG -> SUM/CNT decomposition across two aggregation hops
     (HubSelectPolicy.cs:38-90): avg computed from composed partials must
-    equal the direct average.  Decimal carrier keeps the double sums
-    order-insensitive across the two hops."""
+    equal the direct average.  Runs through the cascade's own hub and 1h
+    rollup; a DECIMAL price keeps both hops' sums exact, so the double
+    average is order-insensitive."""
+    from .operators.cascade import CascadePlan, build_hub, rollup_tier
+
     ev = _t(spark, sf_dir, "events").withColumn(
-        "vdec", F.col("value").cast("decimal(18,6)")
+        "value", F.col("value").cast("decimal(18,6)")
     )
-    hub = ev.groupBy(
-        "event_type", bucket_start("ts", "1s").alias("b1s")
-    ).agg(F.sum("vdec").alias("sum_v"), F.count(F.lit(1)).alias("cnt"))
-    return (
-        hub.groupBy("event_type", bucket_start("b1s", "1h").alias("bucket_start"))
-        .agg(F.sum("sum_v").alias("sum_v"), F.sum("cnt").alias("cnt"))
-        .select(
-            "event_type",
-            "bucket_start",
-            (F.col("sum_v").cast("double") / F.col("cnt")).alias("avg_price"),
-            "cnt",
-        )
+    plan = CascadePlan(
+        base_name="bars", keys=["event_type"], ts_col="ts",
+        price_col="value", timeframes=["1h"],
+    )
+    return rollup_tier(plan, build_hub(plan, ev), "1h").select(
+        "event_type",
+        "bucket_start",
+        (F.col("sum_v").cast("double") / F.col("cnt")).alias("avg_price"),
+        "cnt",
     )
 
 
@@ -1211,7 +1206,7 @@ def cascade_1h_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH bars AS (
       SELECT event_type,
              time_bucket(INTERVAL '15 minutes', ts) AS bucket_start,
-             round(arg_max(value, ts), 6) AS close
+             round(max({'t': ts, 'v': value}).v, 6) AS close
       FROM events WHERE event_type IN ('purchase', 'error')
         AND ts < TIMESTAMP '2024-01-03 00:00:00'
       GROUP BY 1, 2),

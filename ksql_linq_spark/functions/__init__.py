@@ -648,14 +648,19 @@ def Avg(c):
 def EarliestByOffset(c, order_col):
     """EARLIEST_BY_OFFSET — first value in offset order (the OHLC *open*
     primitive, /root/reference/src/Extensions/OffsetAggregateExtensions.cs:26).
-    Batch has no Kafka offset; defined as min_by on (event_time, tiebreaker)
-    per SURVEY.md §7 risk register."""
-    return F.min_by(_c(c), _c(order_col))
+    Batch has no Kafka offset; the order is (order_col, value), so the
+    value must be orderable.  Rows that tie on both carry the same value,
+    so the result never depends on the order rows arrive in."""
+    c = _c(c)
+    return F.min_by(c, F.struct(_c(order_col), c))
 
 
 def LatestByOffset(c, order_col):
-    """LATEST_BY_OFFSET — OHLC *close* (OffsetAggregateExtensions.cs:40)."""
-    return F.max_by(_c(c), _c(order_col))
+    """LATEST_BY_OFFSET — OHLC *close* (OffsetAggregateExtensions.cs:40);
+    the last value in the (order_col, value) order of
+    :func:`EarliestByOffset`."""
+    c = _c(c)
+    return F.max_by(c, F.struct(_c(order_col), c))
 
 
 def CollectList(c):

@@ -146,7 +146,6 @@ def session_tag_join(
     schedule_key: str = "market_key",
     open_col: str = "open_time",
     close_col: str = "close_time",
-    session_id_col: str | None = None,
 ) -> DataFrame:
     """Inner-join variant that carries the matched session's columns
     (for session-anchored bars: group by session_open instead of a fixed
@@ -163,8 +162,6 @@ def session_tag_join(
         F.col(f"__s.{open_col}").alias("session_open"),
         F.col(f"__s.{close_col}").alias("session_close"),
     ]
-    if session_id_col:
-        keep.append(F.col(f"__s.{session_id_col}").alias("session_id"))
     return out.select(*keep)
 
 

@@ -15,6 +15,10 @@ must carry RE-AGGREGABLE partials —
   high/low -> max/min                (compose trivially)
   avg   -> sum + count               (avg does NOT compose; emit the pair)
 Higher tiers combine hub rows exactly; nothing re-reads the raw stream.
+The hub itself is ``ohlc.ohlc_bars`` at 1 s (the streaming hub applies
+the same ``ohlc.ohlc_aggs`` list), so hub open/close follow the
+(event time, price) order; first/last_ts are unique per key within a
+tier bucket, so the rollups keep that order.
 
 Scale: raw ticks are touched ONCE (the 1 s shuffle); each higher tier
 shuffles only hub rows (≈ keys × seconds), orders of magnitude smaller.
@@ -29,6 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .ohlc import ohlc_aggs, ohlc_bars
 from .windows import bucket_start, parse_timeframe, timeframe_seconds
 
 # 1 s rows-stream retention default — the golden hub DDL pins
@@ -88,8 +93,9 @@ def cascade_ddl_meta(plan: CascadePlan) -> dict:
     Deliberate divergences from the golden TEXT (semantics, not shape):
     open/close use event-time carriers ``min_by(open, first_ts)`` /
     ``max_by(close, last_ts)`` where ksqlDB uses offset order
-    (earliest/latest_by_offset) — deterministic under replay and
-    repartitioning, which offset order is not; and the hub carries the
+    (earliest/latest_by_offset), and the hub orders ticks by
+    (event time, price) — deterministic under replay, repartitioning and
+    row order, which offset order is not; and the hub carries the
     re-aggregable partials (sum_v, cnt, first_ts, last_ts —
     HubSelectPolicy.cs:38-90) as extra columns.
     """
@@ -128,25 +134,6 @@ def cascade_ddl_meta(plan: CascadePlan) -> dict:
     }
 
 
-def _hub_aggs(plan: CascadePlan) -> list[Column]:
-    """Raw ticks -> one hub row's re-aggregable partials, shared by the
-    batch and streaming hubs: open, high, low, close, sum_v, cnt,
-    first_ts, last_ts.  first/last_ts are the min_by/max_by carriers
-    for open/close composition; sum_v+cnt replace avg (HubSelectPolicy
-    AVG decomposition)."""
-    ts, price = F.col(plan.ts_col), F.col(plan.price_col)
-    return [
-        F.min_by(price, ts).alias("open"),
-        F.max(price).alias("high"),
-        F.min(price).alias("low"),
-        F.max_by(price, ts).alias("close"),
-        F.sum(price).alias("sum_v"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.min(ts).alias("first_ts"),
-        F.max(ts).alias("last_ts"),
-    ]
-
-
 def _tier_aggs() -> list[Column]:
     """Hub rows -> one tier bar by partial-agg composition, shared by
     the batch and streaming tiers: open, high, low, close, sum_v, cnt.
@@ -163,14 +150,11 @@ def _tier_aggs() -> list[Column]:
 
 
 def build_hub(plan: CascadePlan, ticks: DataFrame) -> DataFrame:
-    """Tier 0: raw ticks -> 1 s pre-aggregate with re-aggregable partials.
+    """Tier 0: raw ticks -> 1 s bars with re-aggregable partials.
 
-    Columns: keys..., bucket_start, then :func:`_hub_aggs`.
+    Columns: keys..., bucket_start, then :func:`ohlc.ohlc_aggs`.
     """
-    return ticks.groupBy(
-        *[F.col(k) for k in plan.keys],
-        bucket_start(plan.ts_col, "1s").alias("bucket_start"),
-    ).agg(*_hub_aggs(plan))
+    return ohlc_bars(ticks, plan.keys, plan.ts_col, plan.price_col, "1s")
 
 
 def rollup_tier(plan: CascadePlan, hub: DataFrame, tf: str) -> DataFrame:
@@ -273,7 +257,7 @@ def start_streaming_cascade(
             *[F.col(k) for k in plan.keys],
             F.window(plan.ts_col, "1 second").alias("w"),
         )
-        .agg(*_hub_aggs(plan))
+        .agg(*ohlc_aggs(plan.ts_col, plan.price_col))
         .select(F.col("w.start").alias("bucket_start"), "*")
         .drop("w")
     )

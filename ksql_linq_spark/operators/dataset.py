@@ -637,7 +637,6 @@ def write_shards(
     token_col: str,
     tokens_per_shard: int,
     order_cols: list[str] | None = None,
-    group_col: str | None = None,
 ) -> "DataFrame":
     """Materialize a training corpus as token-budgeted SHARDS — the
     delivery format data loaders stream (webdataset/tfrecord-style
@@ -645,8 +644,8 @@ def write_shards(
     from without listing data files.
 
     Shard assignment reuses :func:`pack_sequences`' prefix-sum bins
-    (one ordered window per group — deterministic given the order
-    column, which must totally order rows within a group);
+    (one ordered window — deterministic given the order column, which
+    must totally order the rows);
     the write is ``partitionBy(shard)`` so each shard is its own
     directory, and the returned manifest (shard, n_docs, n_tokens) is
     also persisted at ``<path>__manifest``.  One window + one
@@ -661,14 +660,8 @@ def write_shards(
         token_col=token_col,
         order_col=order_col,
         budget=tokens_per_shard,
-        partition_cols=[group_col] if group_col else None,
     )
-    shard = (
-        F.concat_ws("_", F.col(group_col), F.col("bin"))
-        if group_col
-        else F.col("bin").cast("string")
-    )
-    out = packed.withColumn("shard", shard)
+    out = packed.withColumn("shard", F.col("bin").cast("string"))
     out.write.mode("overwrite").partitionBy("shard").parquet(path)
     manifest = (
         out.groupBy("shard")

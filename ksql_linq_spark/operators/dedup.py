@@ -230,17 +230,13 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing >= 1 shingle.
 
     Single pass over the shingle sets: the per-doc set size rides along
     with every exploded row, shingle buckets expand their own (a < b)
     pairs, and one groupBy(pair) counts intersections — no re-scan of
-    the shingle subtree and no size-lookup join.  ``max_shingle_freq``
-    drops stop-shingle buckets (appearing in more than N docs) before
-    pairing — the skew guard at scale (bucket pair count is quadratic
-    in document frequency).
+    the shingle subtree and no size-lookup join.
     """
     from .text import _shingle_arrays
 
@@ -266,8 +262,6 @@ def ngram_jaccard_pairs(
         .agg(F.collect_list(F.struct("id", "sz")).alias("ds"))
         .filter(F.size("ds") >= 2)
     )
-    if max_shingle_freq is not None:
-        buckets = buckets.filter(F.size("ds") <= max_shingle_freq)
     # sort each bucket ONCE through a Generate barrier (the
     # minhash_lsh_pairs r14 fix): the pair expansion references the
     # sorted array per element, and without the barrier CollapseProject

@@ -73,12 +73,12 @@ def gap_fill_bars(
     bucket_col: str,
     timeframe: str,
     ohlc: tuple[str, str, str, str] = ("open", "high", "low", "close"),
-    volume_col: str | None = None,
 ) -> DataFrame:
     """Fill missing buckets per key between each key's min and max bucket.
 
-    Filler rows carry the previous close as open/high/low/close and 0
-    volume — byte-for-byte the reference's synthetic-row semantics.
+    Filler rows carry the previous close as open/high/low/close — the
+    reference's synthetic-row semantics.  Output: keys, bucket_col, the
+    four price columns and is_synthetic.
     """
     o, h, l, c = ohlc
     joined = _on_spine(bars, keys, bucket_col, timeframe, "gap-fill")
@@ -90,8 +90,6 @@ def gap_fill_bars(
     prev_close = F.last(F.col(c), ignorenulls=True).over(w)
     # dict keyed by alias: tolerates o==h==l==c (close-only gap fill)
     out_cols = {name: F.coalesce(F.col(name), prev_close) for name in (o, h, l, c)}
-    if volume_col:
-        out_cols[volume_col] = F.coalesce(F.col(volume_col), F.lit(0))
     filled = joined.select(
         *keys,
         F.col(bucket_col),

@@ -127,7 +127,6 @@ def repair_late_buckets(
     ts_col: str,
     price_col: str,
     timeframe: str,
-    extra_aggs=None,
 ):
     """Late-data repair for a materialized bar table: recompute ONLY the
     (key, bucket) cells the late ticks touch and MERGE them in — the
@@ -159,9 +158,7 @@ def repair_late_buckets(
     for k in keys:
         cond = cond & (all_ticks[k] == t[f"_t_{k}"])
     affected = all_ticks.join(F.broadcast(t), cond, "left_semi")
-    refreshed = ohlc_bars(
-        affected, keys, ts_col, price_col, timeframe, extra_aggs=extra_aggs
-    )
+    refreshed = ohlc_bars(affected, keys, ts_col, price_col, timeframe)
     merge_upsert(
         spark, bars_path, refreshed, keys=[*keys, "bucket_start"]
     )

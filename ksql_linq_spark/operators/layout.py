@@ -32,14 +32,11 @@ def write_bucketed(
     table: str,
     keys: list[str],
     num_buckets: int,
-    sort_cols: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a managed parquet table hash-bucketed on ``keys``.
-
-    ``sort_cols`` (default: the bucket keys) pre-sorts within each
-    bucket file, so a later sort-merge join skips its Sort too when the
-    keys match.
+    """Persist ``df`` as a managed parquet table hash-bucketed on ``keys``
+    and sorted on them within each bucket file, so a later sort-merge
+    join on the keys skips its Sort too.
     """
     if num_buckets <= 0:
         raise ValueError(f"num_buckets must be positive, got {num_buckets}")
@@ -58,7 +55,7 @@ def write_bucketed(
         .write.mode(mode)
         .format("parquet")
         .bucketBy(num_buckets, *keys)
-        .sortBy(*(sort_cols or keys))
+        .sortBy(*keys)
         .saveAsTable(table)
     )
 

@@ -259,23 +259,21 @@ def table_diff(
     old: DataFrame,
     new: DataFrame,
     keys: list[str],
-    compare_cols: list[str] | None = None,
 ):
     """Keyed snapshot diff — the regression gate between two runs of
     the same pipeline: per-key status ``added`` / ``removed`` /
     ``changed`` / ``unchanged``, with changed-ness attributed per
-    compared column (null-safe equality).  One full-outer join on the
-    key; at scale both snapshots shuffle once on the same key (or
-    co-locate for free from a bucketed layout, operators/layout.py).
+    non-key column both snapshots share (null-safe equality).  One
+    full-outer join on the key; at scale both snapshots shuffle once on
+    the same key (or co-locate for free from a bucketed layout,
+    operators/layout.py).
 
     Returns (per_key_df, summary_df): the row-level statuses and the
     bounded per-status/per-column rollup a CI check asserts on.
     """
     from pyspark.sql import functions as F
 
-    compare_cols = compare_cols or [
-        c for c in old.columns if c not in keys and c in new.columns
-    ]
+    compare_cols = [c for c in old.columns if c not in keys and c in new.columns]
     o = old.select(
         *[F.col(k) for k in keys],
         *[F.col(c).alias(f"_o_{c}") for c in compare_cols],

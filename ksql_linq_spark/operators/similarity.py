@@ -61,18 +61,14 @@ def _require_sql(fn: str, *operands) -> None:
             )
 
 
-def dot(a: str, b: str, dim: int | None = None) -> Column:
+def dot(a: str, b: str) -> Column:
     """Dot product of two array operands given as SQL text (a column
     reference is ``qcol(name)``), parsed by ONE ``F.expr`` call — one
     JVM round trip instead of ~6 per term through the Column API (see
-    operators/_exprtext).  With ``dim`` known statically the fold is
-    unrolled into a left-associative Add chain over element_at —
-    bitwise identical to the zip_with/aggregate fold used without it
-    (same order, same 0.0 seed) but eligible for whole-stage codegen
-    instead of interpreted higher-order eval.  A Column operand raises
-    ``TypeError``."""
+    operators/_exprtext): the zip_with/aggregate fold seeded at 0.0.
+    A Column operand raises ``TypeError``."""
     _require_sql("dot", a, b)
-    return F.expr(dot_sql(a, b, dim))
+    return F.expr(dot_sql(a, b))
 
 
 def norm(a: str, dim: int | None = None, cast_elements: bool = False) -> Column:
@@ -83,8 +79,11 @@ def norm(a: str, dim: int | None = None, cast_elements: bool = False) -> Column:
 
 
 def cosine(a: str, b: str, dim: int | None = None, cast_elements: bool = False) -> Column:
-    """``dot / (norm_a * norm_b)``; operands and ``dim`` as in
-    :func:`dot`.
+    """``dot / (norm_a * norm_b)``; operands as in :func:`dot`.  With
+    ``dim`` known statically each fold is unrolled into a
+    left-associative Add chain over element_at — bitwise identical to
+    the zip_with/aggregate fold (same order, same 0.0 seed) but eligible
+    for whole-stage codegen instead of interpreted higher-order eval.
 
     ``cast_elements`` casts each element to double INSIDE the chain
     (for float arrays).  Never wrap the input in an array-level

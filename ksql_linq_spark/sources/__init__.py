@@ -325,7 +325,6 @@ def incremental_read(
     spark,
     data_glob: str,
     manifest_path: str,
-    schema=None,
 ):
     """Manifest-tracked incremental parquet batch ingest — the batch twin of a
     streaming file source's checkpoint (Auto-Loader-lite): read ONLY
@@ -363,7 +362,4 @@ def incremental_read(
 
     if not new_files:
         return None, [], commit
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*new_files), new_files, commit
+    return spark.read.parquet(*new_files), new_files, commit

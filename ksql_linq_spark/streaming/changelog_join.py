@@ -135,14 +135,13 @@ def stream_changelog_join(
     key: str,
     left_ts: str,
     value_col: str,
-    out_value_col: str | None = None,
 ) -> DataFrame:
     """Enrich ``left`` (key, left_ts, ...) with the newest ``value_col``
     from ``changelog`` (key, left_ts, value_col) as of processing order.
 
     Both frames must be streaming; ``changelog`` rows with NULL
     ``value_col`` delete the key's state (tombstone).  Returns an
-    append-mode stream with left's columns plus ``out_value_col``.
+    append-mode stream with left's columns plus ``latest_<value_col>``.
 
     The value's NATIVE Spark type is carried through the union, the
     state store, and the output schema — nothing is cast to double (a
@@ -152,7 +151,7 @@ def stream_changelog_join(
     pandas round-trip can't distinguish "missing" reliably would make
     delete semantics ambiguous.
     """
-    out_value_col = out_value_col or f"latest_{value_col}"
+    out_value_col = f"latest_{value_col}"
     left_cols = [c for c in left.columns if c != key]
     vtype = changelog.schema[value_col].dataType
     if isinstance(vtype, (T.StructType, T.ArrayType, T.MapType)):

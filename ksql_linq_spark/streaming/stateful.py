@@ -194,14 +194,11 @@ def tws_available() -> bool:
         return False
 
 
-def streaming_first_seen_dedup(
-    df: DataFrame, keys: list[str], ttl_ms: int | None = None
-) -> DataFrame:
+def streaming_first_seen_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
     """Exactly-once-per-key pass-through: the first row of each key is
-    emitted, every later arrival is dropped, and the seen-marker expires
-    after ``ttl_ms`` (None = keep forever).  Streaming exact-dedup for
-    a document pipeline: key on ``fingerprint(text)`` and duplicates
-    die in-flight, with TTL bounding state at corpus scale.
+    emitted and every later arrival is dropped; the seen-marker is kept
+    forever.  Streaming exact-dedup for a document pipeline: key on
+    ``fingerprint(text)`` and duplicates die in-flight.
     """
     from pyspark.sql.streaming import StatefulProcessor
 
@@ -209,9 +206,7 @@ def streaming_first_seen_dedup(
 
     class FirstSeen(StatefulProcessor):
         def init(self, handle):
-            self._seen = handle.getValueState(
-                "seen", "hit boolean", ttlDurationMs=ttl_ms
-            )
+            self._seen = handle.getValueState("seen", "hit boolean")
 
         def handleInputRows(self, key, rows, timer_values):
             if self._seen.exists():

@@ -262,9 +262,10 @@ def test_every_operator_definition_is_referenced():
 
 def test_no_bool_option_left_at_its_default():
     """Option guard: a module-level function in ``ksql_linq_spark/``
-    may not keep a ``bool``-defaulted parameter that no call site sets
-    to anything but its default — such a switch only keeps an untested
-    branch alive; fix the value and delete the branch instead.
+    may not keep a ``bool``- or ``None``-defaulted parameter that no
+    call site sets to anything but its default — such an option only
+    keeps an untested branch alive; fix the value and delete the branch
+    instead.
 
     Call sites are searched in ``ksql_linq_spark/``, ``tests/``,
     ``tools/``, ``perfbench/`` and ``bench.py`` and matched by function
@@ -318,7 +319,10 @@ def test_no_bool_option_left_at_its_default():
             pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
             pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
             for param, d in pairs:
-                if not (isinstance(d, ast.Constant) and isinstance(d.value, bool)):
+                if not (
+                    isinstance(d, ast.Constant)
+                    and (d.value is None or isinstance(d.value, bool))
+                ):
                     continue
                 idx = positional.index(param) if param in positional else None
                 if not any(
@@ -327,6 +331,6 @@ def test_no_bool_option_left_at_its_default():
                     rel = path.relative_to(root)
                     never_set.append(f"{rel}:{fn.lineno} {fn.name}({param.arg}={d.value})")
     assert not never_set, (
-        "bool parameters no call site sets off their default — make the "
-        "value a constant and delete the branch:\n" + "\n".join(never_set)
+        "bool/None parameters no call site sets off their default — make "
+        "the value a constant and delete the branch:\n" + "\n".join(never_set)
     )

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,6 +37,88 @@ def test_ohlc_semantics(spark):
     b = out[("B", dt.datetime(2024, 1, 1, 0, 0))]
     assert (b["open"], b["close"]) == (5.0, 5.0)
     assert ("A", dt.datetime(2024, 1, 1, 0, 1)) in out
+
+
+TIED_TICKS = [
+    ("A", dt.datetime(2024, 1, 1, 10, 0, 0), 1.0),
+    ("A", dt.datetime(2024, 1, 1, 10, 0, 0), 2.0),
+    ("A", dt.datetime(2024, 1, 1, 10, 0, 5), 3.0),
+]
+
+
+def test_tied_ticks_open_close_independent_of_row_order(spark, tmp_path):
+    """Two ticks share an event time: open/close follow the
+    (event time, value) order whatever order the rows arrive in — on
+    the bar operator, both cascade tiers, the EarliestByOffset/
+    LatestByOffset pair and the streaming hub.  Each input is one
+    partition, so the aggregation sees the rows in the given order."""
+    import os
+
+    from ksql_linq_spark import functions as KF
+    from ksql_linq_spark.operators.cascade import (
+        CascadePlan,
+        build_cascade,
+        start_streaming_cascade,
+    )
+
+    schema = "symbol string, ts timestamp, price double"
+    plan = CascadePlan(
+        base_name="tie", keys=["symbol"], ts_col="ts", price_col="price",
+        timeframes=["1m"],
+    )
+    # the tied second and its minute both start at 10:00:00
+    bucket = dt.datetime(2024, 1, 1, 10, 0)
+
+    def open_close(df):
+        (r,) = df.filter(F.col("bucket_start") == F.lit(bucket)).collect()
+        return r["open"], r["close"]
+
+    got, want = {}, {}
+    for order, ticks in (("given", TIED_TICKS), ("reversed", TIED_TICKS[::-1])):
+        df = spark.createDataFrame(ticks, schema).coalesce(1)
+        tiers = build_cascade(plan, df)
+        got["ohlc_bars", order] = open_close(
+            ohlc_bars(df, ["symbol"], "ts", "price", "1m")
+        )
+        got["hub", order] = open_close(tiers["tie_1s_rows"])
+        got["1m", order] = open_close(tiers["tie_1m_live"])
+        r = df.groupBy("symbol").agg(
+            KF.EarliestByOffset("price", "ts").alias("open"),
+            KF.LatestByOffset("price", "ts").alias("close"),
+        ).first()
+        got["by_offset", order] = (r["open"], r["close"])
+
+        # streaming hub over a parquet file of the same rows, plus one
+        # tick past the grace period so the tied second closes
+        src, out = tmp_path / f"src_{order}", tmp_path / f"out_{order}"
+        late = [("A", dt.datetime(2024, 1, 1, 10, 0, 30), 4.0)]
+        spark.createDataFrame(ticks + late, schema).coalesce(1).write.parquet(str(src))
+        stream = spark.readStream.schema(schema).parquet(str(src))
+        queries = start_streaming_cascade(
+            plan, stream, sink_dir=str(out / "sink"),
+            checkpoint_dir=str(out / "ckpt"), trigger_seconds=0,
+        )
+        hub_dir = str(out / "sink" / plan.hub_name)
+        try:
+            # the closing no-data batch runs on the trigger after the
+            # data batch, so wait for the sink to show the tied second
+            for _ in range(60):
+                queries[0].processAllAvailable()
+                if os.path.isdir(hub_dir) and spark.read.parquet(hub_dir).filter(
+                    F.col("bucket_start") == F.lit(bucket)
+                ).count():
+                    break
+                time.sleep(0.5)
+        finally:
+            for q in queries:
+                q.stop()
+        got["streaming_hub", order] = open_close(spark.read.parquet(hub_dir))
+
+        for path in ("ohlc_bars", "1m", "by_offset"):
+            want[path, order] = (1.0, 3.0)
+        for path in ("hub", "streaming_hub"):
+            want[path, order] = (1.0, 2.0)
+    assert got == want
 
 
 def test_timeframe_parsing():
@@ -192,6 +275,20 @@ def test_json_functions(spark):
 
     assert json.loads(row["merged"]) == {"a": "1", "b": "9", "c": "3"}
     assert row["rec"] == {"a": "1", "b": "2"}
+
+
+def test_log_natural_and_with_base(spark):
+    """KSQL ``LOG(x)`` is the natural log, ``LOG(base, x)`` the log in
+    ``base``."""
+    import math
+
+    import ksql_linq_spark.functions as KF
+
+    row = spark.createDataFrame([(8.0,)], "x double").select(
+        KF.Log("x").alias("ln"), KF.Log("x", base=2).alias("log2")
+    ).first()
+    assert row["ln"] == math.log(8.0)
+    assert row["log2"] == pytest.approx(3.0)
 
 
 def test_salted_join_default_salt_spreads_hot_key(spark):

@@ -39,12 +39,9 @@ ticks = st.lists(
 def test_ohlc_matches_bruteforce(spark, data):
     from ksql_linq_spark.operators.ohlc import ohlc_bars
 
-    # make (key, ts) unique so open/close are well-defined (the engine
-    # contract: min_by/max_by need a duplicate-free order column per key)
-    seen: dict[tuple, tuple] = {}
-    for k, s, v in data:
-        seen[(k, s)] = (k, BASE + dt.timedelta(seconds=s), float(v))
-    rows = list(seen.values())
+    # ties on (key, ts) are allowed: open/close follow the (ts, value)
+    # order, which the model's min/max over (ts, v) pairs is
+    rows = [(k, BASE + dt.timedelta(seconds=s), float(v)) for k, s, v in data]
     df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
     got = {
         (r["k"], r["bucket_start"]): (r["open"], r["high"], r["low"], r["close"])
@@ -223,10 +220,7 @@ def test_cascade_invariant(spark, data):
     from ksql_linq_spark.operators.cascade import CascadePlan, build_cascade
     from ksql_linq_spark.operators.ohlc import ohlc_bars
 
-    seen: dict[tuple, tuple] = {}
-    for k, s, v in data:
-        seen[(k, s)] = (k, BASE + dt.timedelta(seconds=s), float(v))
-    rows = list(seen.values())
+    rows = [(k, BASE + dt.timedelta(seconds=s), float(v)) for k, s, v in data]
     df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
     plan = CascadePlan(
         base_name="t", keys=["k"], ts_col="ts", price_col="v", timeframes=["5m"]
@@ -237,11 +231,8 @@ def test_cascade_invariant(spark, data):
         for r in tiers["t_5m_live"].collect()
     }
     direct = {
-        (r["k"], r["bucket_start"]): (r["open"], r["high"], r["low"], r["close"], r["volume"])
-        for r in ohlc_bars(
-            df, ["k"], "ts", "v", "5m",
-            extra_aggs=[F.count(F.lit(1)).alias("volume")],
-        ).collect()
+        (r["k"], r["bucket_start"]): (r["open"], r["high"], r["low"], r["close"], r["cnt"])
+        for r in ohlc_bars(df, ["k"], "ts", "v", "5m").collect()
     }
     assert via_hub == direct
 
