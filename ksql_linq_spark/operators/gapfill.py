@@ -105,7 +105,6 @@ def streaming_gap_fill(
     bucket_col: str,
     close_col: str,
     timeframe: str,
-    grace: str = "10 seconds",
 ) -> DataFrame:
     """Streaming continuation via applyInPandasWithState.
 

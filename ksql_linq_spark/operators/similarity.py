@@ -397,7 +397,6 @@ def build_ann_index(
     dim: int,
     num_planes: int = 8,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
     mode: str = "overwrite",
 ) -> None:
     """Persist the corpus PARTITIONED BY its sign-LSH bucket — the
@@ -1006,7 +1005,6 @@ def quantize_embeddings_pq(
     df: DataFrame,
     codebooks,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
     out_col: str = "pq_codes",
 ) -> DataFrame:
     """Assign every vector its PQ code word per subspace: ``out_col`` is
@@ -1080,7 +1078,7 @@ def pq_topk(
     sub = len(books[0][0])
     qn = math.sqrt(sum(x * x for x in query_vec))
 
-    coded = quantize_embeddings_pq(df, books, vec_col, id_col)
+    coded = quantize_embeddings_pq(df, books, vec_col)
 
     # LUT scoring assembled as ONE text parse (m * n_codes * 2 double
     # literals through the Column API were thousands of py4j round

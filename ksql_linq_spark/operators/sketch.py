@@ -282,35 +282,13 @@ def weighted_median(
     weight_col: str,
     keys: list[str] | None = None,
 ):
-    """Exact weighted median per group: the smallest value whose running
-    weight reaches half the group's total — e.g. the document length at
-    which half the corpus's TOKEN MASS sits (unweighted medians
-    over-represent short documents; budget decisions follow mass).
-
-    One value-ordered window per group for the running sum + one 1-row
-    (per-group) total broadcast back; both shuffles key on the group.
-    All-integer comparisons when weights are integers — engine-exact.
-    At unbounded group cardinality this is the exact regime; the GK
-    sketch generalizes to weighted ranks the same way group_percentiles'
-    approx regime does.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    keys = keys or []
-    w = Window.partitionBy(*keys).orderBy(value_col).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = df.select(
-        *keys, F.col(value_col), F.col(weight_col)
-    ).withColumn("_cw", F.sum(weight_col).over(w))
-    totals = cum.groupBy(*keys).agg(F.sum(weight_col).alias("_tw"))
-    j = cum.join(F.broadcast(totals), keys) if keys else cum.crossJoin(
-        F.broadcast(totals)
-    )
-    hit = j.where(F.col("_cw") * 2 >= F.col("_tw"))
-    return hit.groupBy(*keys).agg(
-        F.min(value_col).alias("weighted_median")
+    """Exact weighted median per group, in column ``weighted_median``:
+    :func:`weighted_percentile` at q = 1/2 (running weight × 2 ≥ the
+    group's total) — e.g. the document length at which half the
+    corpus's TOKEN MASS sits (unweighted medians over-represent short
+    documents; budget decisions follow mass)."""
+    return weighted_percentile(
+        df, value_col, weight_col, 0.5, keys, out_col="weighted_median"
     )
 
 
@@ -322,14 +300,19 @@ def weighted_percentile(
     keys: list[str] | None = None,
     out_col: str = "weighted_p",
 ):
-    """Exact weighted percentile per group — :func:`weighted_median`
-    generalized: the smallest value whose running weight reaches
-    q·total ("the doc length below which q of the TOKEN MASS sits").
-    Same topology (one value-ordered window + broadcast totals) and
-    the same tie contract: the minimum qualifying VALUE is order-free
-    even though intra-tie running sums are not.  Integer comparisons
-    when weights are integers (cw ≥ q·tw compared cross-multiplied —
-    no float thresholds when q is rational)."""
+    """Exact weighted percentile per group: the smallest value whose
+    running weight reaches q·total ("the doc length below which q of
+    the TOKEN MASS sits").
+
+    One value-ordered window per group for the running sum + one 1-row
+    (per-group) total broadcast back; both shuffles key on the group.
+    Tie contract: the minimum qualifying VALUE is order-free even
+    though intra-tie running sums are not.  Integer comparisons when
+    weights are integers (cw ≥ q·tw compared cross-multiplied — no
+    float thresholds when q is rational), so engine-exact.  At
+    unbounded group cardinality this is the exact regime; the GK
+    sketch generalizes to weighted ranks the same way
+    group_percentiles' approx regime does."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
     from fractions import Fraction

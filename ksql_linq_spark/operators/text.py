@@ -606,7 +606,7 @@ def redact_pii(
     return c
 
 
-def gopher_rules(text, lang: str = "en") -> Column:
+def gopher_rules(text) -> Column:
     """The full Gopher document-filter rule set (Rae et al. 2021,
     "Scaling Language Models: Methods, Analysis & Insights from
     Training Gopher", appendix A1.1) as one struct of booleans plus the

@@ -42,7 +42,7 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.calendar import SessionBounds, in_session_join
+from ..operators.calendar import in_session_join
 
 # Lifecycle.cs:785 — refresh fires at 00:05 UTC each day
 DEFAULT_REFRESH_TIME = dt.time(0, 5)
@@ -69,7 +69,6 @@ class RefreshingScheduleProvider:
         refresh_time: dt.time = DEFAULT_REFRESH_TIME,
         now_fn: Callable[[], dt.datetime] = _utcnow,
         reader: Callable[[SparkSession, str], DataFrame] | None = None,
-        bounds: SessionBounds = SessionBounds(),
     ):
         self._spark = spark
         self._path = path
@@ -79,9 +78,8 @@ class RefreshingScheduleProvider:
         self._refresh_time = refresh_time
         self._now = now_fn
         self._read = reader or (lambda s, p: s.read.parquet(p))
-        self._bounds = bounds
         self._df: DataFrame | None = None
-        self._index: dict[str, list[tuple[dt.datetime, dt.datetime]]] | None = None
+        self._index: dict[str, list[tuple[dt.datetime, dt.datetime]]] = {}
         self._loaded_at: dt.datetime | None = None
         self.refresh_count = 0
         self.refresh()  # InitializeAsync analog — load eagerly
@@ -94,9 +92,28 @@ class RefreshingScheduleProvider:
         return nxt
 
     def refresh(self) -> None:
-        """Re-read the schedule dimension (RefreshAsync analog)."""
+        """Re-read the schedule dimension (RefreshAsync analog) and
+        rebuild the interval index from it: one collect of the tiny dim
+        (markets x days), so neither :meth:`gate` nor
+        :meth:`is_in_session` runs a Spark job of its own.  Sessions
+        with a NULL bound or ``close <= open`` contain no instant and
+        are left out, as the gate's join drops them."""
         self._df = self._read(self._spark, self._path)
-        self._index = None  # pull-side interval index rebuilt lazily
+        idx: dict[str, list[tuple[dt.datetime, dt.datetime]]] = {}
+        for key, open_t, close_t in self._df.select(
+            self._key, self._open, self._close
+        ).collect():
+            if open_t is not None and close_t is not None and close_t > open_t:
+                idx.setdefault(str(key), []).append((open_t, close_t))
+        for v in idx.values():
+            v.sort()
+        self._index = idx
+        # the gate's time-chunk width: the longest session, so the join
+        # needs no width probe per micro-batch
+        self._longest_s = max(
+            ((c - o).total_seconds() for v in idx.values() for o, c in v),
+            default=1.0,
+        )
         self._loaded_at = self._now()
         self.refresh_count += 1
 
@@ -129,7 +146,7 @@ class RefreshingScheduleProvider:
             schedule_key=self._key,
             open_col=self._open,
             close_col=self._close,
-            bounds=self._bounds,
+            bucket_width=self._longest_s,
         )
 
     def foreach_batch_gate(
@@ -149,22 +166,9 @@ class RefreshingScheduleProvider:
 
     # -- pull twin (MarketScheduleProvider.IsInSession) ------------------
     def is_in_session(self, key_parts: Iterable[str], utc_ts: dt.datetime) -> bool:
-        """Driver-side point check over the collected interval index —
-        binary search per the reference (:40-59; open inclusive, close
-        exclusive).  The schedule is a tiny dim (markets x days), so
-        collecting it is the pull-query pattern runtime.py already uses;
-        the index is rebuilt only after a refresh."""
-        if self._index is None:
-            rows = (
-                self.schedule.select(self._key, self._open, self._close)
-                .collect()
-            )
-            idx: dict[str, list[tuple[dt.datetime, dt.datetime]]] = {}
-            for r in rows:
-                idx.setdefault(str(r[0]), []).append((r[1], r[2]))
-            for v in idx.values():
-                v.sort()
-            self._index = idx
+        """Driver-side point check over the interval index
+        :meth:`refresh` collected — binary search per the reference
+        (:40-59; open inclusive, close exclusive)."""
         parts = [str(p) for p in key_parts]
         if len(parts) != 1:
             # the index is keyed by the provider's single schedule-key

@@ -87,7 +87,9 @@ def test_asof_rejects_colliding_columns(spark):
 def test_point_in_interval_join_boundaries(spark):
     """Chunk-bucketed range join: intervals spanning chunks match points
     in every chunk they touch exactly once, the end bound is exclusive,
-    and a left join keeps unmatched points."""
+    a left join keeps unmatched points, a left-semi join returns the
+    matching points alone, and the probed chunk width gives the same
+    rows as a fixed one."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -116,3 +118,17 @@ def test_point_in_interval_join_boundaries(spark):
 
     inner = point_in_interval_join(points, ivs, "ts", "s", "e", chunk_seconds=60)
     assert sorted(r["pid"] for r in inner.collect()) == [1, 2]
+
+    # left_semi: each matching point once, with the point side's columns
+    # only — an interval column named like a point column is no clash
+    semi = point_in_interval_join(
+        points, ivs.withColumn("pid", F.lit(0)), "ts", "s", "e",
+        chunk_seconds=60, how="left_semi",
+    )
+    assert semi.columns == points.columns
+    assert sorted(r["pid"] for r in semi.collect()) == [1, 2]
+
+    # chunk_seconds=None sizes the chunk from the longest interval (110 s
+    # here): same rows as any fixed width
+    auto = point_in_interval_join(points, ivs, "ts", "s", "e", how="left")
+    assert {r["pid"]: r["iv"] for r in auto.collect()} == got

@@ -265,7 +265,8 @@ def test_no_bool_option_left_at_its_default():
     may not keep a ``bool``- or ``None``-defaulted parameter that no
     call site sets to anything but its default — such an option only
     keeps an untested branch alive; fix the value and delete the branch
-    instead.
+    instead.  Nor may it keep a parameter its body never reads: callers
+    set it for nothing.
 
     Call sites are searched in ``ksql_linq_spark/``, ``tests/``,
     ``tools/``, ``perfbench/`` and ``bench.py`` and matched by function
@@ -316,6 +317,16 @@ def test_no_bool_option_left_at_its_default():
                 continue
             a = fn.args
             positional = a.posonlyargs + a.args
+            read = {
+                n.id
+                for stmt in fn.body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            for param in positional + a.kwonlyargs + [a.vararg, a.kwarg]:
+                if param is not None and param.arg not in read:
+                    rel = path.relative_to(root)
+                    never_set.append(f"{rel}:{fn.lineno} {fn.name}({param.arg}) never read")
             pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
             pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
             for param, d in pairs:
@@ -332,5 +343,6 @@ def test_no_bool_option_left_at_its_default():
                     never_set.append(f"{rel}:{fn.lineno} {fn.name}({param.arg}={d.value})")
     assert not never_set, (
         "bool/None parameters no call site sets off their default — make "
-        "the value a constant and delete the branch:\n" + "\n".join(never_set)
+        "the value a constant and delete the branch; parameters the body "
+        "never reads — delete them:\n" + "\n".join(never_set)
     )

@@ -46,26 +46,22 @@ def test_in_session_join_boundaries(spark):
     ]
 
 
-def test_in_session_join_bucketed_parity(spark):
-    """The interval-bucketed gate (round 10: each fact row probes only
-    the 1-2 sessions overlapping its coarse time bucket, not its
-    market's whole schedule) must keep EXACT semantics vs the plain
-    semi-join: open inclusive, close exclusive, sub-second timestamps,
-    sessions of mixed lengths, markets with no schedule, inverted
-    bounds matching nothing."""
+def _mixed_schedule_and_probes(spark):
+    """A schedule of mixed session lengths, an inverted interval and a
+    1970 sentinel, and probe rows at every session's bounds ±1 µs and
+    midpoint plus one row of a market with no schedule."""
     sched_rows = [
-        # mixed lengths: 10 s bursts and an 8 h session set the bucket
+        # mixed lengths: 10 s bursts and an 8 h session set the chunk
         # width from the LONGEST interval
         ("A", dt.datetime(2024, 1, 1, 0, 0, 0), dt.datetime(2024, 1, 1, 0, 0, 10)),
         ("A", dt.datetime(2024, 1, 1, 0, 0, 12), dt.datetime(2024, 1, 1, 0, 0, 22)),
         ("B", dt.datetime(2024, 1, 1, 9, 0, 0), dt.datetime(2024, 1, 1, 17, 0, 0)),
-        # inverted interval: matches nothing, must not corrupt buckets
+        # inverted interval: matches nothing, must not corrupt chunks
         ("C", dt.datetime(2024, 1, 2, 5, 0, 0), dt.datetime(2024, 1, 2, 4, 0, 0)),
         # DECADES-scale inverted sentinel (close = epoch 0, ~54 years
-        # before open): before the round-11 clamp this single garbage
-        # row passed the NULL-only guard and exploded an unbounded
-        # descending sequence (~59k buckets at 8 h width) into the
-        # broadcast side; it must be filtered, not exploded
+        # before open): exploded, it would be an unbounded descending
+        # sequence of chunks on the broadcast side; it must be
+        # filtered, not exploded
         ("D", dt.datetime(2024, 1, 1, 12, 0, 0), dt.datetime(1970, 1, 1, 0, 0, 0)),
     ]
     sched = spark.createDataFrame(
@@ -81,14 +77,106 @@ def test_in_session_join_bucketed_parity(spark):
             pid += 1
     probe_rows += [("Z", dt.datetime(2024, 1, 1, 0, 0, 5), pid)]  # no schedule
     df = spark.createDataFrame(probe_rows, "market string, ts timestamp, id long")
-    plain = {r["id"] for r in in_session_join(
-        df, sched, "market", "ts", bucketed=False).collect()}
-    fast_df = in_session_join(df, sched, "market", "ts", bucketed=True)
-    # the bucketed BRANCH must be taken (not the plain fallback), so
-    # the inverted sentinels exercise the explode-side clamp for real
-    assert "__bucket" in fast_df._jdf.queryExecution().analyzed().toString()
+    return sched, df
+
+
+def _range_join(df, sched, how):
+    """The plain reference: equality on the market plus the range
+    predicate, no time chunks."""
+    s = sched.alias("s")
+    return df.join(
+        s,
+        (df["market"] == F.col("s.market_key"))
+        & (df["ts"] >= F.col("s.open_time"))
+        & (df["ts"] < F.col("s.close_time")),
+        how,
+    )
+
+
+def test_in_session_join_bucketed_parity(spark):
+    """The chunk-bucketed gate (round 10: each fact row probes only the
+    1-2 sessions overlapping its time chunk, not its market's whole
+    schedule) must keep EXACT semantics vs a plain semi-join: open
+    inclusive, close exclusive, sub-second timestamps, sessions of
+    mixed lengths, markets with no schedule, inverted bounds matching
+    nothing."""
+    sched, df = _mixed_schedule_and_probes(spark)
+    plain = {r["id"] for r in _range_join(df, sched, "leftsemi").collect()}
+    fast_df = in_session_join(df, sched, "market", "ts")
+    # the join runs on time chunks, so the inverted sentinels exercise
+    # the explode-side filter for real
+    assert "__chunk" in fast_df._jdf.queryExecution().analyzed().toString()
+    assert fast_df.columns == df.columns
     fast = {r["id"] for r in fast_df.collect()}
     assert plain == fast and plain  # identical, and non-trivially so
+
+
+def test_session_tag_join_matches_plain_inner_join(spark):
+    """session_tag_join is the same chunk-bucketed join as the gate:
+    its analyzed plan joins on ``__chunk``, and its rows equal a plain
+    inner range join's on the mixed schedule, each probe row tagged with
+    the bounds of the session that contains it."""
+    sched, df = _mixed_schedule_and_probes(spark)
+    want = sorted(
+        (r["id"], r["open_time"], r["close_time"])
+        for r in _range_join(df, sched, "inner").collect()
+    )
+    tagged = session_tag_join(df, sched, "market", "ts")
+    assert "__chunk" in tagged._jdf.queryExecution().analyzed().toString()
+    assert tagged.columns == df.columns + ["session_open", "session_close"]
+    got = sorted(
+        (r["id"], r["session_open"], r["session_close"]) for r in tagged.collect()
+    )
+    assert got == want and want
+
+
+def test_streaming_in_session_join_plans_broadcast_semi_join(spark, tmp_path):
+    """The gate over a parquet file stream is a stream-static
+    BroadcastHashJoin LeftSemi, the same join as in batch."""
+    sched = make_daily_schedule(spark, ["X"], "2024-01-01", "2024-01-02")
+    schema = "market string, ts timestamp"
+    spark.createDataFrame(
+        [("X", dt.datetime(2024, 1, 1, 10, 0)), ("X", dt.datetime(2024, 1, 1, 20, 0))],
+        schema,
+    ).write.parquet(str(tmp_path / "in"))
+    gated = in_session_join(
+        spark.readStream.schema(schema).parquet(str(tmp_path / "in")),
+        sched, "market", "ts",
+    )
+    q = (
+        gated.writeStream.format("memory").queryName("gated_stream")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.explainInternal(False)
+    finally:
+        q.stop()
+    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+    got = [r["ts"] for r in spark.table("gated_stream").collect()]
+    assert got == [dt.datetime(2024, 1, 1, 10, 0)]
+
+
+def test_schedule_provider_gate_runs_no_job(spark, tmp_path):
+    """The provider collects its interval index at refresh, and gate()
+    passes the index's longest session as the chunk width: building a
+    micro-batch's gate runs no Spark job, and the gate still keeps
+    exactly the rows inside a session."""
+    from ksql_linq_spark.streaming.schedule import RefreshingScheduleProvider
+
+    sched_dir = str(tmp_path / "sched")
+    make_daily_schedule(spark, ["X"], "2024-01-01", "2024-01-05").write.parquet(sched_dir)
+    prov = RefreshingScheduleProvider(
+        spark, sched_dir, now_fn=lambda: dt.datetime(2024, 1, 1, 12, 0)
+    )
+    df = spark.createDataFrame(
+        [("X", dt.datetime(2024, 1, 2, 10, 0)), ("X", dt.datetime(2024, 1, 2, 17, 0))],
+        "market string, ts timestamp",
+    )
+    gated, jobs = _jobs_per_call(spark, lambda: prov.gate(df, "market", "ts"))
+    assert jobs == 0
+    assert [r["ts"] for r in gated.collect()] == [dt.datetime(2024, 1, 2, 10, 0)]
 
 
 def test_session_tag_join_carries_session(spark):

@@ -1306,6 +1306,7 @@ def test_cascade_soak_restart_midstream_exactly_once(spark, sf_dir):
     import os
 
     from ksql_linq_spark.operators.cascade import CascadePlan, build_hub, rollup_tier
+    from ksql_linq_spark.operators.ohlc import ohlc_aggs
     from ksql_linq_spark.sources import read_table
     from ksql_linq_spark.streaming.windows import idempotent_append_sink
 
@@ -1342,7 +1343,6 @@ def test_cascade_soak_restart_midstream_exactly_once(spark, sf_dir):
             shutil.rmtree(f"{src_dir}/c{i}", ignore_errors=True)
 
         os.makedirs(src_dir, exist_ok=True)
-        ts, price = F.col("ts"), F.col("value")
 
         def start_hub():
             stream = (
@@ -1353,16 +1353,7 @@ def test_cascade_soak_restart_midstream_exactly_once(spark, sf_dir):
             hub = (
                 stream.withWatermark("ts", "1 second")
                 .groupBy(F.col("event_type"), F.window("ts", "1 hour").alias("w"))
-                .agg(
-                    F.min_by(price, ts).alias("open"),
-                    F.max(price).alias("high"),
-                    F.min(price).alias("low"),
-                    F.max_by(price, ts).alias("close"),
-                    F.sum(price).alias("sum_v"),
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.min(ts).alias("first_ts"),
-                    F.max(ts).alias("last_ts"),
-                )
+                .agg(*ohlc_aggs("ts", "value"))
                 .select(F.col("w.start").alias("bucket_start"), "*")
                 .drop("w")
             )

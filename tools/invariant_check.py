@@ -513,7 +513,7 @@ class Harness:
             build_hub,
             rollup_tier,
         )
-        from ksql_linq_spark.operators.windows import bucket_start
+        from ksql_linq_spark.operators.ohlc import ohlc_bars
 
         t0 = time.time()
         # events.value is exact 2dp by construction — sum it as DECIMAL
@@ -533,16 +533,9 @@ class Harness:
             "event_type", "bucket_start", "open", "high", "low", "close",
             "sum_v", "cnt",
         )
-        ts, price = F.col("ts"), F.col("value")
-        direct = ev.groupBy(
-            "event_type", bucket_start("ts", "5m").alias("bucket_start")
-        ).agg(
-            F.min_by(price, ts).alias("open"),
-            F.max(price).alias("high"),
-            F.min(price).alias("low"),
-            F.max_by(price, ts).alias("close"),
-            F.sum(price).alias("sum_v"),
-            F.count(F.lit(1)).alias("cnt"),
+        direct = ohlc_bars(ev, ["event_type"], "ts", "value", "5m").select(
+            "event_type", "bucket_start", "open", "high", "low", "close",
+            "sum_v", "cnt",
         )
         a, b = canon(via_hub.toPandas()), canon(direct.toPandas())
         same = render(a) == render(b)

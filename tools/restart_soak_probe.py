@@ -188,10 +188,9 @@ def collect_state(queries) -> tuple[dict, dict]:
 
 def run_store(spark, store: str, src_dir: str, n_keys: int,
               reload_probe: bool = False) -> dict:
-    from pyspark.sql import functions as F
-
     from ksql_linq_spark.operators.cascade import (
         CascadePlan,
+        build_hub,
         start_streaming_cascade,
     )
 
@@ -318,20 +317,7 @@ def run_store(spark, store: str, src_dir: str, n_keys: int,
         # value identity vs the batch hub over the same raw rows —
         # every streamed bar (incl. kill-spanning windows) must match
         ticks = spark.read.parquet(f"{src_dir}/chunk_*.parquet")
-        ts, price = F.col("ts"), F.col("value")
-        batch_hub = (
-            ticks.groupBy("event_type", F.window("ts", "1 second").alias("w"))
-            .agg(
-                F.min_by(price, ts).alias("open"),
-                F.max(price).alias("high"),
-                F.min(price).alias("low"),
-                F.max_by(price, ts).alias("close"),
-                F.sum(price).alias("sum_v"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .select(F.col("w.start").alias("bucket_start"), "event_type",
-                    "open", "high", "low", "close", "sum_v", "cnt")
-        )
+        batch_hub = build_hub(plan, ticks)
         streamed = spark.read.parquet(f"{sink}/{plan.hub_name}").select(
             "bucket_start", "event_type",
             "open", "high", "low", "close", "sum_v", "cnt")
