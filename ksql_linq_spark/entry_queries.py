@@ -26,6 +26,7 @@ from . import functions as KF
 from .operators.ohlc import ohlc_bars
 from .operators.windows import bucket_start
 from .query.builder import from_df
+from .session import cut
 from .sources import evict_foreign_apps, read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2850,29 +2851,25 @@ def decontamination_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent): ``total``/``overlap``/``ratio`` are EXACT on the HLL
     path by construction and hash-compared against DuckDB; the sketched
     ``train_docs`` estimate rides as a per-doc error-bound invariant
-    (|est - exact| <= max(2, 5% of exact); default lgK=12 sketches are
-    exact in sparse mode at these per-doc cardinalities, the bound
-    covers dense-mode rsd at scale).  The exact leg exists only to
-    judge the estimate at test SFs — the operator a user deploys is the
-    approx path alone."""
+    (|est - exact| <= max(2, 5% of exact); the lgK=14 sketches
+    (decontam.HLL_LGK) are exact in sparse mode at these per-doc
+    cardinalities, the bound covers dense-mode rsd at scale).  The
+    exact leg exists only to judge the estimate at test SFs — the
+    operator a user deploys is the approx path alone."""
     from .operators.dataset import hash_split
     from .operators.decontam import contamination_report
 
     d = _t(spark, sf_dir, "documents").withColumn("split", hash_split("doc_id"))
     train = d.filter(F.col("split") == "train")
     test = d.filter(F.col("split") == "test")
-    # hll_lgk=14: the r7 30x sweep measured the lgk=12 default's error
-    # tail at 6.2% max over 15k docs — past the 5% invariant below;
-    # lgk=14 halves the rsd (bound moves to ~6 sigma, no flips)
     # one operator call carries BOTH legs (r13): the exact recount
-    # rides the same checkpointed train/eval shingle frames instead of
+    # rides the same cut train/eval shingle frames instead of
     # a second contamination_report that re-shingled train AND eval
     approx = contamination_report(
         train,
         test,
         shingle_n=3,
         approx_train_docs=True,
-        hll_lgk=14,
         exact_check_col="_exact_td",
     )
     return approx.select(
@@ -4081,15 +4078,13 @@ def dataset_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     distributed_ntile references its input three times (value counts,
     total, join-back); a tokenize is too expensive to run 3× (measured:
-    3 scans), so the narrow (doc_id, lang, tok) projection is
-    materialized once via lazy localCheckpoint before the ntile."""
+    3 scans), so the narrow (doc_id, lang, tok) projection is cut
+    once before the ntile."""
     from .operators.dataset import distributed_ntile
     from .operators.text import token_count
 
     d = _t(spark, sf_dir, "documents")
-    t = d.select(
-        "doc_id", "lang", token_count("text").alias("tok")
-    ).localCheckpoint(eager=False)
+    t = cut(d.select("doc_id", "lang", token_count("text").alias("tok")))
     tiers = distributed_ntile(t, 10, "tok", "doc_id", out_col="tier")
     return tiers.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -7311,14 +7306,10 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The activity projection feeds three branches (day spine, WAU
     explode, DAU counts); without a lineage cut each re-scans events
-    (measured: 3 scans).  Lazy localCheckpoint materializes the
-    distinct (user, day) frame — far smaller than raw events — once."""
+    (measured: 3 scans).  A cut materializes the distinct (user, day)
+    frame — far smaller than raw events — once."""
     ev = _t(spark, sf_dir, "events")
-    act = (
-        ev.select("user_id", F.to_date("ts").alias("day"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    act = cut(ev.select("user_id", F.to_date("ts").alias("day")).distinct())
     days = act.select("day").distinct()
     contrib = act.select(
         "user_id",
@@ -7398,16 +7389,15 @@ def events_type_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
         lambda s: s["t1"] < s["t2"],
     )
-    counts = (
+    # 4 downstream legs (pairs, two singles dims, total) — cut the
+    # lineage so the 2-exchange count job runs ONCE, not per leg (the
+    # frame is ≤ 1+T+T² rows)
+    counts = cut(
         usets.select(
             F.explode(F.concat(marker, single_arr, pair_arr)).alias("p")
         )
         .groupBy(F.col("p.t1").alias("t1"), F.col("p.t2").alias("t2"))
         .agg(F.count(F.lit(1)).alias("c"))
-        # 4 downstream legs (pairs, two singles dims, total) — cut the
-        # lineage so the 2-exchange count job runs ONCE, not per leg
-        # (graph.py's fusion discipline; the frame is ≤ 1+T+T² rows)
-        .localCheckpoint()
     )
     pairs = counts.where(
         F.col("t1").isNotNull() & F.col("t2").isNotNull()
@@ -8135,7 +8125,7 @@ def corpus_source_exclusivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_distinct shrinks the explode feeding the one real cross-doc
     distinct exchange.  r14: the former frequency-dim branch +
     join-back referenced the distinct gram frame twice, which defeats
-    ReuseExchange and forced a lazy localCheckpoint (~0.5 s of toRdd
+    ReuseExchange and forced a lineage cut (~0.5 s of toRdd
     planning per build, §7.3); the window form references it once —
     no cut, no join (the r13 attempt that was rejected replaced the
     join with EXTRA aggregates; the window replaces it with none)."""

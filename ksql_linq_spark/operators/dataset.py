@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cut
+
 
 def split_bucket(key: Column | str, buckets: int = 1000) -> Column:
     """Deterministic [0, buckets) bucket from md5 of the key's string form."""
@@ -491,9 +493,9 @@ def remove_dup_ngrams(
     The positioned-token stream feeds 3 branches (grams, survivors,
     totals); Catalyst does not reuse exchanges across
     differently-pruned branches (measured: 5 parquet scans — the regex
-    tokenize re-ran per consumer), so the token stream is materialized
-    once via lazy localCheckpoint.  The gram frame is deliberately NOT
-    checkpointed: its n-gram strings are ~n× the token stream, so its
+    tokenize re-ran per consumer), so the token stream is cut once
+    (session.cut).  The gram frame is deliberately NOT
+    cut: its n-gram strings are ~n× the token stream, so its
     two consumers re-run the (cheap, key-local) lead window over the
     materialized tokens instead of spilling the fattest frame in the
     plan.
@@ -514,7 +516,7 @@ def remove_dup_ngrams(
     # in place, and reassembly is an ordered array filter against the
     # (bounded, matched-only) covered-position set joined back per doc.
     # Output bit-identical (exceptAll both ways empty at sf0.1).
-    sub = df.select(
+    sub = cut(df.select(
         F.col(id_col),
         # Generate barrier (the _shingle_arrays discipline): the token
         # array is referenced by grams, the rebuild filter, and both
@@ -528,7 +530,7 @@ def remove_dup_ngrams(
                 )
             )
         ).alias("_toks"),
-    ).localCheckpoint(eager=False)
+    ))
     # docs shorter than n tokens contribute NO grams; the when-guard is
     # load-bearing (sequence(1, 0) would COUNT DOWN, not come up empty)
     gram_expr = F.when(

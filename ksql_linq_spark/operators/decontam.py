@@ -17,19 +17,27 @@ row-local shingle assembly):
 
 Scale notes: the join key is the shingle string — high cardinality,
 well distributed, so the shuffle is even.  Stop-shingles (boilerplate
-appearing in thousands of train docs) would blow up the join fan-out;
-``max_shingle_freq`` caps train-side document frequency before the
-join, the same skew guard ngram_jaccard_pairs uses.  The reference has
-no such operator (superset per the build brief's training-data list).
+appearing in thousands of train docs) would blow up the exact join's
+fan-out; ``approx_train_docs`` collapses the train side to one row per
+distinct shingle before the join.  The reference has no such operator
+(superset per the build brief's training-data list).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..session import cut
 from .text import _shingle_arrays, shingle_rows
+
+# HLL sketch size of the ``approx_train_docs`` path (rsd ~
+# 1.04/sqrt(2^lgk)): lgk=12 is ~1.6% rsd, measured max error 6.2% over
+# 15k docs at 30x (a ~4-sigma tail breaches a 5% accuracy contract);
+# lgk=14 halves the rsd so the same 5% bound sits at ~6 sigma.  Sketches
+# stay sparse (small) for the long tail of rare shingles — only hot
+# shingles pay the dense-mode size, so the shuffle cost is marginal.
+HLL_LGK = 14
 
 
 def contamination_report(
@@ -38,9 +46,7 @@ def contamination_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
-    max_shingle_freq: int | None = None,
     approx_train_docs: bool = False,
-    hll_lgk: int = 12,
     exact_check_col: str | None = None,
 ) -> DataFrame:
     """Per eval document: ``total`` distinct shingles, ``overlap`` of
@@ -51,10 +57,9 @@ def contamination_report(
 
     The per-doc eval set frame feeds two branches (the train join and
     the per-doc base); Catalyst does not reuse work across them
-    (measured: the eval shingling re-ran per branch), so it is
-    materialized once via lazy localCheckpoint — eval splits are a
-    small fraction of the corpus by construction, making this the
-    cheap side to pin.
+    (measured: the eval shingling re-ran per branch), so it is cut
+    once — eval splits are a small fraction of the corpus by
+    construction, making this the cheap side to pin.
 
     ``approx_train_docs`` is the boilerplate-proof scale path: the
     exact join emits one row per (eval shingle × matching train
@@ -66,11 +71,9 @@ def contamination_report(
     ids (datasketches hll_sketch_agg — fixed-size, mergeable), the
     join output is capped at |matched eval shingles| regardless of
     train-side multiplicity, and ``train_docs`` becomes
-    hll_sketch_estimate(hll_union_agg(...)) per eval doc (±~2% rsd;
+    hll_sketch_estimate(hll_union_agg(...)) per eval doc (``HLL_LGK``;
     ``overlap``/``ratio``/``total`` stay exact — eval shingle rows are
-    distinct by construction).  The exact shingle doc-frequency falls
-    out of the same groupBy, so ``max_shingle_freq`` prunes without
-    the window pass the exact path needs."""
+    distinct by construction)."""
     # the distinct eval shingle SET and its size are per-doc, hence
     # row-local array expressions (guide §2.4): no (id, s) distinct
     # exchange and no count-over-window exchange+sort.  The per-doc
@@ -78,7 +81,7 @@ def contamination_report(
     # the exploded view and the base totals both derive from it, and
     # base needs no distinct() any more — it is one row per doc by
     # construction.
-    ev_sets = (
+    ev_sets = cut(
         _shingle_arrays(eval_df, text_col, id_col, shingle_n)
         # Generate barrier (see _shingle_arrays): _set is referenced by
         # the filter, the size, and the explode below — a Project would
@@ -93,7 +96,6 @@ def contamination_report(
             F.col("_set"),
             F.size("_set").cast("long").alias("total"),
         )
-        .localCheckpoint(eager=False)
     )
     ev = ev_sets.select(
         F.col(id_col), F.explode(F.col("_set")).alias("s"), F.col("total")
@@ -108,21 +110,11 @@ def contamination_report(
         # exact-recount join below; without a cut the whole train
         # shingling re-runs per branch (r13: the hll query previously
         # made two operator calls and shingled train + eval TWICE)
-        tr = tr.localCheckpoint(eager=False)
+        tr = cut(tr)
     if approx_train_docs:
-        # hll_lgk sizes the sketch (rsd ~ 1.04/sqrt(2^lgk)): lgk=12 is
-        # ~1.6% rsd, measured max error 6.2% over 15k docs at 30x (a
-        # ~4-sigma tail breaches a 5% accuracy contract); lgk=14 halves
-        # the rsd so the same 5% bound sits at ~6 sigma.  Sketches stay
-        # sparse (small) for the long tail of rare shingles — only hot
-        # shingles pay the dense-mode size, so the shuffle cost of +2
-        # lgk is marginal.
         tr_dim = tr.groupBy("s").agg(
-            F.count(F.lit(1)).alias("_df"),
-            F.hll_sketch_agg("_train_id", F.lit(hll_lgk)).alias("_hll"),
+            F.hll_sketch_agg("_train_id", F.lit(HLL_LGK)).alias("_hll")
         )
-        if max_shingle_freq is not None:
-            tr_dim = tr_dim.filter(F.col("_df") <= max_shingle_freq)
         hits = (
             ev.join(tr_dim, "s")
             .groupBy(id_col)
@@ -144,7 +136,7 @@ def contamination_report(
             (F.coalesce("overlap", F.lit(0)) / F.col("total")).alias("ratio"),
         )
         if exact_check_col is not None:
-            # the exact recount rides the SAME checkpointed shingle
+            # the exact recount rides the SAME cut shingle
             # frames — one extra doc-keyed aggregate instead of a whole
             # second report's shingling (identical values to the exact
             # path's train_docs: same countDistinct over the same join)
@@ -157,14 +149,6 @@ def contamination_report(
                 exact_check_col, F.coalesce(exact_check_col, F.lit(0))
             )
         return out
-    if max_shingle_freq is not None:
-        tr = (
-            tr.withColumn(
-                "_df", F.count(F.lit(1)).over(Window.partitionBy("s"))
-            )
-            .filter(F.col("_df") <= max_shingle_freq)
-            .drop("_df")
-        )
     hits = (
         ev.join(tr, "s")
         .groupBy(id_col)

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import fingerprint, shingle_rows, shingles
+from .text import fingerprint, shingle_rows
 
 _MOD32 = 2**32
 

@@ -10,7 +10,7 @@ propagation as a DataFrame loop:
 
 Each round is one join + one groupBy on the edge list — both
 partitioned by the same key, so AQE reuses the exchange — and
-``localCheckpoint`` truncates the growing lineage (the classic
+:func:`~..session.cut` truncates the growing lineage (the classic
 iterative-Spark trap: without it, round N replays rounds 1..N-1).
 Rounds needed = graph diameter.  Near-dup components are star/clique
 shaped (diameter ≤ ~4 even at 100 TB — dups of a doc are dups of each
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import cut
 
 # Round bound of the distributed label-propagation loop: with pointer
 # doubling each round halves the effective diameter, so 30 rounds cover
@@ -111,9 +113,9 @@ def connected_components(
 
     # one scan of the (possibly expensive) upstream edge pipeline: emit
     # both directions via explode instead of union(edges, edges) — the
-    # union form computes the edge plan TWICE before the checkpoint cuts
-    # lineage (measured 29 s → ~0 on an LSH-pair input at sf0.1)
-    und = (
+    # union form computes the edge plan TWICE before the cut
+    # (measured 29 s → ~0 on an LSH-pair input at sf0.1)
+    und = cut(
         edges.where(non_null).select(
             F.explode(
                 F.array(
@@ -124,13 +126,11 @@ def connected_components(
         )
         .select("e.u", "e.v")
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    labels = cut(
         und.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
@@ -157,13 +157,13 @@ def connected_components(
         # CC_MAX_ROUNDS).  Labels only
         # ever decrease toward the component min, so the fixpoint is
         # unchanged — pinned by test_graph_cc_long_chain_converges.
-        # checkpoint before the self-join so the neighbor-min subtree
-        # runs once per round, not twice
-        stepped = stepped.localCheckpoint()
+        # Both sides of the self-join read ``stepped`` uncut: AQE reuses
+        # its exchanges, and a cut there measured no faster (SCALING.md);
+        # the one cut per round, on new_labels, bounds the lineage.
         lab_of_lab = stepped.select(
             F.col("node").alias("_ln"), F.col("label").alias("_ll")
         )
-        new_labels = (
+        new_labels = cut(
             stepped.join(lab_of_lab, stepped["label"] == F.col("_ln"), "left")
             .select(
                 "node",
@@ -172,7 +172,6 @@ def connected_components(
                     F.col("_changed") | (F.col("_ll") < F.col("label"))
                 ).alias("_changed"),
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("_changed")).limit(1).count()
         labels = new_labels.drop("_changed")
@@ -253,14 +252,14 @@ def _closed_triangles(canon: DataFrame) -> tuple[DataFrame, DataFrame]:
     → high-degree, ties by id) bounds the two-path self-join by the
     graph's arboricity; a left-semi join on the edge list closes it.
 
-    The canonical edge list is materialized once (lazy localCheckpoint,
-    the connected_components lineage-cut discipline): the dataflow
+    The canonical edge list is cut once (the connected_components
+    lineage-cut discipline): the dataflow
     references it four times, and without the cut each reference
     re-expands the whole upstream pair-mining pipeline — measured 11
     corpus scans / 38 shuffles (triangle_count) and 13 / 45
     (clustering_coefficient) for the LSH-pairs caller, vs one pipeline
     run + the triangle joins."""
-    e = canon.localCheckpoint(eager=False)
+    e = cut(canon)
     deg = (
         e.select(F.col("u").alias("n"))
         .unionAll(e.select(F.col("v").alias("n")))

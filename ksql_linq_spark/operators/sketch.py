@@ -27,7 +27,6 @@ superset per the build brief.
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 from typing import Iterator
 

@@ -22,8 +22,10 @@ src/Query/Builders/Functions/KsqlFunctionRegistry lists none.)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import cut
 
 
 def moment_stats(
@@ -242,7 +244,7 @@ def mad_outliers(
     from pyspark.sql import functions as F
 
     v = F.col(value_col).cast("double")
-    # both percentile dims are pinned via lazy localCheckpoint: each is
+    # both percentile dims are cut (session.cut): each is
     # a bounded per-group summary whose producing aggregate is an EXACT
     # percentile over the full input, and each feeds two downstream
     # branches — without the pin the median pass ran twice and the
@@ -254,17 +256,16 @@ def mad_outliers(
     # so the (keys, value) pre-aggregate buys no reduction and its
     # extra exchange made the query slower (med dim 0.21 s → 0.33 s at
     # sf0.1).  The direct grouped percentile stays.
-    med_dim = (
-        df.groupBy(*keys)
-        .agg(F.expr(f"percentile({value_col}, 0.5)").alias("med"))
-        .localCheckpoint(eager=False)
+    med_dim = cut(
+        df.groupBy(*keys).agg(
+            F.expr(f"percentile({value_col}, 0.5)").alias("med")
+        )
     )
     with_med = df.join(F.broadcast(med_dim), keys)
-    mad_dim = (
+    mad_dim = cut(
         with_med.select(*keys, F.abs(v - F.col("med")).alias("_ad"))
         .groupBy(*keys)
         .agg(F.expr("percentile(_ad, 0.5)").alias("mad"))
-        .localCheckpoint(eager=False)
     )
     out = with_med.join(F.broadcast(mad_dim), keys)
     return out.withColumn(
@@ -322,12 +323,12 @@ def psi_drift(
     # the edge dim feeds BOTH binning branches through a broadcast;
     # broadcast-exchange reuse does not fire across them (measured: the
     # full ref scan + grouped exact percentile ran twice), so the tiny
-    # keys x (n_bins-1) summary is materialized once via lazy
-    # localCheckpoint — expensive subtree, bounded result frame
-    edges = (
-        ref.groupBy(*keys)
-        .agg(F.expr(f"percentile({value_col}, {qlit})").alias("_edges"))
-        .localCheckpoint(eager=False)
+    # keys x (n_bins-1) summary is cut once — expensive subtree,
+    # bounded result frame
+    edges = cut(
+        ref.groupBy(*keys).agg(
+            F.expr(f"percentile({value_col}, {qlit})").alias("_edges")
+        )
     )
 
     def binned_counts(df, name):

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import cut
+
 # Minimal per-language stopword lists for the n-gram/stopword-hit
 # language heuristic.  Deliberately tiny + deterministic.
 STOPWORDS: dict[str, list[str]] = {
@@ -433,9 +435,9 @@ def cross_doc_dup_stats(df, text_col: str = "text", id_col: str = "doc_id",
     The former shape derived a dup-shingle dim from the count frame
     and semi-joined it back — THREE references to the frame, which
     defeats ReuseExchange (Catalyst prunes each branch differently;
-    measured 3 parquet scans) and therefore needed a lazy
-    localCheckpoint whose toRdd planning alone costs ~0.5 s of
-    driver time per build (guide §7.3).  The window form references
+    measured 3 parquet scans) and therefore needed a lineage cut
+    whose toRdd planning alone costs ~0.5 s of driver time per build
+    (guide §7.3).  The window form references
     the frame ONCE: no cut, no joins, same three exchanges
     ((doc,s) → s-window → doc rollup), and the s-exchange carries the
     aggregated counts either way.
@@ -485,8 +487,8 @@ def tfidf_top_terms(df, text_col: str = "text", id_col: str = "doc_id",
          a separate branch and broadcast-joined it back; that second
          reference to TF defeats ReuseExchange (Catalyst prunes the
          branch into a different aggregate shape — measured 3 parquet
-         scans) and forced a lazy localCheckpoint whose toRdd planning
-         alone costs ~0.5 s of driver time per build (§7.3).  The
+         scans) and forced a lineage cut whose toRdd planning alone
+         costs ~0.5 s of driver time per build (§7.3).  The
          window form references TF once: no cut, no DF join, and the
          term exchange carries the SAME aggregated TF rows the DF
          branch shuffled anyway,
@@ -542,10 +544,10 @@ def unigram_logprob_score(df, text_col: str = "text", id_col: str = "doc_id"):
     The TF frame feeds three branches (LM dim, corpus total, the join
     spine); Catalyst does not reuse the exchange across them, so
     without a cut each branch re-tokenizes the corpus (measured: 3
-    parquet scans).  A lazy ``localCheckpoint`` materializes TF once —
+    parquet scans).  A :func:`~..session.cut` materializes TF once —
     it is the distinct (doc, term) projection, strictly smaller than
     the text it came from — and every branch reads the materialized
-    RDD (the graph.py lineage-cut discipline; 1 scan, tokenize once).
+    RDD (1 scan, tokenize once).
 
     Determinism: each (doc, term) contribution c·ln(p) is rounded to
     6 dp and quantized to DECIMAL(18,6) BEFORE the per-doc sum, so the
@@ -556,11 +558,7 @@ def unigram_logprob_score(df, text_col: str = "text", id_col: str = "doc_id"):
     toks = df.select(
         F.col(id_col), F.explode(norm_tokens(text_col)).alias("term")
     )
-    tf = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    tf = cut(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("c")))
     lm = tf.groupBy("term").agg(F.sum("c").alias("cf"))
     total = lm.agg(F.sum("cf").alias("total"))
     contrib = F.round(

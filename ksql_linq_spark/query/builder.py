@@ -24,7 +24,7 @@ Aggregation classifies the query as a TABLE, otherwise STREAM
 from __future__ import annotations
 
 from enum import IntEnum
-from typing import Callable, Iterable
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

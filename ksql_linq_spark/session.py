@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 def host_defaults(
     env: Mapping[str, str], cpu_count: int | None, ram_bytes: int
@@ -98,25 +98,44 @@ def build_session(
     return b.getOrCreate()
 
 
-def release_lineage_cuts(spark: SparkSession) -> int:
-    """Unpersist every cached/locally-checkpointed RDD block set.
+def cut(df: DataFrame) -> DataFrame:
+    """``df`` with its lineage cut: the package's one lineage-cut
+    primitive (a local checkpoint no action forces), for a frame that
+    several branches of one plan read — Catalyst does not reuse work
+    across differently-pruned branches, so without a cut each branch
+    re-runs the frame's subtree.  The per-site measurements are in
+    SCALING.md "Known costs accepted deliberately".
 
-    The lineage-cut sites (``localCheckpoint(eager=False)`` in
-    operators/text.py, stats.py, graph.py, decontam.py, dataset.py —
-    see SCALING.md "Known costs accepted deliberately") persist
-    materialized blocks at MEMORY_AND_DISK with no explicit unpersist:
-    in a long-lived session that repeatedly builds these operators,
+    - The cut is not lazy under AQE: building it plans the subtree
+      adaptively, which runs every shuffle stage below the cut right
+      away (one Spark job over a one-shuffle aggregate, none over a
+      narrow plan).  The rest runs at the first action.
+    - The blocks are not fault-tolerant: losing an executor after the
+      cut loses them, and since the lineage is gone Spark cannot
+      recompute them — the enclosing action fails with
+      ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and must be retried from
+      the start (reliable ``checkpoint()`` is the alternative when
+      executor churn is expected).
+    - The blocks stay persisted until :func:`release_lineage_cuts`
+      frees them.
+
+    ``persist()`` is not used: it registers the frame in the cache
+    manager, where a later query's plan could match it, and results
+    are never cached across queries."""
+    return df.localCheckpoint(eager=False)
+
+
+def release_lineage_cuts(spark: SparkSession) -> int:
+    """Unpersist every cached/locally-checkpointed RDD block set — the
+    blocks of every :func:`cut`.
+
+    They are persisted at MEMORY_AND_DISK with no explicit unpersist:
+    in a long-lived session that repeatedly builds cut operators,
     executor storage accumulates until Python GC + ContextCleaner
     reclaim the handles.  Interactive/batch jobs never notice (session
     ends, storage goes with it); a resident service should call this
-    between logical requests.  Returns the number of RDDs released.
-
-    Note localCheckpoint blocks are NOT fault-tolerant: losing an
-    executor after the cut loses those blocks, and because the lineage
-    was truncated Spark cannot recompute them — the enclosing action
-    fails and must be retried from the start.  That is the documented
-    price of cutting (reliable ``checkpoint()`` to HDFS is the
-    alternative when executor churn is expected)."""
+    between logical requests, never between two actions on the same
+    cut frame.  Returns the number of RDDs released."""
     jsc = spark.sparkContext._jsc.sc()
     persistent = jsc.getPersistentRDDs()
     it = persistent.iterator()

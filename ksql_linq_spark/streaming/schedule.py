@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import datetime as dt
 from bisect import bisect_right
+from itertools import accumulate
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,7 +80,7 @@ class RefreshingScheduleProvider:
         self._now = now_fn
         self._read = reader or (lambda s, p: s.read.parquet(p))
         self._df: DataFrame | None = None
-        self._index: dict[str, list[tuple[dt.datetime, dt.datetime]]] = {}
+        self._index: dict[str, tuple[list[dt.datetime], list[dt.datetime]]] = {}
         self._loaded_at: dt.datetime | None = None
         self.refresh_count = 0
         self.refresh()  # InitializeAsync analog — load eagerly
@@ -107,13 +108,19 @@ class RefreshingScheduleProvider:
                 idx.setdefault(str(key), []).append((open_t, close_t))
         for v in idx.values():
             v.sort()
-        self._index = idx
         # the gate's time-chunk width: the longest session, so the join
         # needs no width probe per micro-batch
         self._longest_s = max(
             ((c - o).total_seconds() for v in idx.values() for o, c in v),
             default=1.0,
         )
+        # per key: the session opens in order, and beside each the
+        # latest close among the sessions opened so far — sessions may
+        # overlap, so the one opened last before t need not contain it
+        self._index = {
+            k: ([o for o, _ in v], list(accumulate((c for _, c in v), max)))
+            for k, v in idx.items()
+        }
         self._loaded_at = self._now()
         self.refresh_count += 1
 
@@ -168,7 +175,8 @@ class RefreshingScheduleProvider:
     def is_in_session(self, key_parts: Iterable[str], utc_ts: dt.datetime) -> bool:
         """Driver-side point check over the interval index
         :meth:`refresh` collected — binary search per the reference
-        (:40-59; open inclusive, close exclusive)."""
+        (:40-59; open inclusive, close exclusive): True when some
+        session of the key contains ``utc_ts``, as in :meth:`gate`."""
         parts = [str(p) for p in key_parts]
         if len(parts) != 1:
             # the index is keyed by the provider's single schedule-key
@@ -181,11 +189,6 @@ class RefreshingScheduleProvider:
                 f"{parts!r}"
             )
         key = parts[0]
-        intervals = self._index.get(key)
-        if not intervals:
-            return False
-        i = bisect_right(intervals, (utc_ts, dt.datetime.max)) - 1
-        if i < 0:
-            return False
-        open_t, close_t = intervals[i]
-        return open_t <= utc_ts < close_t
+        opens, reach = self._index.get(key, ([], []))
+        i = bisect_right(opens, utc_ts) - 1
+        return i >= 0 and utc_ts < reach[i]

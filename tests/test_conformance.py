@@ -346,3 +346,68 @@ def test_no_bool_option_left_at_its_default():
         "the value a constant and delete the branch; parameters the body "
         "never reads — delete them:\n" + "\n".join(never_set)
     )
+
+
+def test_localcheckpoint_only_inside_session_cut():
+    """Lineage-cut guard: ``session.cut`` is the package's one lineage
+    cut, so ``localCheckpoint`` may appear in ``ksql_linq_spark/``
+    nowhere but in its body — a hand-rolled cut elsewhere retells the
+    cost story in its own comment and escapes the per-site table in
+    SCALING.md."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    session_py = root / "ksql_linq_spark" / "session.py"
+    (cut_def,) = [
+        n for n in ast.parse(session_py.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "cut"
+    ]
+    allowed = {(session_py, ln) for ln in range(cut_def.lineno, cut_def.end_lineno + 1)}
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted((root / "ksql_linq_spark").rglob("*"))
+        if p.is_file() and p.suffix in (".py", ".md")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "localCheckpoint" in line and (p, i) not in allowed
+    ]
+    assert not hits, "localCheckpoint outside session.cut:\n" + "\n".join(hits)
+
+
+def test_no_unused_import():
+    """Dead-import guard: every name an ``import`` in ``ksql_linq_spark/``
+    binds must be used in its module.  Exempt: ``__init__`` re-exports,
+    ``if TYPE_CHECKING:`` blocks, and an import marked ``noqa: F401``
+    (the capability probe in ``stateful.tws_available``, imported only
+    to see whether it can be)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    unused = []
+    for path in sorted((root / "ksql_linq_spark").rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        text = path.read_text()
+        lines = text.splitlines()
+        tree = ast.parse(text)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        exempt = {
+            id(m)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.If) and "TYPE_CHECKING" in ast.unparse(n.test)
+            for m in ast.walk(n)
+        }
+        for n in ast.walk(tree):
+            if (
+                not isinstance(n, (ast.Import, ast.ImportFrom))
+                or id(n) in exempt
+                or getattr(n, "module", None) == "__future__"
+                or "noqa: F401" in lines[n.lineno - 1]
+            ):
+                continue
+            for a in n.names:
+                name = (a.asname or a.name).split(".")[0]
+                if name not in used:
+                    unused.append(f"{path.relative_to(root)}:{n.lineno} {name}")
+    assert not unused, "unused imports:\n" + "\n".join(unused)

@@ -519,13 +519,13 @@ def test_session_funnel_does_not_convert_across_sessions(spark):
 
 
 def test_release_lineage_cuts_unpersists_checkpoint_blocks(spark):
-    """The lazy-localCheckpoint lineage cuts leave persisted RDD blocks
-    behind (SCALING.md storage-lifetime caveat); release_lineage_cuts is
-    the long-lived-session reclamation hook."""
-    from ksql_linq_spark.session import release_lineage_cuts
+    """The lineage cuts leave persisted RDD blocks behind (SCALING.md
+    storage-lifetime caveat); release_lineage_cuts is the long-lived-
+    session reclamation hook."""
+    from ksql_linq_spark.session import cut, release_lineage_cuts
 
     release_lineage_cuts(spark)  # start from a clean slate
-    df = spark.range(1000).localCheckpoint(eager=False)
+    df = cut(spark.range(1000))
     assert df.count() == 1000  # materializes + persists the blocks
 
     def persisted() -> int:

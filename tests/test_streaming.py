@@ -1903,6 +1903,37 @@ def test_is_in_session_composite_key_raises(spark, tmp_path):
         prov.is_in_session(["NYSE", "US"], dt.datetime(2024, 1, 1, 10, 0))
 
 
+def test_is_in_session_overlapping_sessions(spark, tmp_path):
+    """Sessions of one key may overlap: with 09:00-17:00 and 10:00-11:00
+    the instant 12:00 lies in the long session although the session
+    opened last before it has closed.  The point check must agree with
+    the gate's join, which keeps a 12:00 row."""
+    import datetime as dt
+
+    from ksql_linq_spark.streaming.schedule import RefreshingScheduleProvider
+
+    def at(h, m=0):
+        return dt.datetime(2024, 1, 1, h, m)
+
+    sched_dir = str(tmp_path / "sched")
+    spark.createDataFrame(
+        [("NYSE", at(9), at(17)), ("NYSE", at(10), at(11))],
+        "market_key string, open_time timestamp, close_time timestamp",
+    ).write.mode("overwrite").parquet(sched_dir)
+    prov = RefreshingScheduleProvider(spark, sched_dir, now_fn=lambda: at(12))
+    assert prov.is_in_session(["NYSE"], at(12))
+    assert prov.is_in_session(["NYSE"], at(10, 30))
+    assert not prov.is_in_session(["NYSE"], at(8, 59))
+    assert not prov.is_in_session(["NYSE"], at(17))
+    assert not prov.is_in_session(["LSE"], at(12))
+    rows = spark.createDataFrame(
+        [("NYSE", at(12), 1), ("NYSE", at(17, 30), 2)],
+        "market string, ts timestamp, event_id int",
+    )
+    kept = [r.event_id for r in prov.gate(rows, "market", "ts").collect()]
+    assert kept == [1]
+
+
 def test_rocksdb_provider_always_pairs_changelog_checkpointing(spark):
     """r9 ladder (SCALING.md round-9): snapshot-default RocksDB is NOT
     sustained even at 1k keys; the engine must never select the provider

@@ -403,7 +403,7 @@ class Harness:
             # the full Kx plan to execute: every replica-local query
             # must yield exactly K * base rows.  release_lineage_cuts
             # must wait until BOTH actions ran: releasing between them
-            # drops the lazy localCheckpoint blocks the second action
+            # drops the session.cut blocks the second action
             # still references (the loud CHECKPOINT_RDD_BLOCK_ID_NOT_
             # FOUND failure pinned in tests/test_plans.py).
             n_full = sdf.count()

@@ -7,6 +7,8 @@ methodology (noop sink) but SPLIT into phases:
 - plan_s:    analysis + optimization + physical planning (forced via
              queryExecution().executedPlan() before any job runs)
 - exec_s:    the noop-sink write (actual job execution)
+- eager_jobs: Spark jobs launched while the query is built and planned
+             (a lineage cut runs the shuffle stages below it at build)
 - jobs:      Spark jobs launched during exec (status tracker delta)
 - stages:    stages launched during exec
 
@@ -64,6 +66,7 @@ def main() -> None:
     for name, fn in list(qs.items()) * 2:  # pass 2 overwrites: warm numbers
         spark.sparkContext.setJobDescription(f"profile:{name}")
         try:
+            jobs_at_start = set(tracker.getJobIdsForGroup(None))
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -85,6 +88,7 @@ def main() -> None:
                 "plan_s": round(t2 - t1, 3),
                 "exec_s": round(t3 - t2, 3),
                 "total_s": round(t3 - t0, 3),
+                "eager_jobs": len(set(jobs_before) - jobs_at_start),
                 "jobs": len(new_jobs),
                 "stages": n_stages,
             }
@@ -99,11 +103,11 @@ def main() -> None:
         key=lambda kv: -kv[1]["total_s"],
     )
     print(f"{'query':42s} {'total':>7s} {'build':>7s} {'plan':>7s} "
-          f"{'exec':>7s} {'jobs':>4s} {'stg':>4s}")
+          f"{'exec':>7s} {'eager':>5s} {'jobs':>4s} {'stg':>4s}")
     for name, r in ranked:
         print(f"{name:42s} {r['total_s']:7.3f} {r['build_s']:7.3f} "
-              f"{r['plan_s']:7.3f} {r['exec_s']:7.3f} {r['jobs']:4d} "
-              f"{r['stages']:4d}")
+              f"{r['plan_s']:7.3f} {r['exec_s']:7.3f} {r['eager_jobs']:5d} "
+              f"{r['jobs']:4d} {r['stages']:4d}")
     for name, r in rows.items():
         if "err" in r:
             print(f"ERR {name}: {r['err']}")
